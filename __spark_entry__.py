@@ -601,8 +601,7 @@ def q_ivf_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     qvec = _emb_vec(sf_dir, 3)
     out = ivf_topk(emb.filter(F.col("vec_id") != 3), "embedding",
-                   "vec_id", qvec, k=5, nprobe=2, n_cells=8,
-                   collect_centroids=True)
+                   "vec_id", qvec, k=5, nprobe=2, n_cells=8)
     return out.select("vec_id", "cell",
                       F.round("score", 4).alias("score"))
 
@@ -879,8 +878,7 @@ def q_srp_neardup(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = srp_neardup_pairs(emb, "embedding", "vec_id", threshold=0.3,
-                              n_planes=4, dim=64, max_bucket_size=200,
-                              arrow_pairs=True)
+                              n_planes=4, dim=64, max_bucket_size=200)
     return pairs.select("id_a", "id_b", F.round("score", 4).alias("score"))
 
 
@@ -954,15 +952,15 @@ def q_extract_pdf(spark, sf_dir):
     mixed = _local_df(
         spark, page_rows + pdf_rows,
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    # materialize the mixed input once: the 3-branch router scans its
-    # input once per branch, re-running the distributed page GENERATOR
-    # (pages_df mapInPandas) each time — localCheckpoint pins the ~38
-    # tiny rows so generation happens once per invocation (computed
-    # from scratch every run; nothing persists across runs). The
-    # repartition folds into the same checkpoint job and halves the
-    # partition count of the union (32+32 slices, mostly empty, cost
-    # ~190 near-empty Python-stage task launches across the 3 branch
-    # scans — measured 1.6s → 1.1s warm at local[32])
+    # materialize the mixed input once: the router scans its input once
+    # per Python stage (the OCR stage and the combined DOM/PDF stage),
+    # re-running the distributed page GENERATOR (pages_df mapInPandas)
+    # each time — localCheckpoint pins the ~38 tiny rows so generation
+    # happens once per invocation (computed from scratch every run;
+    # nothing persists across runs). The repartition folds into the
+    # same checkpoint job and halves the partition count of the union
+    # (32+32 slices, mostly empty, each a near-empty Python-stage task
+    # launch in every stage that scans it)
     mixed = mixed.repartition(
         spark.sparkContext.defaultParallelism).localCheckpoint(eager=True)
     res = extract_pages(mixed, _protos_bc(spark), salt_partitions=8)

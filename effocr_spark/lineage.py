@@ -82,7 +82,7 @@ def run_extraction(
 ) -> None:
     """Chunked, checkpointed extraction run.
 
-    Normal operation (fail_after_chunk=None) processes ALL remaining
+    Normal operation (fail_after_chunk=None) commits ALL remaining
     chunks in a SINGLE extraction pass — the Iceberg-snapshot shape:
     filter out committed chunks (the processed/ manifest's distinct
     chunk ids — a broadcast-anti-join-sized set), extract once, write
@@ -91,17 +91,18 @@ def run_extraction(
     production chunk counts (thousands) is the difference between one
     scan of the input and a scheduling-bound crawl.
 
-    `fail_after_chunk` switches to the sequential per-chunk loop so the
-    kill/resume tests can inject a crash at a chunk boundary — the
-    fault-injection harness, not the production path."""
+    `fail_after_chunk` commits the remaining chunks one at a time and
+    raises after that chunk, so the kill/resume tests can inject a
+    crash at a chunk boundary — the fault-injection harness, not the
+    production path."""
     results_path = f"{out_dir}/results"
     processed_path = f"{out_dir}/processed"
     metrics_path = f"{out_dir}/metrics"
 
     _check_manifest(spark, f"{out_dir}/manifest", n_chunks)
 
-    pages = pages.withColumn(
-        "_chunk", F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks)).cast("int"))
+    chunk_of = F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks)).cast("int")
+    pages = pages.withColumn("_chunk", chunk_of)
 
     done_chunks: set[int] = set()
     if _exists(processed_path):
@@ -110,103 +111,60 @@ def run_extraction(
             r["chunk_id"]
             for r in done.select("chunk_id").distinct().collect()
         }
+    remaining = sorted(set(range(n_chunks)) - done_chunks)
 
-    if fail_after_chunk is None:
-        remaining = sorted(set(range(n_chunks)) - done_chunks)
-        if not remaining:
-            return
+    def _commit(chunks: list[int]) -> None:
         t0 = time.time()
-        subset = pages.filter(F.col("_chunk").isin(remaining)) \
-                      .drop("_chunk")
-        result = extract_pages(subset, protos_bc, **extract_kwargs)
-        result = (result
-                  .withColumn("chunk_id",
-                              F.pmod(F.xxhash64(F.col("url")),
-                                     F.lit(n_chunks)).cast("int"))
+        subset = pages.filter(F.col("_chunk").isin(chunks)).drop("_chunk")
+        result = (extract_pages(subset, protos_bc, **extract_kwargs)
+                  .withColumn("chunk_id", chunk_of)
                   .withColumn("run_id", F.lit(run_id))
                   .withColumn("partition_id", F.spark_partition_id()))
-        # ONE persisted extraction pass feeds results, both metric
-        # tables, and lineage (same no-reread rationale as the loop)
+        # cache the pass: ONE extraction feeds the results write, the
+        # chunk metrics, the per-partition metrics, and the lineage
+        # append — no re-read of the results directory (which would
+        # cost O(everything written so far) per commit and double-count
+        # partial rows from a same-run_id crash)
         result = result.persist()
         result.write.mode("append").partitionBy("chunk_id") \
             .parquet(results_path)
-        stats = result.groupBy("chunk_id").agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("ok").cast("int")).alias("n_ok"),
-        ).collect()
+        stats = {r["chunk_id"]: (r["n_rows"], r["n_ok"] or 0)
+                 for r in result.groupBy("chunk_id").agg(
+                     F.count("*").alias("n_rows"),
+                     F.sum(F.col("ok").cast("int")).alias("n_ok"),
+                 ).collect()}
+        # per-PARTITION metrics (task-granular lineage: which executor
+        # partition produced what, skew visibility)
         result.groupBy("run_id", "chunk_id", "partition_id", "branch") \
             .agg(F.count("*").alias("n_rows"),
                  F.sum(F.col("ok").cast("long")).alias("n_ok")) \
             .write.mode("append").parquet(f"{out_dir}/partition_metrics")
-        # lineage commit AFTER results (crash between the two re-runs
-        # those chunks; read_results de-duplicates the re-appends)
+        # lineage commit AFTER results: a crash between the two writes
+        # re-runs those chunks on resume, appending identical rows that
+        # read_results de-duplicates
         result.select("url", "chunk_id").distinct() \
             .withColumn("run_id", F.lit(run_id)) \
             .write.mode("append").parquet(processed_path)
         result.unpersist()
+
         wall_ms = int((time.time() - t0) * 1000)
-        by_chunk = {r["chunk_id"]: r for r in stats}
+        rows = []
+        for c in chunks:
+            n_rows, n_ok = stats.get(c, (0, 0))
+            rows.append((run_id, c, n_rows, n_ok, n_rows - n_ok, wall_ms))
         spark.createDataFrame(
-            [(run_id, c,
-              int(by_chunk[c]["n_rows"]) if c in by_chunk else 0,
-              int(by_chunk[c]["n_ok"] or 0) if c in by_chunk else 0,
-              (int(by_chunk[c]["n_rows"])
-               - int(by_chunk[c]["n_ok"] or 0)) if c in by_chunk else 0,
-              wall_ms) for c in remaining],
+            rows,
             "run_id string, chunk_id int, n_rows long, n_ok long, "
             "n_err long, wall_ms long",
         ).write.mode("append").parquet(metrics_path)
+
+    if fail_after_chunk is None:
+        if remaining:
+            _commit(remaining)
         return
-
-    for chunk in range(n_chunks):
-        if chunk in done_chunks:
-            continue
-        t0 = time.time()
-        subset = pages.filter(F.col("_chunk") == chunk).drop("_chunk")
-        result = extract_pages(subset, protos_bc, **extract_kwargs)
-        result = result.withColumn("chunk_id", F.lit(chunk)) \
-                       .withColumn("run_id", F.lit(run_id)) \
-                       .withColumn("partition_id", F.spark_partition_id())
-        # cache the chunk: ONE extraction pass feeds the results write,
-        # the chunk metrics, the per-partition metrics, and the lineage
-        # append — no re-read of the results directory (which would cost
-        # O(everything written so far) per chunk and double-count partial
-        # rows from a same-run_id crash)
-        result = result.persist()
-        result.write.mode("append").partitionBy("chunk_id") \
-            .parquet(results_path)
-
-        stats = result.agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.col("ok").cast("int")).alias("n_ok"),
-        ).collect()[0]
-
-        # per-PARTITION metrics within the chunk (task-granular lineage:
-        # which executor partition produced what, skew visibility)
-        result.groupBy("run_id", "chunk_id", "partition_id", "branch") \
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum(F.col("ok").cast("long")).alias("n_ok")) \
-            .write.mode("append").parquet(f"{out_dir}/partition_metrics")
-
-        # lineage commit AFTER results: a crash between the two writes
-        # re-runs the chunk on resume, appending identical rows that
-        # read_results de-duplicates
-        result.select("url").distinct() \
-            .withColumn("chunk_id", F.lit(chunk)) \
-            .withColumn("run_id", F.lit(run_id)) \
-            .write.mode("append").parquet(processed_path)
-        result.unpersist()
-
-        wall_ms = int((time.time() - t0) * 1000)
-        spark.createDataFrame(
-            [(run_id, chunk, int(stats["n_rows"]),
-              int(stats["n_ok"] or 0),
-              int(stats["n_rows"]) - int(stats["n_ok"] or 0), wall_ms)],
-            "run_id string, chunk_id int, n_rows long, n_ok long, "
-            "n_err long, wall_ms long",
-        ).write.mode("append").parquet(metrics_path)
-
-        if fail_after_chunk is not None and chunk >= fail_after_chunk:
+    for chunk in remaining:
+        _commit([chunk])
+        if chunk >= fail_after_chunk:
             raise RuntimeError(f"injected failure after chunk {chunk}")
 
 

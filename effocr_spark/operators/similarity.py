@@ -106,7 +106,7 @@ def centroid_knn_join(df: DataFrame, vec_col: str, id_col: str,
 def _srp_bucket_col(df: DataFrame, vec_col: str, n_planes: int,
                     seed: int, dim: int | None) -> F.Column:
     """The bit-packed sign-projection bucket expression (shared by
-    srp_buckets and the Arrow pair path so both derive the identical
+    srp_buckets and srp_neardup_pairs so both derive the identical
     bucket from the identical seeded hyperplanes)."""
     rng = np.random.RandomState(seed)
     if dim is None:
@@ -139,124 +139,55 @@ def srp_buckets(df: DataFrame, vec_col: str, id_col: str,
 def srp_neardup_pairs(df: DataFrame, vec_col: str, id_col: str,
                       threshold: float = 0.95, n_planes: int = 8,
                       seed: int = 7, dim: int | None = None,
-                      max_bucket_size: int | None = None,
-                      materialize: bool = False,
-                      arrow_pairs: bool = False) -> DataFrame:
-    """ANN near-dup pairs at scale: SRP-LSH bucket join for candidate
+                      max_bucket_size: int | None = None) -> DataFrame:
+    """ANN near-dup pairs at scale: SRP-LSH buckets for candidate
     generation (sub-quadratic — only same-bucket ids pair up), exact
     cosine verify on the candidates. Recall vs the brute-force baseline
     is measured in tests; more planes → fewer candidates/lower recall,
     fewer → the reverse.
 
+    ONE grouped Arrow stage: the bucket is tagged inline on the (id,
+    vec) row, and each bucket's members are handed to a vectorized
+    NumPy kernel that generates the i<j pairs and scores them in bulk.
+    Scores are BIT-IDENTICAL to the JVM cosine expression (pinned by
+    test against embedding_neardup_pairs): the elementwise product and
+    a cumsum along the vector axis reproduce the zip_with + left-fold
+    accumulation order exactly, and np.sqrt/np.divide are the same
+    IEEE-754 ops. Plan: one exchange on `bucket`, and the quadratic
+    per-pair scoring runs at NumPy speed instead of one interpreted
+    lambda tree per candidate (guide §4: the boundary is crossed once
+    per bucket, Arrow-batched, with only the needed columns). Rows
+    whose bucket is NULL (a NULL vector or element) never pair; pairs
+    involving a zero-norm vector, and NaN scores, are dropped.
+
     `max_bucket_size` quarantines degenerate hot buckets (near-zero /
     boilerplate vectors all hash to the same signs — guaranteed at web
-    scale): a bucket of B members emits B² join rows on ONE shuffle key,
-    so buckets above the cap are dropped before the self-join. Count the
-    quarantined buckets with `oversize_buckets` and handle them by exact
-    fingerprint dedup instead.
-
-    `materialize=True` localCheckpoints the tagged (id, vec, norm,
-    bucket) table before the self-join, so the projection/bucket pass
-    runs ONCE instead of once per join side (the guide-§8 'fingerprint
-    once, then decide' shape; dedup pipelines at scale write this table
-    out). Off by default to keep the operator lazy.
-
-    `arrow_pairs=True` replaces the bucket SELF-JOIN + per-pair
-    interpreted higher-order dot with ONE grouped Arrow stage: each
-    bucket's (id, vec) members are handed to a vectorized NumPy kernel
-    that generates the i<j pairs and scores them in bulk. Scores are
-    BIT-IDENTICAL to the JVM expression (pinned by test): the elementwise
-    product and a cumsum along the vector axis reproduce the zip_with +
-    left-fold accumulation order exactly, np.sqrt/np.divide are the same
-    IEEE-754 ops, and Spark's divide-by-zero→NULL row drop maps to the
-    isfinite mask. Plan: one exchange on `bucket` (shared by the cap
-    window and the grouped stage) instead of a two-sided self-join —
-    shuffle bytes fall from 2× to 1× of the tagged table, and the
-    quadratic per-pair scoring runs at NumPy speed instead of one
-    interpreted lambda tree per candidate (guide §4: the boundary is
-    crossed once per bucket, Arrow-batched, with only the needed
-    columns)."""
-    if arrow_pairs:
-        return _srp_neardup_pairs_arrow(df, vec_col, id_col, threshold,
-                                        n_planes, seed, dim,
-                                        max_bucket_size)
-    buckets = srp_buckets(df, vec_col, id_col, n_planes=n_planes,
-                          seed=seed, dim=dim)
-    if max_bucket_size is not None:
-        # bucket-size cap as a count() window over the LIGHT (id,
-        # bucket) table rather than groupBy + join back: the join
-        # spelling re-derived the bucket projections once for the size
-        # aggregate and once for the join side — the window evaluates
-        # them once, and its bucket partitioning is the same key the
-        # self-join below shuffles on (guide §2.4: share the exchange)
-        from pyspark.sql import Window
-
-        buckets = (buckets
-                   .withColumn("_bsz", F.count("*").over(
-                       Window.partitionBy("bucket")))
-                   .filter(F.col("_bsz") <= max_bucket_size)
-                   .drop("_bsz"))
-    # hoist the vector norm to the PER-VECTOR side: the candidate set
-    # is quadratic in bucket size, so computing norm(va)/norm(vb)
-    # inside the pair expression evaluated the 64-element aggregate
-    # THREE times per candidate pair; precomputed norms cut pair work
-    # to one dot product. Bit-identical score: same per-element math
-    # and accumulation order, same division-by-product shape.
-    tagged = (df.select(F.col(id_col), F.col(vec_col))
-              .join(buckets, id_col)
-              .withColumn("_nrm", norm(F.col(vec_col))))
-    if materialize:
-        tagged = tagged.localCheckpoint(eager=True)
-    a = tagged.select(F.col("bucket"), F.col(id_col).alias("id_a"),
-                      F.col(vec_col).alias("va"), F.col("_nrm").alias("na"))
-    b = tagged.select(F.col("bucket"), F.col(id_col).alias("id_b"),
-                      F.col(vec_col).alias("vb"), F.col("_nrm").alias("nb"))
-    return (
-        a.join(b, ["bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("score", dot(F.col("va"), F.col("vb"))
-                    / (F.col("na") * F.col("nb")))
-        .filter(F.col("score") >= threshold)
-        .select("id_a", "id_b", "score")
-    )
-
-
-def _srp_neardup_pairs_arrow(df: DataFrame, vec_col: str, id_col: str,
-                             threshold: float, n_planes: int, seed: int,
-                             dim: int | None,
-                             max_bucket_size: int | None) -> DataFrame:
-    """Grouped-Arrow body of srp_neardup_pairs(arrow_pairs=True): bucket
-    tag inline on the full row (no join back), hot-bucket cap as the
-    same count() window, then applyInPandas per bucket. Pair scores are
-    bit-identical to the JVM higher-order path — see the caller's
-    docstring; tests/test_similarity_ops.py pins equality."""
+    scale): a bucket of B members holds B²/2 candidate pairs, so a
+    bucket above the cap emits nothing. Count the quarantined buckets
+    with `oversize_buckets` and handle them by exact fingerprint dedup
+    instead."""
     import pandas as pd
 
     id_type = df.schema[id_col].dataType.simpleString()
     bucket = _srp_bucket_col(df, vec_col, n_planes, seed, dim)
-    tagged = df.select(F.col(id_col), F.col(vec_col),
-                       bucket.alias("bucket"))
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        tagged = (tagged
-                  .withColumn("_bsz", F.count("*").over(
-                      Window.partitionBy("bucket")))
-                  .filter(F.col("_bsz") <= max_bucket_size)
-                  .drop("_bsz"))
+    tagged = df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
 
     # pair chunking bound: caps the (pairs × dim) product-matrix
     # temporary at ~8 MB regardless of bucket size, so an uncapped
     # degenerate bucket degrades to more chunks, never to an OOM
     chunk = 1 << 16
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        empty = pd.DataFrame({
-            "id_a": pd.Series([], dtype="int64"),
-            "id_b": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64")})
-        if n < 2:
+        none = pdf[id_col].to_numpy()[:0]
+        empty = pd.DataFrame({"id_a": none, "id_b": none,
+                              "score": np.empty(0, np.float64)})
+        # a NULL vector (or NULL element) has a NULL bucket: never pair
+        # it. Dropped here, not by a filter ahead of the groupBy, which
+        # Catalyst pushes below the projection — evaluating every
+        # hyperplane dot twice per row
+        if (pd.isna(key[0]) or n < 2
+                or (max_bucket_size is not None and n > max_bucket_size)):
             return empty
         raw_ids = pdf[id_col].to_numpy()
         order = np.argsort(raw_ids, kind="stable")  # ids are unique
@@ -274,11 +205,17 @@ def _srp_neardup_pairs_arrow(df: DataFrame, vec_col: str, id_col: str,
             ii, jj = iu[lo:lo + chunk], ju[lo:lo + chunk]
             prod = vs[ii] * vs[jj]
             dots = prod.cumsum(axis=1)[:, -1]
+            den = nr[ii] * nr[jj]
             with np.errstate(divide="ignore", invalid="ignore"):
-                score = dots / (nr[ii] * nr[jj])
-            # Spark double-divide-by-zero yields NULL (row dropped by
-            # the >= filter); non-finite here iff the divisor was 0
-            m = np.isfinite(score) & (score >= threshold)
+                score = dots / den
+            # a zero divisor is the one case the JVM expression cannot
+            # score (under spark.sql.ansi.enabled it raises
+            # DIVIDE_BY_ZERO): this path drops those pairs. Overflowed
+            # +inf scores are kept, as the JVM keeps them. NaN scores
+            # (a NaN component) fail the >= here, while Spark would keep
+            # them; the pandas → Arrow return could only carry them as
+            # NULL, so they are dropped
+            m = (den != 0) & (score >= threshold)
             if m.any():
                 outs.append(pd.DataFrame({
                     "id_a": ids[ii[m]], "id_b": ids[jj[m]],
@@ -416,8 +353,7 @@ def _pyfold_cosine(a, b) -> float:
 
 def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_vec,
              k: int = 5, nprobe: int = 2, n_cells: int = 8,
-             refine: int = 0, collect_centroids: bool = False
-             ) -> DataFrame:
+             refine: int = 0) -> DataFrame:
     """IVF ANN query: rank cells by query↔centroid cosine, search the
     top-nprobe cells EXACTLY. → (id, cell, score), the approximate
     top-k (recall < 1 by design when the true neighbor lives in an
@@ -427,71 +363,56 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_vec,
     is PARTITIONED BY cell, so the probe filter becomes partition
     pruning: the scan touches nprobe/n_cells of the files before any
     vector math — the same pruning hidden partitioning gives the
-    extraction branches. Here the candidate filter is a broadcast
-    semi-join on the probed cell ids (nprobe rows).
+    extraction branches (see ivf_materialize).
 
-    `collect_centroids=True` trades lazity for one table scan: the
-    n_cells centroid rows are collected ONCE (one TakeOrdered job) and
-    fed back as a literal local relation for both consumers — the
+    The n_cells centroid rows are collected ONCE (one TakeOrdered job)
+    and fed back as a literal local relation for both consumers: the
     probed-cell ranking (computed driver-side with bit-identical float
-    math, see _pyfold_cosine) and the broadcast assignment side. The
-    lazy plan evaluates the centroid subtree TWICE (the probed
-    TakeOrdered and the broadcast build each scan the full table);
-    this spelling scans it once. Falls back to the lazy plan on any
-    non-finite centroid score so NULL/NaN ordering semantics can never
-    diverge."""
+    math, see _pyfold_cosine), which becomes an isin filter, and the
+    broadcast assignment side. A lazy plan would evaluate the centroid
+    subtree twice (the probed TakeOrdered and the broadcast build each
+    scan the full table). On any non-finite centroid score the query
+    falls back to that lazy plan — probed cells as a broadcast
+    semi-join on the Spark-ranked centroids — so NULL/NaN ordering
+    follows Spark's semantics, never Python's."""
     q = _vec_lit(query_vec)
     cents = ivf_centroids(df, vec_col, id_col, n_cells, refine)
-    if collect_centroids:
-        rows = cents.collect()  # n_cells rows — bounded by construction
-        try:
-            ranked = sorted(
-                ((_pyfold_cosine(r["centroid"], query_vec), r["cell"])
-                 for r in rows), key=lambda t: (-t[0], t[1]))
-        except (ZeroDivisionError, ValueError, TypeError):
-            ranked = None
-        if ranked is not None and all(
-                s == s and abs(s) != float("inf") for s, _ in ranked):
-            import pandas as pd
+    rows = cents.collect()  # n_cells rows — bounded by construction
+    try:
+        ranked = sorted(
+            ((_pyfold_cosine(r["centroid"], query_vec), r["cell"])
+             for r in rows), key=lambda t: (-t[0], t[1]))
+    except (ZeroDivisionError, ValueError, TypeError):
+        ranked = None
+    if ranked is not None and all(
+            s == s and abs(s) != float("inf") for s, _ in ranked):
+        import pandas as pd
 
-            probed_cells = [c for _, c in ranked[:nprobe]]
-            cell_type = (cents.schema["cell"].dataType.simpleString()
-                         if rows else "bigint")
-            spark = df.sparkSession
-            cents_local = spark.createDataFrame(
-                pd.DataFrame({
-                    "cell": [r["cell"] for r in rows],
-                    "centroid": [[float(v) for v in r["centroid"]]
-                                 for r in rows]}),
-                schema=f"cell {cell_type}, centroid array<double>")
-            scored = (df.select(id_col, vec_col)
-                      .crossJoin(F.broadcast(cents_local))
-                      .withColumn("score",
-                                  cosine(F.col(vec_col),
-                                         F.col("centroid"))))
-            best = scored.groupBy(id_col).agg(
-                F.max(F.struct(
-                    F.col("score").alias("s"),
-                    (-F.col("cell")).alias("neg_cell"),
-                    F.col("cell").alias("cell"))).alias("m"),
-                F.first(vec_col).alias(vec_col))
-            cand = (best.select(F.col(id_col),
-                                F.col("m.cell").alias("cell"),
-                                F.col(vec_col))
-                    .filter(F.col("cell").isin(probed_cells)
-                            if probed_cells else F.lit(False)))
-            return (cand.select(F.col(id_col), F.col("cell"),
-                                cosine(F.col(vec_col), q).alias("score"))
-                    .orderBy(F.desc("score"), F.col(id_col)).limit(k))
-    probed = (cents.withColumn("qs", cosine(F.col("centroid"), q))
-              .orderBy(F.desc("qs"), "cell").limit(nprobe)
-              .select("cell"))
-    # assignment WITHOUT the join back to df: the argmax aggregate
+        probed_cells = [c for _, c in ranked[:nprobe]]
+        cell_type = (cents.schema["cell"].dataType.simpleString()
+                     if rows else "bigint")
+        cents = df.sparkSession.createDataFrame(
+            pd.DataFrame({
+                "cell": [r["cell"] for r in rows],
+                "centroid": [[float(v) for v in r["centroid"]]
+                             for r in rows]}),
+            schema=f"cell {cell_type}, centroid array<double>")
+
+        def probe(cand: DataFrame) -> DataFrame:
+            return cand.filter(F.col("cell").isin(probed_cells)
+                               if probed_cells else F.lit(False))
+    else:
+        probed = (cents.withColumn("qs", cosine(F.col("centroid"), q))
+                  .orderBy(F.desc("qs"), "cell").limit(nprobe)
+                  .select("cell"))
+
+        def probe(cand: DataFrame) -> DataFrame:
+            return cand.join(F.broadcast(probed), "cell")
+    # assignment WITHOUT a join back to df: the argmax aggregate
     # carries the vector through (first() over the crossJoin replicas
-    # of the same row — deterministic by construction), so the old
-    # `df ⋈ assign` id-equi-join (a second scan of df + an exchange
-    # of both sides on id) disappears from the plan; same scores,
-    # same tie-breaks, one exchange total before the top-k
+    # of the same row — deterministic by construction), so there is no
+    # `df ⋈ assign` id-equi-join (a second scan of df + an exchange of
+    # both sides on id); one exchange total before the top-k
     scored = (df.select(id_col, vec_col)
               .crossJoin(F.broadcast(cents))
               .withColumn("score",
@@ -502,9 +423,8 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_vec,
             (-F.col("cell")).alias("neg_cell"),
             F.col("cell").alias("cell"))).alias("m"),
         F.first(vec_col).alias(vec_col))
-    cand = (best.select(F.col(id_col), F.col("m.cell").alias("cell"),
-                        F.col(vec_col))
-            .join(F.broadcast(probed), "cell"))
+    cand = probe(best.select(F.col(id_col), F.col("m.cell").alias("cell"),
+                             F.col(vec_col)))
     return (cand.select(F.col(id_col), F.col("cell"),
                         cosine(F.col(vec_col), q).alias("score"))
             .orderBy(F.desc("score"), F.col(id_col)).limit(k))

@@ -1,12 +1,12 @@
-"""End-to-end extraction pipeline: route → OCR | DOM → fuse.
+"""End-to-end extraction pipeline: route → OCR | DOM/PDF → fuse.
 
 Dataflow (SURVEY.md §3.1 "Spark lifecycle"):
 
     pages ──sniff(html magic, JVM-side)──┬─ image pages ─ salted
                                          │   repartition ─ fused OCR
                                          │   mapInPandas stage
-                                         └─ born-digital ─ strip_html
-                                             pandas UDF
+                                         └─ born-digital ─ dom_pdf_branch
+                                             mapInPandas stage
     branches are DISJOINT by construction (every row routes exactly one
     way), so the per-url fusion is a unionByName — same result as the
     full-outer-join+coalesce spelling but with zero shuffle.
@@ -79,7 +79,10 @@ def extract_pages(
     Branches are disjoint by construction, so fusion stays a
     unionByName (zero shuffles outside the salted OCR repartition)."""
     image_rows = pages.filter(is_image_page(F.col("html")))
-    other_rows = pages.filter(~is_image_page(F.col("html")))
+    # is_image_page(NULL) is NULL, which both filters would drop: a NULL
+    # html row goes to the non-image stage, which quarantines it
+    other_rows = pages.filter(
+        ~F.coalesce(is_image_page(F.col("html")), F.lit(False)))
 
     if salt_partitions:
         # defuse host skew: image-heavy hosts cluster in url space, and
@@ -94,8 +97,7 @@ def extract_pages(
                      word_silver=word_silver, freq_dict=freq_dict,
                      emit_char_text=emit_char_text)
     # both non-image branches run in ONE Python stage (per-row %PDF-
-    # routing inside the UDF — semantics pinned equal to the split
-    # dom_branch/pdf_branch): one scan of the non-image majority
+    # routing inside the UDF): one scan of the non-image majority
     # instead of two, and no near-empty task fleet for whichever
     # branch is sparse in the corpus slice
     other = dom_pdf_branch(other_rows, pdf_password=pdf_password)

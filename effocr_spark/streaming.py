@@ -1,12 +1,14 @@
-"""Structured Streaming skin over the extraction operators.
+"""Structured Streaming skin over the extraction pipeline.
 
 The reference is batch-only (SURVEY.md §2.9): its thread/queue pipeline
 maps to Spark's task scheduler, and the north rule's resumability maps
 to either the chunked lineage runner (lineage.py) or — equivalently —
 this Structured Streaming skin: a file-source stream over the pages
-table, the SAME extraction operators (mapInPandas is streaming-capable),
-and a checkpointed sink. Trigger.AvailableNow drains everything present
-and stops, giving exactly-once incremental batch runs; new page files
+table, routed through the SAME `pipeline.extract_pages` the batch and
+lineage runners use (its filters, stateless salted repartition,
+mapInPandas stages and unionByName are all streaming-legal), and a
+checkpointed sink. Trigger.AvailableNow drains everything present and
+stops, giving exactly-once incremental batch runs; new page files
 appearing between runs are picked up automatically from the checkpoint.
 
 Also provides the canonical watermarked event-time window aggregate for
@@ -17,8 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators.extract import (dom_branch, is_image_page,
-                                is_pdf_page, ocr_branch, pdf_branch)
+from .pipeline import extract_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -36,27 +37,25 @@ def stream_extract(
     word_silver: float | None = None,
     embedded_images: bool = False,
 ):
-    """Incremental extraction: parquet file stream → three-way routed
-    extract (same branches as the batch pipeline: PNG/JPEG→ocr,
-    %PDF→pdf, else→dom) → parquet sink with checkpoint. Returns the
-    started query (caller awaits termination; AvailableNow stops when
-    caught up).
+    """Incremental extraction: parquet file stream → extract_pages (the
+    batch router: PNG/JPEG→ocr, %PDF→pdf, else→dom) → parquet sink with
+    checkpoint. Returns the started query (caller awaits termination;
+    AvailableNow stops when caught up).
 
-    Parity vs the batch pipeline (extract_pages): the same three-way
-    routing and branch operators, plus the same optional salted
-    repartition before the OCR stage (a stateless repartition is legal
-    in streaming — it only reshuffles within the micro-batch).
-    embedded_images=True runs the FULL batch pipeline per micro-batch
-    via foreachBatch: the fusion's per-url groupBy+join only ever
-    touches rows DERIVED from that batch's own pages, so batch-local
-    execution is semantically exact (no cross-batch state, no
-    watermark needed); each micro-batch lands in its own
-    batch_id=<n> partition with overwrite, making retries idempotent
-    (foreachBatch is at-least-once; the per-batch overwrite restores
-    exactly-once at the sink). The serialized-encoder artifact and the
-    word-silver stream are row-local (per-executor singleton load +
-    in-UDF merge), so batch and streaming OCR stages stay
-    configuration-identical."""
+    Parity vs the batch pipeline: the file-sink path calls
+    extract_pages itself, with the same optional salted repartition
+    before the OCR stage (a stateless repartition is legal in
+    streaming — it only reshuffles within the micro-batch).
+    embedded_images=True runs the same call per micro-batch via
+    foreachBatch: the fusion's per-url groupBy+join only ever touches
+    rows DERIVED from that batch's own pages, so batch-local execution
+    is semantically exact (no cross-batch state, no watermark needed);
+    each micro-batch lands in its own batch_id=<n> partition with
+    overwrite, making retries idempotent (foreachBatch is
+    at-least-once; the per-batch overwrite restores exactly-once at
+    the sink). The serialized-encoder artifact and the word-silver
+    stream are row-local (per-executor singleton load + in-UDF merge),
+    so batch and streaming OCR stages stay configuration-identical."""
     reader = (
         spark.readStream.schema(PAGES_DDL).format("parquet")
     )
@@ -65,8 +64,6 @@ def stream_extract(
     pages = reader.load(pages_dir)
 
     if embedded_images:
-        from .pipeline import extract_pages
-
         def _process(batch_df, batch_id: int) -> None:
             out = extract_pages(
                 batch_df, protos_bc, salt_partitions=salt_partitions,
@@ -82,21 +79,9 @@ def stream_extract(
             .start()
         )
 
-    image_rows = pages.filter(is_image_page(F.col("html")))
-    if salt_partitions:
-        image_rows = image_rows.repartition(
-            salt_partitions, F.xxhash64(F.col("url"), F.lit(0x5A17)))
-    ocr = ocr_branch(image_rows, protos_bc,
-                     encoder_artifact=encoder_artifact,
-                     word_silver=word_silver) \
-        .withColumn("branch", F.lit("ocr"))
-    dom = dom_branch(pages.filter(~is_image_page(F.col("html"))
-                                  & ~is_pdf_page(F.col("html")))) \
-        .withColumn("branch", F.lit("dom"))
-    pdfs = pdf_branch(pages.filter(is_pdf_page(F.col("html")))) \
-        .withColumn("branch", F.lit("pdf"))
-    result = ocr.unionByName(dom).unionByName(pdfs)
-
+    result = extract_pages(pages, protos_bc, salt_partitions=salt_partitions,
+                           encoder_artifact=encoder_artifact,
+                           word_silver=word_silver)
     return (
         result.writeStream.format("parquet")
         .option("path", out_dir)

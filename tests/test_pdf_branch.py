@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from effocr_spark.functions.pdftext import extract_pdf_text, is_pdf
-from effocr_spark.operators.extract import is_pdf_page, pdf_branch
+from effocr_spark.operators.extract import is_pdf_page
 from effocr_spark.pipeline import extract_pages
 from effocr_spark.synth.pdfgen import make_pdf
 
@@ -42,7 +42,9 @@ def test_pdf_quarantine_paths():
 
 
 def test_pipeline_three_way_routing(spark, protos_bc):
-    """PNG → ocr, %PDF → pdf, else → dom; per-branch ok/error columns."""
+    """PNG → ocr, %PDF → pdf, else → dom; per-branch ok/error columns.
+    A NULL html cell is neither an image nor a PDF: it must come out as
+    a quarantined dom row, not vanish."""
     from effocr_spark.synth.pages import pages_df
 
     pages, _ = pages_df(spark, 30, seed=42)
@@ -55,15 +57,21 @@ def test_pipeline_three_way_routing(spark, protos_bc):
         # the other standard text-stream filters decode for real
         ("pdf://bad/1", None, b"%PDF-1.4\n<< /Filter /JBIG2Decode >>\n"
                               b"stream\nxx\nendstream", None, "en"),
+        ("null://html", None, None, None, "en"),
     ]
     extra = spark.createDataFrame(
-        [(u, t, bytearray(h), x, l) for u, t, h, x, l in pdf_rows],
+        [(u, t, bytearray(h) if h is not None else None, x, l)
+         for u, t, h, x, l in pdf_rows],
         "url string, warc_ts timestamp, html binary, text string, lang string")
     all_pages = pages.select("url", "warc_ts", "html", "text", "lang") \
         .unionByName(extra)
     res = {r["url"]: r for r in
            extract_pages(all_pages, protos_bc).collect()}
-    assert len(res) == 33
+    assert len(res) == 34
+    null = res["null://html"]
+    assert null["branch"] == "dom" and null["ok"] is False
+    assert null["extracted_text"] is None
+    assert null["error"] == "dom: html is NULL"
     assert res["pdf://good/1"]["branch"] == "pdf"
     assert res["pdf://good/1"]["ok"]
     assert res["pdf://good/1"]["extracted_text"] == "Alpha beta gamma\nDelta"
@@ -350,16 +358,16 @@ def test_aes_known_answer_and_encrypted_pdf():
     assert extract_pdf_text(blob) == "AES locked page\nsecond line"
 
 
-def test_dom_pdf_branch_matches_split_branches(spark, protos_bc):
-    """The combined non-image stage must emit EXACTLY the rows of the
-    separate dom_branch + pdf_branch (urls, texts, n_chars, ok, error)
-    with the right branch labels — healthy HTML, gzip HTML, healthy
-    PDF, corrupt PDF."""
+def test_dom_pdf_branch_matches_direct_extractors(spark):
+    """The combined non-image stage must emit, per row, exactly what
+    strip_html / extract_pdf_text return when called directly (urls,
+    texts, n_chars, ok, error) with the right branch labels — healthy
+    HTML, gzip HTML, healthy PDF, corrupt PDF."""
     import zlib
 
-    from effocr_spark.operators.extract import (dom_branch, dom_pdf_branch,
-                                                pdf_branch)
-    from effocr_spark.synth.pdfgen import make_encrypted_pdf, make_pdf
+    from effocr_spark.functions.domstrip import strip_html
+    from effocr_spark.operators.extract import dom_pdf_branch
+    from effocr_spark.synth.pdfgen import make_encrypted_pdf
 
     html = b"<html><body><p>plain paragraph text here</p></body></html>"
     gz = zlib.compressobj(wbits=31)
@@ -369,23 +377,28 @@ def test_dom_pdf_branch_matches_split_branches(spark, protos_bc):
     pdf_bad = (make_encrypted_pdf([["x"]], r=4)
                .replace(b"/V 4 /R 4", b"/V 5 /R 6")
                .replace(b"/CFM /AESV2", b"/CFM /AESV3"))
-    rows = [("u://dom", bytearray(html)), ("u://gz", bytearray(gzipped)),
-            ("u://pdf", bytearray(pdf_ok)), ("u://bad", bytearray(pdf_bad))]
-    df = spark.createDataFrame(rows, "url string, html binary")
+    rows = [("u://dom", html), ("u://gz", gzipped),
+            ("u://pdf", pdf_ok), ("u://bad", pdf_bad)]
+    df = spark.createDataFrame([(u, bytearray(b)) for u, b in rows],
+                               "url string, html binary")
 
-    combined = {r["url"]: tuple(r) for r in
-                dom_pdf_branch(df).collect()}
-    from pyspark.sql import functions as F
-    split = {}
-    for r in dom_branch(df.filter(~(F.substring("html", 1, 5)
-                                    == F.lit(b"%PDF-")))).collect():
-        split[r["url"]] = tuple(r) + ("dom",)
-    for r in pdf_branch(df.filter(F.substring("html", 1, 5)
-                                  == F.lit(b"%PDF-"))).collect():
-        split[r["url"]] = tuple(r) + ("pdf",)
-    assert combined == split
+    combined = {r["url"]: tuple(r) for r in dom_pdf_branch(df).collect()}
+    direct = {}
+    for url, blob in rows:
+        if not is_pdf(blob):
+            direct[url] = (url, strip_html(blob), 0, True, None, "dom")
+            continue
+        try:
+            direct[url] = (url, extract_pdf_text(blob), 0, True, None,
+                           "pdf")
+        except Exception as e:
+            direct[url] = (url, None, 0, False, f"pdf: {e!r}"[:200],
+                           "pdf")
+    assert combined == direct
     assert combined["u://pdf"][1] == "pdf line one\npdf line two"
+    assert combined["u://gz"][1] == combined["u://dom"][1]
     assert combined["u://bad"][3] is False  # ok flag
+    assert combined["u://bad"][4].startswith("pdf: ")
     assert combined["u://dom"][5] == "dom"
 
 

@@ -141,37 +141,97 @@ def test_srp_neardup_hot_bucket_cap(spark):
     assert len(over) == 1 and over[0]["bucket_size"] == 20
 
 
-def test_srp_neardup_arrow_pairs_bit_identical(spark):
-    """The grouped-Arrow pair path (arrow_pairs=True) must return the
-    EXACT rows of the JVM self-join path — same pairs AND bit-identical
-    double scores (the NumPy kernel reproduces the zip_with/left-fold
-    accumulation order via cumsum). Random vectors, cap active, a low
-    threshold so thousands of pairs cross the comparison."""
+def test_srp_neardup_pairs_match_bucketed_bruteforce(spark):
+    """srp_neardup_pairs must return EXACTLY the brute-force pairs
+    (embedding_neardup_pairs, the JVM cosine expression) restricted to
+    same-bucket pairs in buckets within the cap — same pairs AND
+    bit-identical double scores (the NumPy kernel reproduces the
+    zip_with/left-fold accumulation order via cumsum). Random vectors,
+    cap active, a low threshold so thousands of pairs cross the
+    comparison."""
     rng = np.random.RandomState(11)
     rows = [(int(i), [float(x) for x in rng.standard_normal(16)])
             for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(threshold=0.1, n_planes=3, dim=16, max_bucket_size=80)
-    jvm = sorted(map(tuple, sim.srp_neardup_pairs(
-        df, "embedding", "vec_id", **kw).collect()))
-    arw = sorted(map(tuple, sim.srp_neardup_pairs(
-        df, "embedding", "vec_id", arrow_pairs=True, **kw).collect()))
-    assert len(jvm) > 100
-    assert jvm == arw  # tuple equality ⇒ bit-identical scores
+    kw = dict(n_planes=3, dim=16)
+    cap = 40
+    bucket = {r["vec_id"]: r["bucket"]
+              for r in sim.srp_buckets(df, "embedding", "vec_id",
+                                       **kw).collect()}
+    sizes = {}
+    for bk in bucket.values():
+        sizes[bk] = sizes.get(bk, 0) + 1
+    assert 0 < sum(sz > cap for sz in sizes.values()) < len(sizes)
+    exp = sorted(
+        tuple(r) for r in sim.embedding_neardup_pairs(
+            df, "embedding", "vec_id", threshold=0.1).collect()
+        if bucket[r["id_a"]] == bucket[r["id_b"]]
+        and sizes[bucket[r["id_a"]]] <= cap)
+    got = sorted(map(tuple, sim.srp_neardup_pairs(
+        df, "embedding", "vec_id", threshold=0.1, max_bucket_size=cap,
+        **kw).collect()))
+    assert len(exp) > 100
+    assert got == exp  # tuple equality ⇒ bit-identical scores
 
 
-def test_ivf_topk_collected_centroids_identical(spark):
-    """collect_centroids=True (one centroid scan + driver-side probed
-    ranking with bit-identical fold math) must return EXACTLY the lazy
-    plan's rows — ids, cells, and double scores."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = [float(i % 7) - 3.0 for i in range(64)]
-    lazy = [tuple(r) for r in sim.ivf_topk(
-        emb, "embedding", "vec_id", q, k=5, nprobe=2, n_cells=8).collect()]
-    fast = [tuple(r) for r in sim.ivf_topk(
-        emb, "embedding", "vec_id", q, k=5, nprobe=2, n_cells=8,
-        collect_centroids=True).collect()]
-    assert lazy == fast and len(lazy) == 5
+def test_srp_neardup_null_nan_and_zero_vectors(spark):
+    """Degenerate vectors never fail the job and never pair. A NULL
+    embedding has a NULL bucket. A NaN component makes every projection
+    NaN, which Spark orders above 0 (all-ones bucket); the pair's NaN
+    score is dropped. A pair with a zero-norm vector has no score (the
+    JVM expression raises DIVIDE_BY_ZERO under ANSI) and is dropped.
+    String ids come back as strings, including from one-member
+    buckets."""
+    base = [1.0, 2.0, 3.0, 4.0]
+    nan = float("nan")
+    rows = [("a", base), ("b", [x * 1.001 for x in base]), ("c", None),
+            ("d", None), ("e", [-1.0, 5.0, -2.0, 0.5]),
+            ("f", [nan, 1.0, 1.0, 1.0]), ("g", [2.0, nan, 0.0, 1.0]),
+            ("y", [0.0] * 4), ("z", [0.0] * 4)]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
+    kw = dict(n_planes=4, dim=4)
+    bucket = {r["vec_id"]: r["bucket"] for r in
+              sim.srp_buckets(df, "embedding", "vec_id", **kw).collect()}
+    assert bucket["f"] == bucket["g"] == 15 and bucket["y"] == bucket["z"]
+    assert len({bucket[i] for i in "aefy"}) == 4  # no cross-talk
+
+    out = sim.srp_neardup_pairs(df, "embedding", "vec_id", threshold=0.99,
+                                **kw)
+    assert out.schema["id_a"].dataType.simpleString() == "string"
+    got = [tuple(r) for r in out.collect()]
+    assert [(a, b) for a, b, _ in got] == [("a", "b")]
+    assert got[0][2] > 0.99
+
+
+def test_ivf_topk_nonfinite_centroid_falls_back_to_spark_plan(spark):
+    """A NaN component in a seed vector makes its centroid's query score
+    NaN, which the driver-side ranking cannot order the way Spark does:
+    ivf_topk must fall back to the Spark-ranked probe (a broadcast join
+    on the probed cells). Spark orders NaN above every double, so the
+    NaN cell is probed first, every vector's argmax lands on it (its
+    score is NaN against every vector), and the NaN vector itself tops
+    the result, followed by the rest in exact cosine order."""
+    import math
+
+    rng = np.random.RandomState(3)
+    v = rng.standard_normal((12, 4))
+    v[0, 2] = float("nan")
+    rows = [(i, [float(x) for x in v[i]]) for i in range(len(v))]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = [0.5, -1.0, 0.25, 2.0]
+
+    out = sim.ivf_topk(df, "embedding", "vec_id", q, k=4, nprobe=2,
+                       n_cells=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan  # the probe join, not isin
+    got = [tuple(r) for r in out.collect()]
+
+    rest = sorted(((sim._pyfold_cosine(v[i], q), i) for i in range(1, 12)),
+                  key=lambda t: (-t[0], t[1]))[:3]
+    assert [(i, c) for i, c, _ in got] == [(0, 0)] + [(i, 0)
+                                                      for _, i in rest]
+    assert math.isnan(got[0][2])
+    assert [s for _, _, s in got[1:]] == [s for s, _ in rest]
 
 
 def test_ivf_topk_probe_semantics(spark):
