@@ -10,10 +10,18 @@ from all pages are flattened, encoded in bounded sub-batches, and
 regrouped — the reference's create_batches/regroup (:143-158, :377-386)
 done per Arrow batch. The prototype matrix rides a Spark broadcast
 (the FAISS-index analog, :496-505).
+
+Embedded images (data-URIs in HTML, image XObjects in PDFs) ride the
+same stage: a born-digital row routed there gets its text layer from
+born_digital_text (the DOM/PDF branch's per-row body), its images from
+page_images, and the images' OCR text appended inside the row — one
+output row per input row, never a derived-row explode or a join.
 """
 
 from __future__ import annotations
 
+import base64
+import re
 from typing import Iterator
 
 import numpy as np
@@ -252,7 +260,9 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                     encoder_artifact: str | None = None,
                     word_silver: float | None = None,
                     freq_dict: str | None = None,
-                    emit_char_text: bool = False):
+                    emit_char_text: bool = False,
+                    embedded_images: bool = False,
+                    pdf_password: bytes | str = b""):
     """Build the mapInPandas function for the fused OCR stage.
 
     word_silver: cosine threshold enabling the word-level recognizer
@@ -271,6 +281,11 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
     raw-logit argmax + class_map, infer_effocr.py:325-333) — the
     synthetic FFNN weights ARE the prototype matrix, so the class map is
     the prototype char list.
+    embedded_images: rows also carry `image_page` (the JVM sniff) and
+    the output a `branch` column. A non-image row's text is its text
+    layer (born_digital_text), then '\\n', then the non-NULL OCR texts
+    of its images (page_images) in order; n_chars is their summed char
+    count; ok/error/branch are the text layer's.
     """
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -291,28 +306,38 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                       create_homoglyph_dict(),
                       create_common_abbrev()) if spell_check else None)
         for pdf in batches:
-            urls, texts, ncs, oks, errs = [], [], [], [], []
-            widths, heights, all_boxes, all_chars = [], [], [], []
-            pages, page_langs, flat_crops = [], [], []
+            # rows: (url, text layer or None for an image page, n images);
+            # pages: one entry per localized image, in row order
+            rows, pages, flat_crops = [], [], []
             flat_word_crops: list = []
-            for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
+            image_page = (pdf["image_page"] if embedded_images
+                          else [True] * len(pdf))
+            for url, html, lang, is_image in zip(
+                    pdf["url"], pdf["html"], pdf["lang"], image_page):
                 vertical = (vertical_override if vertical_override is not None
                             else lang == "jp")
-                try:
-                    page = localize_page(bytes(html), lang, vertical,
-                                         conf_thres, iou_thres,
-                                         word_crops=word_silver is not None)
-                    err = None
-                except Exception as e:  # quarantine, never crash the job
-                    page = {"lines": [], "crops": [], "n_chars": 0,
-                            "word_crops": [], "n_words": 0,
-                            "height": 0, "width": 0}
-                    err = f"localize: {e!r}"[:200]
-                pages.append((url, lang, page, err, vertical))
-                page_langs.append(lang)
-                flat_crops.extend(page["crops"])
-                if word_silver is not None:
-                    flat_word_crops.extend(page["word_crops"])
+                if is_image:
+                    layer, blobs = None, [html]
+                else:
+                    b = bytes(html)
+                    layer = born_digital_text(b, pdf_password)
+                    blobs = page_images(b, pdf_password)
+                rows.append((url, layer, len(blobs)))
+                for blob in blobs:
+                    try:
+                        page = localize_page(
+                            bytes(blob), lang, vertical, conf_thres,
+                            iou_thres, word_crops=word_silver is not None)
+                        err = None
+                    except Exception as e:  # quarantine, never crash the job
+                        page = {"lines": [], "crops": [], "n_chars": 0,
+                                "word_crops": [], "n_words": 0,
+                                "height": 0, "width": 0}
+                        err = f"localize: {e!r}"[:200]
+                    pages.append((lang, page, err, vertical))
+                    flat_crops.extend(page["crops"])
+                    if word_silver is not None:
+                        flat_word_crops.extend(page["word_crops"])
 
             # batched transform+encode over ALL crops in the Arrow batch,
             # in bounded sub-batches
@@ -326,10 +351,10 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                    else np.zeros((0, synthmodel.EMBED_DIM), np.float32))
 
             # per-lang kNN over the flat crop axis, then positional regroup
-            flat_lang = np.repeat([l for _, l, p, _, _ in pages],
-                                  [p["n_chars"] for _, _, p, _, _ in pages])
+            flat_lang = np.repeat([l for l, _, _, _ in pages],
+                                  [p["n_chars"] for _, p, _, _ in pages])
             flat_chars: list[str] = [""] * emb.shape[0]
-            for lang in set(page_langs):
+            for lang in {l for l, _, _, _ in pages}:
                 sel = np.nonzero(flat_lang == lang)[0]
                 if sel.size == 0:
                     continue
@@ -359,8 +384,8 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
 
             cursor = 0
             wcursor = 0
-            char_texts: list = []
-            for url, lang, page, err, vertical in pages:
+            done = []  # per page: its output columns but url
+            for lang, page, err, vertical in pages:
                 n = page["n_chars"]
                 page_chars = flat_chars[cursor: cursor + n]
                 cursor += n
@@ -370,7 +395,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                     wp = flat_wpreds[wcursor: wcursor + nw]
                     ws = flat_wsims[wcursor: wcursor + nw]
                     wcursor += nw
-                ctext = None
+                text = ctext = None
                 if err is None:
                     try:
                         text = assemble_page(
@@ -393,31 +418,47 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                     except Exception as e:
                         text, err = None, f"assemble: {e!r}"[:200]
                         ctext = None
-                else:
-                    text = None
-                urls.append(url)
-                texts.append(text)
-                ncs.append(n)
-                oks.append(err is None)
-                errs.append(err)
-                char_texts.append(ctext)
+                res = {"extracted_text": text, "n_chars": n,
+                       "ok": err is None, "error": err, "char_text": ctext,
+                       "branch": "ocr"}
                 if emit_boxes:
                     bxs, chs = (page_spans(page, page_chars, vertical)
                                 if err is None else ([], []))
-                    widths.append(page["width"])
-                    heights.append(page["height"])
-                    all_boxes.append(bxs)
-                    all_chars.append(chs)
-            out = {
-                "url": urls, "extracted_text": texts, "n_chars": ncs,
-                "ok": oks, "error": errs,
-            }
+                    res.update(width=page["width"], height=page["height"],
+                               boxes=bxs, chars=chs)
+                done.append(res)
+
+            cols = ["url", "extracted_text", "n_chars", "ok", "error"]
             if emit_boxes:
-                out.update({"width": widths, "height": heights,
-                            "boxes": all_boxes, "chars": all_chars})
+                cols += ["width", "height", "boxes", "chars"]
             if emit_char_text:
-                out["char_text"] = char_texts
-            yield pd.DataFrame(out)
+                cols.append("char_text")
+            if embedded_images:
+                cols.append("branch")
+            out = []
+            cursor = 0
+            for url, layer, n_img in rows:
+                imgs = done[cursor: cursor + n_img]
+                cursor += n_img
+                if layer is None:
+                    res = imgs[0]
+                else:
+                    # fuse: text layer first, then the recognized images
+                    # in image order; a pure scan (empty text layer)
+                    # yields the image texts alone
+                    text, ok, err, branch = layer
+                    found = [r for r in imgs
+                             if r["extracted_text"] is not None]
+                    if found:
+                        text = "\n".join(
+                            ([text] if text else [])
+                            + [r["extracted_text"] for r in found])
+                    res = {"extracted_text": text,
+                           "n_chars": sum(r["n_chars"] for r in found),
+                           "ok": ok, "error": err, "char_text": None,
+                           "branch": branch}
+                out.append({"url": url, **res})
+            yield pd.DataFrame(out, columns=cols)
 
     return ocr_batches
 
@@ -429,7 +470,9 @@ def ocr_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
                encoder_artifact: str | None = None,
                word_silver: float | None = None,
                freq_dict: str | None = None,
-               emit_char_text: bool = False) -> DataFrame:
+               emit_char_text: bool = False,
+               embedded_images: bool = False,
+               pdf_password: bytes | str = b"") -> DataFrame:
     """(url, html, lang) pages → (url, extracted_text, n_chars, ok, error).
 
     encoder_artifact: path to a serialized npz encoder (visible on every
@@ -438,15 +481,23 @@ def ocr_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
     word_silver: cosine threshold enabling the word-level recognizer
     stream + silver-correction merge (see make_ocr_map_fn).
     emit_char_text: also emit the pre-merge char-only stream as a
-    `char_text` column from the same pass (requires word_silver)."""
+    `char_text` column from the same pass (requires word_silver).
+    embedded_images: rows also carry `image_page` and the output gains
+    `branch`; born-digital rows fuse in their images (make_ocr_map_fn)."""
     fn = make_ocr_map_fn(protos_bc, conf_thres, iou_thres,
                          anchor_margin, spell_check, recognizer,
                          vertical_override,
                          encoder_artifact=encoder_artifact,
                          word_silver=word_silver, freq_dict=freq_dict,
-                         emit_char_text=emit_char_text)
+                         emit_char_text=emit_char_text,
+                         embedded_images=embedded_images,
+                         pdf_password=pdf_password)
     schema = OCR_TWO_STREAM_SCHEMA if emit_char_text else OCR_OUT_SCHEMA
-    return df.select("url", "html", "lang").mapInPandas(fn, schema)
+    cols = ["url", "html", "lang"]
+    if embedded_images:
+        schema += ", branch string"
+        cols.append("image_page")
+    return df.select(*cols).mapInPandas(fn, schema)
 
 
 def ocr_spans_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
@@ -479,62 +530,23 @@ def is_pdf_page(html_col):
 
 
 _DATA_URI_MARK = "data:image/"  # png or jpeg; full match below
-_DATA_URI_RE = None  # compiled lazily in the worker
+_DATA_URI_RE = re.compile(rb"data:image/(?:png|jpeg);base64,([A-Za-z0-9+/=]+)")
 
 
 def has_embedded_png(html_col):
-    """JVM-side pre-filter for HTML pages carrying data-URI images (the
-    north star's 'embedded images'): a cheap contains() so the embedded-
-    image explode UDF only ever sees candidate rows."""
+    """JVM-side test for HTML pages carrying data-URI images (the north
+    star's 'embedded images'): a cheap contains() that, under
+    extract_pages(embedded_images=True), routes a non-PDF page to the
+    OCR stage, where page_images pulls the images out of it."""
     return F.contains(html_col.cast("string"), F.lit(_DATA_URI_MARK))
 
 
-EMBEDDED_SCHEMA = "url string, img_idx int, html binary, lang string"
-
-
-def embedded_png_rows(df: DataFrame) -> DataFrame:
-    """HTML pages → one row per embedded data-URI PNG
-    (url, img_idx, png bytes, lang), ready for the standard OCR branch.
-    Undecodable base64 payloads are skipped (quarantine by omission —
-    the page's DOM text still flows through the DOM branch)."""
-    import base64
-    import re
-
-    def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        global _DATA_URI_RE
-        if _DATA_URI_RE is None:
-            _DATA_URI_RE = re.compile(
-                r"data:image/(?:png|jpeg);base64,([A-Za-z0-9+/=]+)")
-        for pdf in batches:
-            urls, idxs, blobs, langs = [], [], [], []
-            for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                try:
-                    text = bytes(html).decode("utf-8", errors="replace")
-                except Exception:
-                    continue
-                for i, m in enumerate(_DATA_URI_RE.finditer(text)):
-                    try:
-                        blob = base64.b64decode(m.group(1), validate=True)
-                    except Exception:
-                        continue
-                    if blob[:8] != PNG_MAGIC and blob[:3] != JPEG_MAGIC:
-                        continue
-                    urls.append(url)
-                    idxs.append(i)
-                    blobs.append(blob)
-                    langs.append(lang)
-            yield pd.DataFrame({"url": urls, "img_idx": idxs,
-                                "html": blobs, "lang": langs})
-
-    return df.select("url", "html", "lang").mapInPandas(
-        explode_batches, EMBEDDED_SCHEMA)
-
-
 def has_pdf_images(html_col):
-    """JVM-side pre-filter for PDFs carrying DCT (JPEG), CCITT fax, or
-    JBIG2 image XObjects — the three encodings scanned documents
-    actually use. Cheap contains() so the image-explode UDF only sees
-    candidates."""
+    """JVM-side test for PDFs carrying DCT (JPEG), CCITT fax, JBIG2 or
+    JPX image XObjects — the encodings scanned documents actually use.
+    A cheap contains() that, under extract_pages(embedded_images=True),
+    routes a PDF to the OCR stage, where page_images pulls the images
+    out of it."""
     s = html_col.cast("string")
     return (F.contains(s, F.lit("/DCTDecode"))
             | F.contains(s, F.lit("/CCITTFaxDecode"))
@@ -543,100 +555,82 @@ def has_pdf_images(html_col):
             # inline images in RAW content streams (BI /W ... ID ... EI
             # — the simple-generator shape); Flate-compressed content
             # hides inline images from any byte-level prefilter — a
-            # documented recall trade for not exploding every PDF
+            # documented recall trade for not decoding every PDF
             | F.contains(s, F.lit("BI /")))
 
 
-def pdf_image_rows(df: DataFrame,
-                   pdf_password: bytes | str = b"") -> DataFrame:
-    """PDF pages → one row per embedded DCT image
-    (url, img_idx, jpeg bytes, lang), ready for the standard OCR branch
-    — the scanned-newspaper path (north star: 'embedded images/PDF
-    layouts'). Unextractable documents are skipped (quarantine by
-    omission — the text layer still flows through the PDF branch)."""
-    from ..functions.pdftext import extract_pdf_images
+def page_images(b: bytes, pdf_password: bytes | str = b"") -> list[bytes]:
+    """A born-digital page's embedded images, in page order, as
+    PNG/JPEG bytes: a PDF's image XObjects and inline images
+    (extract_pdf_images — the scanned-newspaper path), or an HTML
+    page's data-URI PNG/JPEG payloads. Undecodable images are skipped,
+    and an unextractable PDF yields none (quarantine by omission — the
+    page's text layer still comes out)."""
+    if b[:5] == b"%PDF-":
+        from ..functions.pdftext import extract_pdf_images
+        try:
+            return extract_pdf_images(b, password=pdf_password)
+        except Exception:
+            return []
+    blobs = []
+    for m in _DATA_URI_RE.finditer(b):
+        try:
+            blob = base64.b64decode(m.group(1), validate=True)
+        except Exception:
+            continue
+        if blob[:8] == PNG_MAGIC or blob[:3] == JPEG_MAGIC:
+            blobs.append(blob)
+    return blobs
 
-    def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, idxs, blobs, langs = [], [], [], []
-            for url, html, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                try:
-                    imgs = extract_pdf_images(bytes(html),
-                                              password=pdf_password)
-                except Exception:
-                    continue
-                for i, blob in enumerate(imgs):
-                    urls.append(url)
-                    idxs.append(i)
-                    blobs.append(blob)
-                    langs.append(lang)
-            yield pd.DataFrame({"url": urls, "img_idx": idxs,
-                                "html": blobs, "lang": langs})
 
-    return df.select("url", "html", "lang").mapInPandas(
-        explode_batches, EMBEDDED_SCHEMA)
+def born_digital_text(data, pdf_password: bytes | str = b""):
+    """One non-image page → (extracted_text, ok, error, branch): a %PDF-
+    page runs extract_pdf_text (functions/pdftext.py, pure stdlib),
+    anything else strip_html. Undecodable documents and a NULL html
+    cell quarantine as ok=False, never crash the job."""
+    if data is None:
+        return None, False, "dom: html is NULL", "dom"
+    b = bytes(data)
+    if b[:5] != b"%PDF-":
+        return strip_html(b), True, None, "dom"
+    from ..functions.pdftext import extract_pdf_text
+    try:
+        stats: dict = {}
+        text = extract_pdf_text(b, password=pdf_password, stats=stats)
+    except Exception as e:
+        return None, False, f"pdf: {e!r}"[:200], "pdf"
+    # partial extraction is flagged, never silent: the dropped-stream
+    # count rides the error column as a warning while ok stays True
+    nq = stats.get("quarantined_streams", 0)
+    warn = f"pdf: {nq} stream(s) quarantined (unresolved font)" if nq else None
+    return text, True, warn, "pdf"
 
 
 def dom_pdf_branch(df: DataFrame,
                    pdf_password: bytes | str = b"") -> DataFrame:
     """(url, html) non-image pages → OCR_OUT_SCHEMA plus the `branch`
     label ('pdf'/'dom'), both born-digital extractors in ONE Python
-    stage, routed per row by the same %PDF- prefix the JVM sniff uses.
-
-    PDF rows run extract_pdf_text (functions/pdftext.py, pure stdlib);
-    undecodable documents quarantine into ok=False rows, never crash
-    the job.
+    stage, routed per row by born_digital_text on the same %PDF- prefix
+    the JVM sniff uses.
     `pdf_password` unlocks true-password documents (job-level config,
     the freq_dict pattern — a corpus crawled from one provider shares
-    one password). Every other row runs strip_html; a NULL html cell
-    quarantines as an ok=False dom row.
+    one password).
 
     One stage rather than one per branch: a second stage would scan
     the non-image majority again and launch a fleet of near-empty
     Python tasks for whichever branch is sparse in the corpus slice (a
     pure-HTML crawl slice paid ~0.4s of empty pdf tasks per pass at
     local[32])."""
-    from ..functions.pdftext import extract_pdf_text
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            urls, texts, oks, errs, brs = [], [], [], [], []
-            for url, data in zip(pdf["url"], pdf["html"]):
-                urls.append(url)
-                if data is None:
-                    brs.append("dom")
-                    texts.append(None)
-                    oks.append(False)
-                    errs.append("dom: html is NULL")
-                    continue
-                b = bytes(data)
-                if b[:5] == b"%PDF-":
-                    brs.append("pdf")
-                    try:
-                        stats: dict = {}
-                        texts.append(extract_pdf_text(
-                            b, password=pdf_password, stats=stats))
-                        oks.append(True)
-                        # partial extraction is flagged, never silent:
-                        # the dropped-stream count rides the error
-                        # column as a warning while ok stays True
-                        nq = stats.get("quarantined_streams", 0)
-                        errs.append(f"pdf: {nq} stream(s) quarantined "
-                                    f"(unresolved font)" if nq else None)
-                    except Exception as e:
-                        texts.append(None)
-                        oks.append(False)
-                        errs.append(f"pdf: {e!r}"[:200])
-                else:
-                    brs.append("dom")
-                    texts.append(strip_html(b))
-                    oks.append(True)
-                    errs.append(None)
-            yield pd.DataFrame({
-                "url": urls, "extracted_text": texts,
-                "n_chars": [0] * len(urls), "ok": oks, "error": errs,
-                "branch": brs,
-            })
+            out = pd.DataFrame(
+                [born_digital_text(data, pdf_password)
+                 for data in pdf["html"]],
+                columns=["extracted_text", "ok", "error", "branch"])
+            out.insert(0, "url", pdf["url"].to_numpy())
+            out.insert(2, "n_chars", 0)
+            yield out
 
     return df.select("url", "html").mapInPandas(
         batches, OCR_OUT_SCHEMA + ", branch string")

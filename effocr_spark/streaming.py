@@ -6,10 +6,11 @@ to either the chunked lineage runner (lineage.py) or — equivalently —
 this Structured Streaming skin: a file-source stream over the pages
 table, routed through the SAME `pipeline.extract_pages` the batch and
 lineage runners use (its filters, stateless salted repartition,
-mapInPandas stages and unionByName are all streaming-legal), and a
-checkpointed sink. Trigger.AvailableNow drains everything present and
-stops, giving exactly-once incremental batch runs; new page files
-appearing between runs are picked up automatically from the checkpoint.
+mapInPandas stages and unionByName are all streaming-legal, with or
+without embedded_images), and a checkpointed append-mode file sink.
+Trigger.AvailableNow drains everything present and stops, giving
+exactly-once incremental batch runs; new page files appearing between
+runs are picked up automatically from the checkpoint.
 
 Also provides the canonical watermarked event-time window aggregate for
 late-data streams.
@@ -42,20 +43,16 @@ def stream_extract(
     checkpoint. Returns the started query (caller awaits termination;
     AvailableNow stops when caught up).
 
-    Parity vs the batch pipeline: the file-sink path calls
-    extract_pages itself, with the same optional salted repartition
-    before the OCR stage (a stateless repartition is legal in
-    streaming — it only reshuffles within the micro-batch).
-    embedded_images=True runs the same call per micro-batch via
-    foreachBatch: the fusion's per-url groupBy+join only ever touches
-    rows DERIVED from that batch's own pages, so batch-local execution
-    is semantically exact (no cross-batch state, no watermark needed);
-    each micro-batch lands in its own batch_id=<n> partition with
-    overwrite, making retries idempotent (foreachBatch is
-    at-least-once; the per-batch overwrite restores exactly-once at
-    the sink). The serialized-encoder artifact and the word-silver
-    stream are row-local (per-executor singleton load + in-UDF merge),
-    so batch and streaming OCR stages stay configuration-identical."""
+    Parity vs the batch pipeline: the file sink consumes extract_pages
+    itself, with the same optional salted repartition before the OCR
+    stage (a stateless repartition is legal in streaming — it only
+    reshuffles within the micro-batch). embedded_images=True needs
+    nothing extra: a page's embedded images are fused inside its own
+    row in the OCR stage, so the plan has no join or aggregate and the
+    same append-mode sink serves both values of the flag. The
+    serialized-encoder artifact and the word-silver stream are
+    row-local too (per-executor singleton load + in-UDF merge), so
+    batch and streaming OCR stages stay configuration-identical."""
     reader = (
         spark.readStream.schema(PAGES_DDL).format("parquet")
     )
@@ -63,23 +60,8 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.load(pages_dir)
 
-    if embedded_images:
-        def _process(batch_df, batch_id: int) -> None:
-            out = extract_pages(
-                batch_df, protos_bc, salt_partitions=salt_partitions,
-                embedded_images=True, encoder_artifact=encoder_artifact,
-                word_silver=word_silver)
-            out.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}")
-
-        return (
-            pages.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     result = extract_pages(pages, protos_bc, salt_partitions=salt_partitions,
+                           embedded_images=embedded_images,
                            encoder_artifact=encoder_artifact,
                            word_silver=word_silver)
     return (

@@ -4,7 +4,7 @@ Scanned-newspaper PDFs (the project's north-star corpus) predominantly
 carry G4-fax image XObjects (/CCITTFaxDecode with /K < 0), not DCT —
 this feeds those pages' pixels into the same OCR branch the DCT path
 uses (functions/pdftext.extract_pdf_images → operators/extract.
-pdf_image_rows). The reference repo has no PDF/fax handling at all;
+page_images). The reference repo has no PDF/fax handling at all;
 scope mirrors the other from-scratch codecs here (synth/jpegcodec.py,
 synth/wavcodec.py).
 

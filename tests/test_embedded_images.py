@@ -1,12 +1,13 @@
 """Embedded images (north star: 'YOLO-style detector over rendered page
 regions AND embedded images'): data-URI PNGs inside born-digital HTML
-run through the standard OCR branch and fuse onto the page's DOM text."""
+run through the standard OCR stage and fuse onto the page's DOM text
+inside the page's own row."""
 
 import base64
 
 from pyspark.sql import functions as F
 
-from effocr_spark.operators.extract import embedded_png_rows, has_embedded_png
+from effocr_spark.operators.extract import has_embedded_png, page_images
 from effocr_spark.pipeline import extract_pages
 from effocr_spark.synth.font import render_line
 from effocr_spark.synth.imgcodec import encode_png
@@ -41,9 +42,31 @@ def test_embedded_rows_explode(spark):
     ])
     cand = df.filter(has_embedded_png(F.col("html")))
     assert cand.count() == 2  # u2 pre-filtered JVM-side
-    rows = embedded_png_rows(cand).collect()
-    assert {(r["url"], r["img_idx"]) for r in rows} == {("u1", 0), ("u1", 1)}
-    assert all(bytes(r["html"])[:4] == b"\x89PNG" for r in rows)
+    blobs = {r["url"]: page_images(bytes(r["html"])) for r in cand.collect()}
+    assert blobs["u1"] == [encode_png(render_line(t)[0])
+                           for t in ("Hello world line", "Second image line")]
+    assert all(b[:4] == b"\x89PNG" for b in blobs["u1"])
+    assert blobs["u3"] == []  # the junk URI yields no image
+
+
+def test_repeated_url_rows_keep_their_own_images(spark, protos_bc):
+    """(url, warc_ts) is the table's key: two crawls of one url each
+    fuse only their own embedded image, with their own n_chars."""
+    import datetime as dt
+
+    lines = ("farm house print line", "town gazette says")
+    rows = [("u1", dt.datetime(2024, 1, 1 + i), _page("u1", "Own body",
+                                                     images=[t])[2],
+             None, "en") for i, t in enumerate(lines)]
+    out = extract_pages(_mk(spark, rows), protos_bc,
+                        embedded_images=True).collect()
+    assert len(out) == 2
+    got = set()
+    for r in out:
+        body, image_text = r["extracted_text"].split("\n")
+        assert body == "Own body" and r["ok"] and r["branch"] == "dom"
+        got.add((image_text.lower(), r["n_chars"]))
+    assert got == {(t, len(t.replace(" ", ""))) for t in lines}
 
 
 def test_fusion_appends_ocr_text_in_order(spark, protos_bc):
@@ -117,3 +140,42 @@ def test_embedded_branch_uses_encoder_artifact(spark, tmp_path):
     parts = out["u1"]["extracted_text"].split("\n")
     assert parts[0] == "Body text here"
     assert parts[1].lower() == "quick brown fox jumps"
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names from the tree at the head of the formatted plan."""
+    import contextlib
+    import io
+    import re
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    nodes = {}
+    for line in buf.getvalue().splitlines():
+        if line.startswith("("):
+            break  # node details follow the tree
+        m = re.match(r"^[\s:|+\-]*([A-Za-z][A-Za-z ]*?)\s*\((\d+)\)\s*$",
+                     line)
+        if m:
+            nodes[m.group(2)] = m.group(1)
+    return list(nodes.values())
+
+
+def test_embedded_fusion_plan_has_no_join_or_aggregate(spark, protos_bc,
+                                                       tmp_path):
+    """Embedded images fuse inside the salted OCR stage: the plan keeps
+    the one salted Exchange and the two Python stages of the plain
+    pipeline — no explode (Generate), no join, no aggregate."""
+    path = str(tmp_path / "pages")
+    _mk(spark, [_page("u1", "Body", images=["one line"]),
+                _page("u2", "Plain")]).write.parquet(path)
+    pages = spark.read.parquet(path)
+    for flag in (True, False):
+        names = _plan_nodes(extract_pages(pages, protos_bc,
+                                          salt_partitions=4,
+                                          embedded_images=flag))
+        assert sum("Exchange" in n for n in names) == 1, names
+        assert names.count("MapInPandas") == 2, names
+        assert not [n for n in names if "Join" in n or "Aggregate" in n
+                    or "Generate" in n], names

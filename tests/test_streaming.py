@@ -131,10 +131,10 @@ def test_stream_extract_word_silver_matches_batch(spark, tmp_path):
 
 def test_stream_extract_embedded_fusion_matches_batch(spark, protos_bc,
                                                       tmp_path):
-    """embedded_images=True in streaming (foreachBatch running the
-    full batch pipeline per micro-batch) produces exactly the batch
-    pipeline's fused output — the fusion is batch-local by
-    construction (derived rows never cross micro-batches)."""
+    """embedded_images=True in streaming (the plain append-mode file
+    sink over extract_pages) produces exactly the batch pipeline's
+    fused output — the fusion is row-local by construction (a page's
+    images are fused inside its own row in the OCR stage)."""
     import base64
 
     from effocr_spark.synth.font import render_line
@@ -172,7 +172,7 @@ def test_stream_extract_embedded_fusion_matches_batch(spark, protos_bc,
     assert got == exp
     assert "farm house print line" in got["u1"][0].lower()
 
-    # incremental: a new file is picked up into its own batch dir
+    # incremental: a new file is picked up by the next run
     extra = spark.createDataFrame(
         [("u3", None, bytearray(
             b"<html><body><div id='m'><p>Late page</p></div>"
