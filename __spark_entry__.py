@@ -50,8 +50,7 @@ def _local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
 
     createDataFrame over a plain Python list takes the pickled-RDD
     path: every scan of the result re-deserializes the rows through a
-    Python worker, and a 3-branch extraction plan scans its input
-    three times — measured ~0.5s PER SCAN at local[32] for a 12-row
+    Python worker — measured ~0.5s PER SCAN at local[32] for a 12-row
     fixture (guide §4: control what crosses the JVM↔Python boundary).
     The pandas route hands Spark one Arrow batch; scans are then pure
     JVM. Values are identical — the oracle gates pin that."""
@@ -952,17 +951,6 @@ def q_extract_pdf(spark, sf_dir):
     mixed = _local_df(
         spark, page_rows + pdf_rows,
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    # materialize the mixed input once: the router scans its input once
-    # per Python stage (the OCR stage and the combined DOM/PDF stage),
-    # re-running the distributed page GENERATOR (pages_df mapInPandas)
-    # each time — localCheckpoint pins the ~38 tiny rows so generation
-    # happens once per invocation (computed from scratch every run;
-    # nothing persists across runs). The repartition folds into the
-    # same checkpoint job and halves the partition count of the union
-    # (32+32 slices, mostly empty, each a near-empty Python-stage task
-    # launch in every stage that scans it)
-    mixed = mixed.repartition(
-        spark.sparkContext.defaultParallelism).localCheckpoint(eager=True)
     res = extract_pages(mixed, _protos_bc(spark), salt_partitions=8)
     return res.select("url", "branch", "extracted_text", "ok")
 

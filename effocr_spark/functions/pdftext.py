@@ -31,9 +31,9 @@ more negative than -180 text-space units are treated as an inter-word
 gap (the standard heuristic for extracting spaces from kerned text).
 Pages are joined with a newline.
 
-Shared by the Spark mapInPandas branch (operators/extract.dom_pdf_branch)
-and the tests, so byte-parity is by construction — the same contract
-as functions/domstrip.py.
+Shared by the fused Spark mapInPandas stage (per PDF row, through
+operators/extract.born_digital_text) and the tests, so byte-parity is
+by construction — the same contract as functions/domstrip.py.
 """
 
 from __future__ import annotations
@@ -719,7 +719,7 @@ def extract_pdf_text(data: bytes, password: bytes | str = b"",
     Standard-handler RC4/AES encryption with an empty user password
     (permissions-only locking) and Flate/LZW predictors decode for
     real; `password` supplies a non-empty USER password (the freq_dict
-    config pattern — threaded through dom_pdf_branch/extract_pages).
+    config pattern — threaded through extract_pages/born_digital_text).
 
     Quarantine granularity is PER CONTENT STREAM for font-resolution
     failures (UnresolvedFontError): a mixed document with one

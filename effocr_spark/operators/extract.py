@@ -1,5 +1,6 @@
-"""Spark extraction operators: the OCR branch (fused mapInPandas stage)
-and the born-digital DOM/PDF branch (one mapInPandas stage).
+"""Spark extraction operator: ONE fused mapInPandas stage for every
+page — image pages through the OCR dataflow, born-digital DOM/PDF pages
+through their text-layer extractors, routed per row.
 
 Design (SURVEY.md §3.1): the reference's three thread-pool stages
 (localize → transform → recognize, infer_effocr_onnx_multi.py:234-364)
@@ -11,11 +12,11 @@ regrouped — the reference's create_batches/regroup (:143-158, :377-386)
 done per Arrow batch. The prototype matrix rides a Spark broadcast
 (the FAISS-index analog, :496-505).
 
-Embedded images (data-URIs in HTML, image XObjects in PDFs) ride the
-same stage: a born-digital row routed there gets its text layer from
-born_digital_text (the DOM/PDF branch's per-row body), its images from
-page_images, and the images' OCR text appended inside the row — one
-output row per input row, never a derived-row explode or a join.
+Born-digital rows share the stage: each gets its text layer from
+born_digital_text and, when the JVM flagged embedded images (data-URIs
+in HTML, image XObjects in PDFs), its images from page_images with their
+OCR text appended inside the row — one output row per input row, never
+a second stage, a union, a derived-row explode or a join.
 """
 
 from __future__ import annotations
@@ -261,9 +262,8 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                     word_silver: float | None = None,
                     freq_dict: str | None = None,
                     emit_char_text: bool = False,
-                    embedded_images: bool = False,
                     pdf_password: bytes | str = b""):
-    """Build the mapInPandas function for the fused OCR stage.
+    """Build the mapInPandas function for the fused extraction stage.
 
     word_silver: cosine threshold enabling the word-level recognizer
     stream + silver-correction merge (north star's two-stream design;
@@ -272,7 +272,9 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
     reference behavior.
 
     protos_bc: Spark broadcast of {lang: (chars list, [K,D] float32)}.
-    Input rows: (url, html, lang); output: OCR_OUT_SCHEMA.
+    Input rows: (url, html, lang, image_page, has_images), the last two
+    the JVM sniffs; output: OCR_OUT_SCHEMA (+ the span or char_text
+    columns when asked for) + the row's `branch` ('ocr'/'dom'/'pdf').
     vertical_override: force text orientation for every row (the
     reference's global --vertical flag, infer_effocr_onnx_multi.py:429);
     default None derives it per row (jp → vertical).
@@ -281,11 +283,13 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
     raw-logit argmax + class_map, infer_effocr.py:325-333) — the
     synthetic FFNN weights ARE the prototype matrix, so the class map is
     the prototype char list.
-    embedded_images: rows also carry `image_page` (the JVM sniff) and
-    the output a `branch` column. A non-image row's text is its text
-    layer (born_digital_text), then '\\n', then the non-NULL OCR texts
-    of its images (page_images) in order; n_chars is their summed char
-    count; ok/error/branch are the text layer's.
+    An image_page row is localized and recognized (branch 'ocr'). Any
+    other row's text is its text layer (born_digital_text), then — only
+    when has_images — '\\n' and the non-NULL OCR texts of its images
+    (page_images) in order; n_chars is their summed char count;
+    ok/error/branch are the text layer's. A lang with no prototype bank
+    quarantines an image page (ok=False) and drops a born-digital
+    row's images, never the job.
     """
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -306,22 +310,26 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                       create_homoglyph_dict(),
                       create_common_abbrev()) if spell_check else None)
         for pdf in batches:
-            # rows: (url, text layer or None for an image page, n images);
-            # pages: one entry per localized image, in row order
+            # rows: (url, text layer, n images), the layer None for an
+            # image page to localize; pages: one entry per localized
+            # image, in row order
             rows, pages, flat_crops = [], [], []
             flat_word_crops: list = []
-            image_page = (pdf["image_page"] if embedded_images
-                          else [True] * len(pdf))
-            for url, html, lang, is_image in zip(
-                    pdf["url"], pdf["html"], pdf["lang"], image_page):
+            for url, html, lang, is_image, has_images in zip(
+                    pdf["url"], pdf["html"], pdf["lang"],
+                    pdf["image_page"], pdf["has_images"]):
                 vertical = (vertical_override if vertical_override is not None
                             else lang == "jp")
-                if is_image:
-                    layer, blobs = None, [html]
+                layer, blobs = None, []
+                if not is_image:
+                    layer = born_digital_text(html, pdf_password)
+                    if has_images and lang in protos:
+                        blobs = page_images(bytes(html), pdf_password)
+                elif lang in protos:
+                    blobs = [html]
                 else:
-                    b = bytes(html)
-                    layer = born_digital_text(b, pdf_password)
-                    blobs = page_images(b, pdf_password)
+                    layer = (None, False, "recognize: no prototype bank "
+                             f"for lang {lang!r}", "ocr")
                 rows.append((url, layer, len(blobs)))
                 for blob in blobs:
                     try:
@@ -433,8 +441,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                 cols += ["width", "height", "boxes", "chars"]
             if emit_char_text:
                 cols.append("char_text")
-            if embedded_images:
-                cols.append("branch")
+            cols.append("branch")
             out = []
             cursor = 0
             for url, layer, n_img in rows:
@@ -457,6 +464,8 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                            "n_chars": sum(r["n_chars"] for r in found),
                            "ok": ok, "error": err, "char_text": None,
                            "branch": branch}
+                    if emit_boxes:
+                        res.update(width=0, height=0, boxes=[], chars=[])
                 out.append({"url": url, **res})
             yield pd.DataFrame(out, columns=cols)
 
@@ -471,9 +480,9 @@ def ocr_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
                word_silver: float | None = None,
                freq_dict: str | None = None,
                emit_char_text: bool = False,
-               embedded_images: bool = False,
                pdf_password: bytes | str = b"") -> DataFrame:
-    """(url, html, lang) pages → (url, extracted_text, n_chars, ok, error).
+    """(url, html, lang, image_page, has_images) pages →
+    (url, extracted_text, n_chars, ok, error, [char_text], branch).
 
     encoder_artifact: path to a serialized npz encoder (visible on every
     executor — cluster deploys ship it via spark-submit --files); loaded
@@ -481,23 +490,17 @@ def ocr_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
     word_silver: cosine threshold enabling the word-level recognizer
     stream + silver-correction merge (see make_ocr_map_fn).
     emit_char_text: also emit the pre-merge char-only stream as a
-    `char_text` column from the same pass (requires word_silver).
-    embedded_images: rows also carry `image_page` and the output gains
-    `branch`; born-digital rows fuse in their images (make_ocr_map_fn)."""
+    `char_text` column from the same pass (requires word_silver)."""
     fn = make_ocr_map_fn(protos_bc, conf_thres, iou_thres,
                          anchor_margin, spell_check, recognizer,
                          vertical_override,
                          encoder_artifact=encoder_artifact,
                          word_silver=word_silver, freq_dict=freq_dict,
                          emit_char_text=emit_char_text,
-                         embedded_images=embedded_images,
                          pdf_password=pdf_password)
     schema = OCR_TWO_STREAM_SCHEMA if emit_char_text else OCR_OUT_SCHEMA
-    cols = ["url", "html", "lang"]
-    if embedded_images:
-        schema += ", branch string"
-        cols.append("image_page")
-    return df.select(*cols).mapInPandas(fn, schema)
+    return df.select("url", "html", "lang", "image_page",
+                     "has_images").mapInPandas(fn, schema + ", branch string")
 
 
 def ocr_spans_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
@@ -507,11 +510,15 @@ def ocr_spans_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
     """Span-emitting OCR: same fused stage as ocr_branch, plus page dims
     and per-char page-space COCO boxes parallel to the recognized chars —
     the feed for the K2 COCO sink (operators/coco_sink.py). Explode to
-    one row per box with posexplode(arrays_zip(boxes, chars))."""
+    one row per box with posexplode(arrays_zip(boxes, chars)). Every
+    input row is taken as an image page."""
     fn = make_ocr_map_fn(protos_bc, conf_thres, iou_thres,
                          anchor_margin, spell_check, recognizer,
                          vertical_override, emit_boxes=True)
-    return df.select("url", "html", "lang").mapInPandas(fn, OCR_SPANS_SCHEMA)
+    return df.select("url", "html", "lang",
+                     F.lit(True).alias("image_page"),
+                     F.lit(False).alias("has_images")).mapInPandas(
+        fn, OCR_SPANS_SCHEMA + ", branch string")
 
 
 def is_image_page(html_col):
@@ -536,8 +543,8 @@ _DATA_URI_RE = re.compile(rb"data:image/(?:png|jpeg);base64,([A-Za-z0-9+/=]+)")
 def has_embedded_png(html_col):
     """JVM-side test for HTML pages carrying data-URI images (the north
     star's 'embedded images'): a cheap contains() that, under
-    extract_pages(embedded_images=True), routes a non-PDF page to the
-    OCR stage, where page_images pulls the images out of it."""
+    extract_pages(embedded_images=True), sets a non-PDF page's
+    `has_images`, so the stage pulls its images out with page_images."""
     return F.contains(html_col.cast("string"), F.lit(_DATA_URI_MARK))
 
 
@@ -545,8 +552,8 @@ def has_pdf_images(html_col):
     """JVM-side test for PDFs carrying DCT (JPEG), CCITT fax, JBIG2 or
     JPX image XObjects — the encodings scanned documents actually use.
     A cheap contains() that, under extract_pages(embedded_images=True),
-    routes a PDF to the OCR stage, where page_images pulls the images
-    out of it."""
+    sets a PDF's `has_images`, so the stage pulls its images out with
+    page_images."""
     s = html_col.cast("string")
     return (F.contains(s, F.lit("/DCTDecode"))
             | F.contains(s, F.lit("/CCITTFaxDecode"))
@@ -605,32 +612,3 @@ def born_digital_text(data, pdf_password: bytes | str = b""):
     warn = f"pdf: {nq} stream(s) quarantined (unresolved font)" if nq else None
     return text, True, warn, "pdf"
 
-
-def dom_pdf_branch(df: DataFrame,
-                   pdf_password: bytes | str = b"") -> DataFrame:
-    """(url, html) non-image pages → OCR_OUT_SCHEMA plus the `branch`
-    label ('pdf'/'dom'), both born-digital extractors in ONE Python
-    stage, routed per row by born_digital_text on the same %PDF- prefix
-    the JVM sniff uses.
-    `pdf_password` unlocks true-password documents (job-level config,
-    the freq_dict pattern — a corpus crawled from one provider shares
-    one password).
-
-    One stage rather than one per branch: a second stage would scan
-    the non-image majority again and launch a fleet of near-empty
-    Python tasks for whichever branch is sparse in the corpus slice (a
-    pure-HTML crawl slice paid ~0.4s of empty pdf tasks per pass at
-    local[32])."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pd.DataFrame(
-                [born_digital_text(data, pdf_password)
-                 for data in pdf["html"]],
-                columns=["extracted_text", "ok", "error", "branch"])
-            out.insert(0, "url", pdf["url"].to_numpy())
-            out.insert(2, "n_chars", 0)
-            yield out
-
-    return df.select("url", "html").mapInPandas(
-        batches, OCR_OUT_SCHEMA + ", branch string")

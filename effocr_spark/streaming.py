@@ -5,9 +5,9 @@ maps to Spark's task scheduler, and the north rule's resumability maps
 to either the chunked lineage runner (lineage.py) or — equivalently —
 this Structured Streaming skin: a file-source stream over the pages
 table, routed through the SAME `pipeline.extract_pages` the batch and
-lineage runners use (its filters, stateless salted repartition,
-mapInPandas stages and unionByName are all streaming-legal, with or
-without embedded_images), and a checkpointed append-mode file sink.
+lineage runners use (its JVM sniff columns, stateless salted
+repartition and single mapInPandas stage are all streaming-legal, with
+or without embedded_images), and a checkpointed append-mode file sink.
 Trigger.AvailableNow drains everything present and stops, giving
 exactly-once incremental batch runs; new page files appearing between
 runs are picked up automatically from the checkpoint.
@@ -48,7 +48,7 @@ def stream_extract(
     stage (a stateless repartition is legal in streaming — it only
     reshuffles within the micro-batch). embedded_images=True needs
     nothing extra: a page's embedded images are fused inside its own
-    row in the OCR stage, so the plan has no join or aggregate and the
+    row in the one stage, so the plan has no join or aggregate and the
     same append-mode sink serves both values of the flag. The
     serialized-encoder artifact and the word-silver stream are
     row-local too (per-executor singleton load + in-UDF merge), so

@@ -164,9 +164,10 @@ def _plan_nodes(df) -> list[str]:
 
 def test_embedded_fusion_plan_has_no_join_or_aggregate(spark, protos_bc,
                                                        tmp_path):
-    """Embedded images fuse inside the salted OCR stage: the plan keeps
-    the one salted Exchange and the two Python stages of the plain
-    pipeline — no explode (Generate), no join, no aggregate."""
+    """Every row routes inside the one salted Python stage: for both
+    values of the flag the plan is one scan, one Exchange and one
+    MapInPandas — no union, explode (Generate), join or aggregate — and
+    an unsalted plan has no Exchange at all."""
     path = str(tmp_path / "pages")
     _mk(spark, [_page("u1", "Body", images=["one line"]),
                 _page("u2", "Plain")]).write.parquet(path)
@@ -176,6 +177,11 @@ def test_embedded_fusion_plan_has_no_join_or_aggregate(spark, protos_bc,
                                           salt_partitions=4,
                                           embedded_images=flag))
         assert sum("Exchange" in n for n in names) == 1, names
-        assert names.count("MapInPandas") == 2, names
-        assert not [n for n in names if "Join" in n or "Aggregate" in n
-                    or "Generate" in n], names
+        assert names.count("MapInPandas") == 1, names
+        assert names.count("Scan parquet") == 1, names
+        assert not [n for n in names if "Union" in n or "Join" in n
+                    or "Aggregate" in n or "Generate" in n], names
+    names = _plan_nodes(extract_pages(pages, protos_bc,
+                                      salt_partitions=None))
+    assert not [n for n in names if "Exchange" in n], names
+    assert names.count("MapInPandas") == 1, names

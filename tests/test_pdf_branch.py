@@ -358,15 +358,14 @@ def test_aes_known_answer_and_encrypted_pdf():
     assert extract_pdf_text(blob) == "AES locked page\nsecond line"
 
 
-def test_dom_pdf_branch_matches_direct_extractors(spark):
-    """The combined non-image stage must emit, per row, exactly what
-    strip_html / extract_pdf_text return when called directly (urls,
-    texts, n_chars, ok, error) with the right branch labels — healthy
-    HTML, gzip HTML, healthy PDF, corrupt PDF."""
+def test_dom_pdf_branch_matches_direct_extractors(spark, protos_bc):
+    """Born-digital rows of the fused stage must emit, per row, exactly
+    what strip_html / extract_pdf_text return when called directly
+    (urls, texts, n_chars, ok, error) with the right branch labels —
+    healthy HTML, gzip HTML, healthy PDF, corrupt PDF."""
     import zlib
 
     from effocr_spark.functions.domstrip import strip_html
-    from effocr_spark.operators.extract import dom_pdf_branch
     from effocr_spark.synth.pdfgen import make_encrypted_pdf
 
     html = b"<html><body><p>plain paragraph text here</p></body></html>"
@@ -379,10 +378,11 @@ def test_dom_pdf_branch_matches_direct_extractors(spark):
                .replace(b"/CFM /AESV2", b"/CFM /AESV3"))
     rows = [("u://dom", html), ("u://gz", gzipped),
             ("u://pdf", pdf_ok), ("u://bad", pdf_bad)]
-    df = spark.createDataFrame([(u, bytearray(b)) for u, b in rows],
-                               "url string, html binary")
+    df = spark.createDataFrame([(u, bytearray(b), "en") for u, b in rows],
+                               "url string, html binary, lang string")
 
-    combined = {r["url"]: tuple(r) for r in dom_pdf_branch(df).collect()}
+    combined = {r["url"]: tuple(r)
+                for r in extract_pages(df, protos_bc).collect()}
     direct = {}
     for url, blob in rows:
         if not is_pdf(blob):

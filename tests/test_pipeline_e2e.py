@@ -79,3 +79,37 @@ def test_quarantine_not_crash(spark, protos_bc):
     assert res[0]["ok"] is False
     assert res[0]["extracted_text"] is None
     assert "localize" in res[0]["error"]
+
+
+def test_lang_without_prototype_bank_quarantines_row(spark, protos_bc):
+    """An image page whose lang has no prototype bank ('de', NULL) is
+    quarantined in the stage (ok=false, the lang named in the error)
+    while a healthy HTML row of the same job comes out exact; a
+    born-digital row in such a lang keeps its text layer and drops its
+    embedded image."""
+    import base64
+
+    from effocr_spark.synth.font import render_line
+    from effocr_spark.synth.imgcodec import encode_png
+
+    png = encode_png(render_line("hello world")[0])
+    html = b"<html><body><p>plain paragraph text here</p></body></html>"
+    with_img = html.replace(b"</p>", b"</p><img src='data:image/png;base64,"
+                            + base64.b64encode(png) + b"'>")
+    df = spark.createDataFrame(
+        [("u://html", bytearray(html), "en"),
+         ("u://de", bytearray(png), "de"),
+         ("u://null", bytearray(png), None),
+         ("u://de-img", bytearray(with_img), "de")],
+        "url string, html binary, lang string")
+    got = {r["url"]: r for r in pipeline.extract_pages(
+        df, protos_bc, embedded_images=True).collect()}
+    assert tuple(got["u://html"]) == ("u://html", strip_html(html), 0, True,
+                                      None, "dom")
+    assert tuple(got["u://de-img"]) == ("u://de-img", strip_html(with_img),
+                                        0, True, None, "dom")
+    for url, lang in (("u://de", "'de'"), ("u://null", "None")):
+        r = got[url]
+        assert (r["extracted_text"], r["n_chars"], r["ok"], r["branch"]) \
+            == (None, 0, False, "ocr")
+        assert r["error"] == f"recognize: no prototype bank for lang {lang}"

@@ -21,6 +21,7 @@ class _FakeBC:
 def _run_udf(prototypes, rows, **kw):
     fn = make_ocr_map_fn(_FakeBC(prototypes), **kw)
     pdf = pd.DataFrame(rows, columns=["url", "html", "lang"])
+    pdf["image_page"], pdf["has_images"] = True, False
     out = {}
     for res in fn(iter([pdf])):
         for _, r in res.iterrows():
