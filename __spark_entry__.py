@@ -540,19 +540,12 @@ def q_pq_topk(spark, sf_dir):
     """Product quantization ADC top-k — the OTHER half of the
     production IVF-PQ ANN stack (operators/similarity.py): driver-side
     codebook training on a bounded deterministic sample (the FAISS
-    shape), map-only encode to m-byte codes MATERIALIZED once
-    (pq_materialize — codes parquet + codebook sidecar), then search
-    scans the codes table ONLY: query LUT folded into the plan as a
-    literal, distance = m JVM array lookups per row +
-    TakeOrderedAndProject; the original vectors never appear in the
-    search plan. Golden-pinned (k-means codebooks aren't
-    SQL-expressible)."""
-    import os
-    import tempfile
-
-    from effocr_spark.operators.similarity import (pq_materialize,
-                                                   pq_topk_pruned,
-                                                   pq_train,
+    shape), then ONE in-query plan (pq_topk): scan → map-only encode
+    to m-byte codes → query LUT folded into the plan as a literal,
+    distance = m JVM array lookups per row → TakeOrderedAndProject.
+    No exchange, and nothing is written to disk. Golden-pinned
+    (k-means codebooks aren't SQL-expressible)."""
+    from effocr_spark.operators.similarity import (pq_topk, pq_train,
                                                    pq_train_array)
 
     import numpy as np
@@ -580,13 +573,8 @@ def q_pq_topk(spark, sf_dir):
         # driver: the Spark TakeOrdered sample path (identical result)
         books = pq_train(emb, "embedding", m=8, k=32, sample=500)
     qvec = _emb_vec(sf_dir, 3)
-    # per-invocation index dir (mkdtemp): a fixed shared path raced
-    # between concurrent harness runs — one run's overwrite could
-    # delete parquet files mid-scan of the other's search (r6 ADVICE)
-    path = os.path.join(tempfile.mkdtemp(prefix="effocr_pq_"), "index")
-    pq_materialize(emb.filter(F.col("vec_id") != 3), "embedding",
-                   "vec_id", path, books)
-    return pq_topk_pruned(spark, path, qvec, topk=10, id_col="vec_id")
+    return pq_topk(emb.filter(F.col("vec_id") != 3), "embedding",
+                   "vec_id", books, qvec, topk=10)
 
 
 def q_ivf_topk(spark, sf_dir):

@@ -191,11 +191,18 @@ def knn_topk(embeddings: np.ndarray, prototypes: np.ndarray,
     the k=8 nearest OTHER prototypes
     (/root/reference/train_effocr_recognizer.py:25-44) — that is
     `exclude_self=True` over the square self-similarity (requires B==K;
-    row i's own column is masked to -inf before ranking)."""
+    row i's own column is masked to -inf before ranking).
+
+    Bit-equal prototype rows are collapsed before the GEMM and their
+    score columns re-expanded in index order, so identical prototypes
+    tie exactly on any BLAS (a GEMM may round two identical columns
+    differently, which would make "ties → lowest index" host-dependent).
+    """
     if embeddings.shape[0] == 0:
         return (np.zeros((0, k), dtype=np.int64),
                 np.zeros((0, k), dtype=np.float32))
-    sims = embeddings @ prototypes.T
+    uniq, inv = np.unique(prototypes, axis=0, return_inverse=True)
+    sims = (embeddings @ uniq.T)[:, inv.ravel()]
     if exclude_self:
         if sims.shape[0] != sims.shape[1]:
             raise ValueError("exclude_self requires queries == prototypes")

@@ -13,8 +13,6 @@ bucket join instead of a cross join.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
@@ -284,11 +282,8 @@ def ivf_centroids(df: DataFrame, vec_col: str, id_col: str,
                        F.col(vec_col).alias("centroid"))
              .orderBy("cell").limit(n_cells))
     for _ in range(refine):
-        assigned = _assign_to(df, vec_col, id_col, cents)
-        dims = (df.select(id_col, vec_col)
-                .join(assigned.select(id_col, "cell"), id_col)
-                .select("cell", F.posexplode(F.col(vec_col))
-                        .alias("pos", "v")))
+        dims = _assign_to(df, vec_col, id_col, cents).select(
+            "cell", F.posexplode(F.col(vec_col)).alias("pos", "v"))
         means = (dims.groupBy("cell", "pos").agg(F.avg("v").alias("m"))
                  .groupBy("cell")
                  .agg(F.array_sort(F.collect_list(
@@ -305,17 +300,24 @@ def ivf_centroids(df: DataFrame, vec_col: str, id_col: str,
 def _assign_to(df: DataFrame, vec_col: str, id_col: str,
                cents: DataFrame) -> DataFrame:
     """Assign every vector to its best cell given a centroid table:
-    broadcast crossJoin + map-side max(struct) argmax (no window)."""
+    broadcast crossJoin + map-side max(struct) argmax (no window).
+    → (id, cell, cell_score, vec). The vector rides through the
+    aggregate as first() over the crossJoin replicas of the same row
+    (ids are unique), so no caller joins the assignment back to df —
+    that would be a second scan of df plus an exchange of both sides
+    on id. Callers that drop the vector get the first() pruned."""
     scored = (df.select(id_col, vec_col)
               .crossJoin(F.broadcast(cents))
               .withColumn("score",
                           cosine(F.col(vec_col), F.col("centroid"))))
-    best = scored.groupBy(id_col).agg(F.max(F.struct(
-        F.col("score").alias("s"),
-        (-F.col("cell")).alias("neg_cell"),
-        F.col("cell").alias("cell"))).alias("m"))
+    best = scored.groupBy(id_col).agg(
+        F.max(F.struct(
+            F.col("score").alias("s"),
+            (-F.col("cell")).alias("neg_cell"),
+            F.col("cell").alias("cell"))).alias("m"),
+        F.first(vec_col).alias(vec_col))
     return best.select(id_col, F.col("m.cell").alias("cell"),
-                       F.col("m.s").alias("cell_score"))
+                       F.col("m.s").alias("cell_score"), vec_col)
 
 
 def ivf_assign(df: DataFrame, vec_col: str, id_col: str,
@@ -328,7 +330,8 @@ def ivf_assign(df: DataFrame, vec_col: str, id_col: str,
     the map-side max(struct) argmax, same shape as centroid_knn_join:
     shuffle rows = n_vectors, no window sort."""
     cents = ivf_centroids(df, vec_col, id_col, n_cells, refine)
-    return _assign_to(df, vec_col, id_col, cents)
+    return _assign_to(df, vec_col, id_col, cents).select(
+        id_col, "cell", "cell_score")
 
 
 def _pyfold_cosine(a, b) -> float:
@@ -359,11 +362,11 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_vec,
     top-k (recall < 1 by design when the true neighbor lives in an
     unprobed cell — that's the accuracy/cost dial).
 
-    At 100 TB the assignment is precomputed once and the vector table
-    is PARTITIONED BY cell, so the probe filter becomes partition
-    pruning: the scan touches nprobe/n_cells of the files before any
-    vector math — the same pruning hidden partitioning gives the
-    extraction branches (see ivf_materialize).
+    One in-query plan; nothing is written to disk. A persisted
+    cell-partitioned index (probe = partition pruning) pays only for a
+    caller that reuses it across queries: built per call, the
+    centroids and the assignment still scan the table and the write
+    adds a job.
 
     The n_cells centroid rows are collected ONCE (one TakeOrdered job)
     and fed back as a literal local relation for both consumers: the
@@ -408,71 +411,10 @@ def ivf_topk(df: DataFrame, vec_col: str, id_col: str, query_vec,
 
         def probe(cand: DataFrame) -> DataFrame:
             return cand.join(F.broadcast(probed), "cell")
-    # assignment WITHOUT a join back to df: the argmax aggregate
-    # carries the vector through (first() over the crossJoin replicas
-    # of the same row — deterministic by construction), so there is no
-    # `df ⋈ assign` id-equi-join (a second scan of df + an exchange of
-    # both sides on id); one exchange total before the top-k
-    scored = (df.select(id_col, vec_col)
-              .crossJoin(F.broadcast(cents))
-              .withColumn("score",
-                          cosine(F.col(vec_col), F.col("centroid"))))
-    best = scored.groupBy(id_col).agg(
-        F.max(F.struct(
-            F.col("score").alias("s"),
-            (-F.col("cell")).alias("neg_cell"),
-            F.col("cell").alias("cell"))).alias("m"),
-        F.first(vec_col).alias(vec_col))
-    cand = probe(best.select(F.col(id_col), F.col("m.cell").alias("cell"),
-                             F.col(vec_col)))
-    return (cand.select(F.col(id_col), F.col("cell"),
-                        cosine(F.col(vec_col), q).alias("score"))
-            .orderBy(F.desc("score"), F.col(id_col)).limit(k))
-
-
-def ivf_materialize(df: DataFrame, vec_col: str, id_col: str,
-                    path: str, n_cells: int = 8, refine: int = 0,
-                    ) -> DataFrame:
-    """Materialize the IVF index as a cell-partitioned parquet table
-    (path/cell=<c>/...) plus its centroid sidecar (path/_centroids) —
-    the 100 TB layout where the probe filter becomes PARTITION
-    PRUNING: a query scans nprobe/n_cells of the FILES before any
-    vector math runs. This turns the plan-shape claim in ivf_topk's
-    docstring into an actual on-disk layout (pinned in tests via
-    PartitionFilters in the scan node). Assignment is the one
-    n_vectors-row shuffle; the centroid sidecar is n_cells rows."""
-    cents = ivf_centroids(df, vec_col, id_col, n_cells, refine)
-    assign = _assign_to(df, vec_col, id_col, cents)
-    (df.join(assign.select(id_col, "cell"), id_col)
-       .write.mode("overwrite").partitionBy("cell").parquet(path))
-    cents.write.mode("overwrite").parquet(path + "/_centroids")
-    spark = df.sparkSession
-    return spark.read.parquet(path)
-
-
-def ivf_topk_pruned(spark, path: str, vec_col: str, id_col: str,
-                    query_vec, k: int = 5, nprobe: int = 2
-                    ) -> DataFrame:
-    """IVF query over a materialized cell-partitioned index: rank the
-    sidecar centroids (driver-side, n_cells rows), then scan ONLY the
-    probed cells via an IN filter on the partition column — Catalyst
-    turns it into PartitionFilters, so unprobed cells' files are never
-    opened. Same result contract as ivf_topk at equal centroids."""
-    import numpy as np
-
-    q = _vec_lit(query_vec)
-    cents = spark.read.parquet(path + "/_centroids").collect()
-    qv = np.asarray(query_vec, np.float64)
-    qv /= max(float(np.linalg.norm(qv)), 1e-12)
-
-    def _score(c):
-        v = np.asarray(c["centroid"], np.float64)
-        return float(v @ qv / max(float(np.linalg.norm(v)), 1e-12))
-
-    probed = [c["cell"] for c in sorted(
-        cents, key=lambda c: (-_score(c), c["cell"]))[:nprobe]]
-    idx = spark.read.parquet(path)
-    cand = idx.filter(F.col("cell").isin(probed))
+    # one exchange total before the top-k: the assignment carries the
+    # vector, so there is no join back to df
+    cand = probe(_assign_to(df, vec_col, id_col, cents)
+                 .select(id_col, "cell", vec_col))
     return (cand.select(F.col(id_col), F.col("cell"),
                         cosine(F.col(vec_col), q).alias("score"))
             .orderBy(F.desc("score"), F.col(id_col)).limit(k))
@@ -553,8 +495,8 @@ def _adc_expr(lut: np.ndarray):
     """(m, k) query lookup table → the ADC column expression over a
     `codes` array column: adc = Σ_mi lut[mi][codes[mi]], spelled as a
     zip_with + aggregate over the LUT folded into the plan as a
-    literal — m JVM array lookups per row, zero shuffles, the scan
-    never touches the original vectors."""
+    literal — m JVM array lookups per row, zero shuffles, and the
+    distance never reads the original vectors."""
     m = lut.shape[0]
     lut_col = F.array(*[
         F.array(*[F.lit(float(v)) for v in lut[mi]])
@@ -576,134 +518,19 @@ def _query_lut(codebooks: np.ndarray, query_vec) -> np.ndarray:
     return lut
 
 
-def _write_codebook_sidecar(path: str, codebooks: np.ndarray) -> None:
-    """Codebook sidecar as a driver-side pyarrow parquet write: m×k
-    rows of bounded metadata — a Spark write job here costs a full
-    job submission (~0.2s) to move a few KB. Schema matches the old
-    Spark-written sidecar, so spark.read.parquet still works."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    m, k, _sub = codebooks.shape
-    tbl = pa.table({
-        "mi": pa.array([mi for mi in range(m) for _ in range(k)],
-                       pa.int32()),
-        "ki": pa.array([ki for _ in range(m) for ki in range(k)],
-                       pa.int32()),
-        "centroid": pa.array(
-            [[float(v) for v in codebooks[mi, ki]]
-             for mi in range(m) for ki in range(k)],
-            pa.list_(pa.float64())),
-    })
-    os.makedirs(path, exist_ok=True)
-    papq.write_table(tbl, os.path.join(path, "sidecar.parquet"))
-
-
-def pq_materialize(df: DataFrame, vec_col: str, id_col: str,
-                   path: str, codebooks: np.ndarray) -> DataFrame:
-    """Persist the PQ index: codes computed ONCE (the map-only encode
-    pass) written as parquet at `path`, plus the codebook sidecar
-    (path/_codebooks, m×k rows). The 100 TB layout: every query scans
-    the m-bytes-per-row codes table only — pq_topk's per-query
-    re-encode becomes a one-time compression job (the ivf_materialize
-    pattern one block up). Returns the reloaded codes table."""
-    enc = pq_encode(df, vec_col, id_col, codebooks)
-    enc.write.mode("overwrite").parquet(path)
-    _write_codebook_sidecar(path + "/_codebooks", codebooks)
-    return df.sparkSession.read.parquet(path)
-
-
-def _load_codebooks(spark, path: str) -> np.ndarray:
-    """Codebook sidecar → (m, k, sub) array (m×k rows of bounded
-    metadata). Driver-side pyarrow read: a Spark collect job here is a
-    full job submission for a few KB; the sidecar directory may hold
-    either the pyarrow layout or an old Spark-written one — both are
-    plain parquet files."""
-    import glob
-
-    import pyarrow.parquet as papq
-
-    files = sorted(glob.glob(os.path.join(path + "/_codebooks",
-                                          "*.parquet")))
-    tbl = papq.read_table(files)
-    mi = tbl["mi"].to_numpy()
-    ki = tbl["ki"].to_numpy()
-    cents = tbl["centroid"].to_pylist()
-    m, k, sub = int(mi.max()) + 1, int(ki.max()) + 1, len(cents[0])
-    books = np.empty((m, k, sub))
-    for a, b, c in zip(mi, ki, cents):
-        books[a, b] = c
-    return books
-
-
-def pq_topk_pruned(spark, path: str, query_vec, topk: int = 5,
-                   id_col: str = "vec_id") -> DataFrame:
-    """ADC top-k over a MATERIALIZED PQ index: load the codebook
-    sidecar, build the query LUT, scan the codes table only (no
-    original vectors anywhere in the plan) + TakeOrderedAndProject.
-    Same result contract as pq_topk at equal codebooks."""
-    lut = _query_lut(_load_codebooks(spark, path), query_vec)
-    codes = spark.read.parquet(path)
-    return (codes.withColumn("adc_dist", _adc_expr(lut))
-            .select(id_col, F.round("adc_dist", 6).alias("adc_dist"))
-            .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-            .limit(topk))
-
-
-def ivfpq_materialize(df: DataFrame, vec_col: str, id_col: str,
-                      path: str, codebooks: np.ndarray,
-                      n_cells: int = 8, refine: int = 0) -> DataFrame:
-    """The FULL materialized IVF-PQ index — the production ANN layout:
-    PQ codes partitioned by IVF cell (path/cell=<c>/...), centroid
-    sidecar (path/_centroids) and codebook sidecar (path/_codebooks).
-    A query ranks centroids driver-side, PARTITION-PRUNES to nprobe
-    cells, and ADC-scans only those cells' codes — files outside the
-    probed cells are never opened and vectors are never read."""
-    cents = ivf_centroids(df, vec_col, id_col, n_cells, refine)
-    assign = _assign_to(df, vec_col, id_col, cents)
-    enc = pq_encode(df, vec_col, id_col, codebooks)
-    (enc.join(assign.select(id_col, "cell"), id_col)
-        .write.mode("overwrite").partitionBy("cell").parquet(path))
-    cents.write.mode("overwrite").parquet(path + "/_centroids")
-    _write_codebook_sidecar(path + "/_codebooks", codebooks)
-    return df.sparkSession.read.parquet(path)
-
-
-def ivfpq_topk_pruned(spark, path: str, query_vec, topk: int = 5,
-                      nprobe: int = 2, id_col: str = "vec_id"
-                      ) -> DataFrame:
-    """Query the materialized IVF-PQ index: rank sidecar centroids by
-    cosine (driver-side, n_cells rows), IN-filter the partition column
-    (→ PartitionFilters: unprobed cells' files never open), ADC over
-    the probed codes."""
-    cents = spark.read.parquet(path + "/_centroids").collect()
-    qv = np.asarray(query_vec, np.float64)
-    qn = qv / max(float(np.linalg.norm(qv)), 1e-12)
-
-    def _score(c):
-        v = np.asarray(c["centroid"], np.float64)
-        return float(v @ qn / max(float(np.linalg.norm(v)), 1e-12))
-
-    probed = [c["cell"] for c in sorted(
-        cents, key=lambda c: (-_score(c), c["cell"]))[:nprobe]]
-    lut = _query_lut(_load_codebooks(spark, path), query_vec)
-    codes = spark.read.parquet(path).filter(F.col("cell").isin(probed))
-    return (codes.withColumn("adc_dist", _adc_expr(lut))
-            .select(id_col, "cell",
-                    F.round("adc_dist", 6).alias("adc_dist"))
-            .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-            .limit(topk))
-
-
 def pq_topk(df: DataFrame, vec_col: str, id_col: str,
             codebooks: np.ndarray, query_vec, topk: int = 5
             ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: the query builds an (m, k)
     lookup table of exact subspace distances; each row's approximate
-    squared distance is a SUM OF m TABLE LOOKUPS over its codes — the
-    scan never touches the original vectors. JVM expression over the
-    encoded table + TakeOrderedAndProject; returns
-    (id, adc_dist) ascending."""
+    squared distance is a SUM OF m TABLE LOOKUPS over its codes.
+    Returns (id, adc_dist) ascending.
+
+    One in-query plan, no exchange: scan → map-only encode (one
+    mapInPandas) → ADC expression → TakeOrderedAndProject. The codes
+    are never persisted; a codes table written per call would add a
+    write job and a second scan, and pays only for a caller that
+    reuses it across queries."""
     lut = _query_lut(codebooks, query_vec)
     enc = pq_encode(df, vec_col, id_col, codebooks)
     # adc = Σ_mi lut[mi][codes[mi]]  (posexplode-free: aggregate over

@@ -75,6 +75,34 @@ def test_hard_negatives(spark, prototypes):
     assert rows == rows2
 
 
+def test_prototype_bank_duplicates_tie_lowest_index_first(prototypes):
+    """The synthetic font draws '('/')' and '?'/'/' as identical boxes,
+    so those en prototype rows are bit-equal — and they are the only
+    ones; a new glyph collision fails here instead of silently
+    reordering the hard_negatives golden. knn_topk scores each pair
+    from one GEMM column, so the pair ties exactly and ranks lowest
+    index first, adjacent, on any BLAS."""
+    from effocr_spark.functions.recognize import knn_topk
+
+    chars, protos = prototypes["en"]
+    _, inv = np.unique(protos, axis=0, return_inverse=True)
+    inv = inv.ravel()
+    groups = [np.flatnonzero(inv == g) for g in np.unique(inv)]
+    groups = [g for g in groups if len(g) > 1]
+    assert sorted(tuple(chars[i] for i in g) for g in groups) == \
+        [("(", ")"), ("?", "/")]
+
+    order, scores = knn_topk(protos, protos, k=len(chars),
+                             exclude_self=True)
+    for lo, hi in groups:
+        for i in range(len(chars)):
+            if i in (lo, hi):
+                continue
+            pos = list(order[i])
+            assert pos.index(hi) == pos.index(lo) + 1, chars[i]
+            assert scores[i][pos.index(lo)] == scores[i][pos.index(hi)]
+
+
 def test_quarantined_page_excluded(spark, fixtures):
     texts, images, annos = fixtures
     ds = build_recognizer_dataset(spark, images, annos, "a")
