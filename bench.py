@@ -221,13 +221,14 @@ def bench_roofline() -> dict | None:
 
 
 def main() -> None:
-    from effocr_spark.session import get_spark
+    from effocr_spark.session import get_spark, warm_for_queries
     import __spark_entry__ as entrymod
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     results_q: dict[str, float] = {}
 
     spark = get_spark("bench", cpus=CPUS)
+    warm_for_queries(spark, CPUS)
     qs = entrymod.queries()
     # Methodology: the first query on a fresh JVM absorbs ~5s of one-time
     # JIT + parquet-footer costs. We record that COLD first-query number

@@ -53,11 +53,12 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true")
     args = ap.parse_args()
 
-    from effocr_spark.session import get_spark
+    from effocr_spark.session import get_spark, warm_for_queries
     import __spark_entry__ as entrymod
 
     names = args.queries.split(",") if args.queries else HEADLINE
     spark = get_spark("bench_extra", cpus=CPUS)
+    warm_for_queries(spark, CPUS)
     qs = entrymod.queries()
 
     # warm exactly like bench.py

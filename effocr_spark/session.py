@@ -6,6 +6,10 @@ Settings chosen for the 100 TB design point (see SURVEY.md §4):
    reference's fixed 64-crop batching, infer_effocr_onnx_multi.py:143-158)
  - shuffle partitions sized to cores locally; on a real cluster this is
    set to ~2-3x total executor cores via spark-submit conf
+
+`get_spark` submits no job. A harness that times individual queries
+calls `warm_for_queries` once, right after it, so one-time session
+costs stay out of its timed regions.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ ARROW_MAX_RECORDS = 256
 
 def get_spark(app_name: str = "effocr_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """Build (or reuse) the session. Submits no job: the first action
+    pays the JVM's first-action cost and starts the Python workers."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -68,68 +74,39 @@ def get_spark(app_name: str = "effocr_spark", cpus: int | None = None,
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    spark = builder.getOrCreate()
-    _warm_python_workers(spark, cpus)
-    _warm_expression_codegen(spark)
-    return spark
+    return builder.getOrCreate()
 
 
-def _warm_expression_codegen(spark: SparkSession) -> None:
-    """One-row warmup of the whole-stage-codegen machinery for the
-    string/array expression families the queries use.
+def warm_for_queries(spark: SparkSession, cpus: int) -> None:
+    """Pay a session's one-time costs before any query is timed: one
+    Python worker per core with the UDF modules imported, then one row
+    through whole-stage codegen for the string/array expression
+    families the queries use.
 
-    Measured (local[32]): the FIRST non-trivial generated class a
-    session compiles pays ~1.5-2s of one-time Janino/JIT warmup — a
-    `split+array_intersect` projection costs 2.07s cold and an even
-    bigger four-intersect projection 0.26s immediately after. That
-    cost is a property of the JVM session, not of any query; without
-    this warmup it lands on whichever timed query happens to compile
-    the first complex expression. One row through the machinery at
-    session creation moves it to startup, where the bench's own
-    methodology already excludes one-time costs."""
-    if getattr(spark, "_effocr_codegen_warm", False):
-        return
-    if os.environ.get("EFFOCR_NO_WORKER_WARMUP"):
-        return
+    Called once per session by the query harnesses (`bench.py`,
+    `bench_extra.py`), right after `get_spark` and before their first
+    query, so these costs land in no query's timing. Extraction skips
+    it: `extract_pages` uses none of those expressions and never
+    imports `operators.multimodal`, and every extraction caller runs a
+    warm pass of its own. On 4 vCPUs at `local[3]`, running both in
+    every session took perfbench's born_digital setup from 8.3 s to
+    18.3 s (medians of 10 runs). A session that skips them pays ~6.5 s
+    of it back in its first pass (first planning, Python worker start),
+    so its time to first output drops only from 20.5 s to 19.1 s.
+
+    - Workers: a cold worker pays fork + pandas/pyarrow imports +
+      importing the effocr_spark UDF modules, so the first wide Python
+      stage of a session pays a fleet cold start (~2.5-3 s at
+      local[32]); the reused worker pool (spark.python.worker.reuse,
+      default on) keeps the fleet warm for the session's lifetime.
+    - Codegen: the first non-trivial generated class a session
+      compiles pays ~1.5-2 s of one-time Janino/JIT warm-up (local[32]:
+      a `split+array_intersect` projection costs 2.07 s cold, a bigger
+      four-intersect one 0.26 s right after), which would otherwise
+      land on whichever timed query compiles first.
+
+    Best-effort: a failure never blocks the caller."""
     from pyspark.sql import functions as F
-
-    try:
-        toks = F.split(F.lower(F.lit("warm up row")), " ")
-        arr = F.array(F.lit(1.0), F.lit(2.0))
-        # collect(), NOT count(): count lets the optimizer prune the
-        # projection away and nothing compiles (guide §1.4)
-        (spark.range(1).select(
-            F.size(F.array_intersect(toks, F.array(F.lit("warm")))).alias("a"),
-            F.lit("x").rlike("[a-z]").alias("b"),
-            F.md5(F.concat_ws("|", toks)).alias("c"),
-            F.aggregate(F.zip_with(arr, arr, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x).alias("d"),
-            F.levenshtein(F.lit("ab"), F.lit("ba")).alias("e"),
-        ).collect())
-    except Exception:
-        pass  # warmup is best-effort
-    spark._effocr_codegen_warm = True
-
-
-def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
-    """Pre-warm the Python worker fleet once per session: one trivial
-    Arrow-batched task per core, with the heavy pipeline imports done
-    inside the worker.
-
-    Rationale (measured, local[32]): a cold worker pays ~0.5s of
-    fork + pandas/pyarrow imports + ~0.5s importing the effocr_spark
-    UDF modules; the FIRST wide Python stage of a session therefore
-    pays a ~2.5-3s fleet cold-start that has nothing to do with the
-    query being timed. On a real cluster this is the per-executor
-    warmup every deployment does at startup (the reference loads its
-    ONNX sessions before serving, localizer_engine.py:25-29); locally
-    the reused worker pool (spark.python.worker.reuse, default on)
-    keeps the fleet warm for the session's lifetime. Skippable via
-    EFFOCR_NO_WORKER_WARMUP=1 (e.g. for cold-start experiments)."""
-    if getattr(spark, "_effocr_workers_warm", False):
-        return
-    if os.environ.get("EFFOCR_NO_WORKER_WARMUP"):
-        return
 
     def _warm(it):
         # the imports ARE the warmup: every UDF module the pipeline
@@ -145,5 +122,19 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
          .mapInPandas(_warm, "id long").count())
         spark.sparkContext.setJobDescription(None)
     except Exception:
-        pass  # warmup is best-effort; never block session creation
-    spark._effocr_workers_warm = True
+        pass
+    try:
+        toks = F.split(F.lower(F.lit("warm up row")), " ")
+        arr = F.array(F.lit(1.0), F.lit(2.0))
+        # collect(), NOT count(): count lets the optimizer prune the
+        # projection away and nothing compiles (guide §1.4)
+        (spark.range(1).select(
+            F.size(F.array_intersect(toks, F.array(F.lit("warm")))).alias("a"),
+            F.lit("x").rlike("[a-z]").alias("b"),
+            F.md5(F.concat_ws("|", toks)).alias("c"),
+            F.aggregate(F.zip_with(arr, arr, lambda x, y: x * y),
+                        F.lit(0.0), lambda acc, x: acc + x).alias("d"),
+            F.levenshtein(F.lit("ab"), F.lit("ba")).alias("e"),
+        ).collect())
+    except Exception:
+        pass

@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from effocr_spark.session import get_spark  # noqa: E402
 

@@ -1,18 +1,21 @@
 """Local replica of the driver's correctness gate: run every queries()
-entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare
-row-count + column names + order-insensitive values.
+entry on Spark and its oracle_sql() on DuckDB at one scale factor
+(default sf0.01), compare row-count + column names +
+order-insensitive values.
 
-Usage: python tools/check_queries.py [names...]
+Usage: python tools/check_queries.py [--sf {0.001,0.01,0.1}] [names...]
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from effocr_spark.session import get_spark  # noqa: E402
@@ -42,21 +45,28 @@ def canon(rows, cols):
 
 
 def main():
-    names = sys.argv[1:] or None
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf", choices=("0.001", "0.01", "0.1"), default="0.01")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    names = args.names or None
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), f"sf{args.sf}")
     spark = get_spark("check", cpus=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if names and name not in names:
             continue
+        checked += 1
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:
@@ -90,6 +100,7 @@ def main():
             continue
         print(f"ok    {name}: {len(srows)} rows match")
     print()
+    print(f"{checked - len(failures)}/{checked} ok at sf{args.sf}")
     if failures:
         print("FAILURES:", failures)
         sys.exit(1)

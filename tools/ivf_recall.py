@@ -19,11 +19,12 @@ Usage: python tools/ivf_recall.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from effocr_spark.operators.similarity import (ivf_assign,  # noqa: E402
                                                ivf_centroids)

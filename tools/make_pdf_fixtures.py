@@ -8,9 +8,10 @@ Usage: python tools/make_pdf_fixtures.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from effocr_spark.synth.pdf_fixture_set import (  # noqa: E402
     FIXTURE_DIR, fixture_filename, generate_fixtures)

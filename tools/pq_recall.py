@@ -9,11 +9,12 @@ Usage: python tools/pq_recall.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from effocr_spark.operators.similarity import pq_topk, pq_train  # noqa: E402
 from effocr_spark.session import get_spark  # noqa: E402
