@@ -20,6 +20,10 @@ lineage.py  per-partition checkpoint / metrics / resume
 oracle.py   plain-Python loop-based reimplementation of the reference
             inference dataflow (infer_effocr_onnx_multi.py:227-397),
             used as the pinned golden oracle in tests
+zipcache.py imported here: a Python worker that has run any
+            effocr_spark function stops re-reading pyspark.zip per task
 """
+
+from effocr_spark import zipcache  # noqa: F401
 
 __version__ = "0.1.0"

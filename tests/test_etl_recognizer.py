@@ -1,6 +1,8 @@
 """Recognizer-dataset ETL: crops labeled in reading order, arity
 quarantine, render union (format_effocr_recognizer_dataset.py parity)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -8,6 +10,8 @@ from pyspark.sql import functions as F
 from effocr_spark.operators.etl_recognizer import build_recognizer_dataset
 from effocr_spark.synth.font import glyph_bitmap, glyph_metrics, render_line
 from effocr_spark.synth.imgcodec import decode_png, encode_png
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -119,7 +123,7 @@ def test_charset_tab_file_source(spark, tmp_path):
         harmonize_charset, load_charset, save_charset)
     from effocr_spark.synth.font import EN_CHARSET
 
-    chars = load_charset(spark, "/root/repo/data/charset_en.txt")
+    chars = load_charset(spark, os.path.join(ROOT, "data", "charset_en.txt"))
     assert chars == sorted(set(EN_CHARSET))
 
     # multiple files union; multi-field lines keep the LAST field

@@ -4,6 +4,7 @@ mixed Common-Crawl partition. Every row must land in the right branch
 with the right text; quarantines must stay row-local."""
 
 import base64
+import os
 
 import numpy as np
 
@@ -17,6 +18,9 @@ from effocr_spark.synth.pdfgen import (encrypt_pdf, make_cid_pdf,
                                        make_fax_pdf, make_jbig2_pdf,
                                        make_pdf, make_scanned_pdf)
 
+FREQ_DICT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "data", "frequency_dict_en_full.txt")
 VOCAB = ["the", "quick", "brown", "fox", "county", "market", "price"]
 
 
@@ -85,7 +89,7 @@ def test_everything_in_one_call(spark):
     out = {r["url"]: r for r in extract_pages(
         df, protos, salt_partitions=8, embedded_images=True,
         word_silver=0.95, spell_check=True,
-        freq_dict="/root/repo/data/frequency_dict_en_full.txt").collect()}
+        freq_dict=FREQ_DICT).collect()}
 
     assert len(out) == len(rows)
     assert out["png://0"]["branch"] == "ocr" and out["png://0"]["ok"]

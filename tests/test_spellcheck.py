@@ -1,6 +1,8 @@
 """Visual spell checker goldens
 (reference: /root/reference/utils/spell_check_utils.py:98-245)."""
 
+import os
+
 from effocr_spark.functions.spellcheck import (
     create_common_abbrev,
     create_homoglyph_dict,
@@ -12,6 +14,8 @@ from effocr_spark.functions.spellcheck import (
     visual_spell_checker,
 )
 
+DATA = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    "data")
 WD = create_worddict()
 SD = create_homoglyph_dict()
 AB = create_common_abbrev()
@@ -66,7 +70,7 @@ def test_frequency_dictionary_file_ingestion(spark, tmp_path):
     from effocr_spark.functions.spellcheck import (
         _EMBEDDED_FREQS, create_worddict, load_frequency_dictionary)
 
-    path = "/root/repo/data/frequency_dict_en.txt"
+    path = os.path.join(DATA, "frequency_dict_en.txt")
     via_spark = load_frequency_dictionary(path, spark=spark)
     via_python = load_frequency_dictionary(path)
     assert via_spark == _EMBEDDED_FREQS
@@ -90,7 +94,7 @@ def test_full_scale_frequency_dictionary(spark):
         create_common_abbrev, create_homoglyph_dict, create_worddict,
         visual_spell_checker)
 
-    path = "/root/repo/data/frequency_dict_en_full.txt"
+    path = os.path.join(DATA, "frequency_dict_en_full.txt")
     wd = create_worddict(freq_path=path, spark=spark)
     assert len(wd) > 10_000
     # Zipf shape: strictly non-increasing counts down the file
@@ -128,5 +132,6 @@ def test_pipeline_spellcheck_with_file_dict(spark):
     protos = broadcast_prototypes(spark)
     out = extract_pages(
         df, protos, spell_check=True,
-        freq_dict="/root/repo/data/frequency_dict_en_full.txt").collect()[0]
+        freq_dict=os.path.join(DATA, "frequency_dict_en_full.txt"),
+    ).collect()[0]
     assert out["ok"] and out["extracted_text"] == text

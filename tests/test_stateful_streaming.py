@@ -2,11 +2,12 @@
 operator must agree with the batch cumulative-window spelling, and its
 state must persist across micro-batches via the checkpoint."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _batch_sessions(spark, events_path):

@@ -5,6 +5,7 @@ enumeration parity with the reference's fontTools flow
 (format_effocr_recognizer_dataset.py:188-192) plus structural
 validation and the ETL coverage gate."""
 
+import os
 import struct
 
 import pytest
@@ -13,7 +14,8 @@ from effocr_spark.functions.ttf import (
     font_covered_charset, get_unicode_coverage_from_ttf, parse_cmap,
     read_table_directory)
 
-FONT = "/root/repo/data/tiny_font.ttf"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FONT = os.path.join(ROOT, "data", "tiny_font.ttf")
 
 
 def _font_bytes() -> bytes:
@@ -25,7 +27,7 @@ def test_coverage_matches_writer_contract():
     """Every codepoint the writer mapped — and nothing else — comes
     back, as (codepoints, chars) in the reference's return shape."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from tools.make_tiny_font import CODEPOINTS
 
     cps, chars = get_unicode_coverage_from_ttf(FONT)
@@ -41,7 +43,7 @@ def test_glyph_id_array_segment_decodes():
     (non-contiguous gids); idDelta segments surround it. Both paths
     must agree with the writer's assignment."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from tools.make_tiny_font import CODEPOINTS, PUNCT, build_font
 
     mapping = parse_cmap(build_font())
@@ -88,8 +90,6 @@ def test_malformed_fonts_raise_cleanly():
     with pytest.raises(ValueError):
         parse_cmap(data[:40])  # truncated table directory
     # a font with no cmap table
-    import sys
-    sys.path.insert(0, "/root/repo")
     with pytest.raises(ValueError, match="cmap"):
         parse_cmap(data.replace(b"cmap", b"cmxp", 1))
 
