@@ -1075,7 +1075,7 @@ def q_jpeg_features(spark, sf_dir):
 
 def q_coco_sink_roundtrip(spark, sf_dir):
     """K2 end-to-end through the REAL pipeline: extraction → span
-    emission (ocr_spans_branch) → COCO JSONL serialization
+    emission (extract_pages(emit_boxes=True)) → COCO JSONL serialization
     (coco_json_lines) → parse back → per-image invariants. Ids are
     partitioning-dependent (monotonically_increasing_id) so the check
     keys on content: per url, the annotation count, the char stream in
@@ -1083,12 +1083,13 @@ def q_coco_sink_roundtrip(spark, sf_dir):
     (the reference's own writer-loop assert, infer_effocr.py:557).
     Golden-pinned."""
     from effocr_spark.operators.coco_sink import coco_json_lines, extraction_spans
-    from effocr_spark.operators.extract import is_image_page, ocr_spans_branch
+    from effocr_spark.operators.extract import is_image_page
+    from effocr_spark.pipeline import extract_pages
     from effocr_spark.synth.pages import pages_df
 
     pages, _ = pages_df(spark, 60, seed=42)
-    res = ocr_spans_branch(pages.filter(is_image_page(F.col("html"))),
-                           _protos_bc(spark))
+    res = extract_pages(pages.filter(is_image_page(F.col("html"))),
+                        _protos_bc(spark), emit_boxes=True)
     lines = coco_json_lines(extraction_spans(res))
     schema = ("image struct<file_name:string, height:int, width:int, "
               "id:long, text:string>, "
@@ -1227,7 +1228,7 @@ def q_spellcheck_filedict(spark, sf_dir):
     frequency file loads through the S5 ingestion path
     (load_frequency_dictionary → spark.read.text, the
     frequency_dictionary_en_82_765.txt analog of
-    /root/reference/utils/spell_check_utils.py:14-23), is broadcast
+    utils/spell_check_utils.py:14-23), is broadcast
     driver-side (a few MB — a broadcast variable, never a join side),
     and the homoglyph beam checker restores JVM-injected l→1 OCR
     corruptions against it. Golden-pinned (Python kernel)."""

@@ -2,8 +2,11 @@
 capabilities of dell-research-harvard/effocr as a distributed
 content-extraction engine over Common-Crawl-style page tables.
 
-Reference semantics are documented in SURVEY.md with file:line citations
-into /root/reference. This package is NOT a port: the reference is a
+Reference semantics are documented in SURVEY.md. Every `file:line`
+citation in this package's docstrings is a path in
+dell-research-harvard/effocr, laid out as SURVEY.md's "Reference layout"
+table shows (e.g. infer_effocr_onnx_multi.py:496-505,
+utils/coco_utils.py:12-27). This package is NOT a port: the reference is a
 single-node PyTorch/ONNX script collection; this engine expresses the same
 dataflow as Spark DataFrames + vectorized Arrow/pandas UDFs.
 

@@ -2,7 +2,7 @@
 space insertion, anchor-based casing correction.
 
 Faithful NumPy reimplementation of the reference's en/jp pre/postprocess
-(/root/reference/infer_effocr_onnx_multi.py:70-140), including its edge
+(infer_effocr_onnx_multi.py:70-140), including its edge
 quirks (carry-forward closest_idx when a word has no qualifying char;
 None output when a line has chars but no word boxes). The plain-Python
 oracle (effocr_spark.oracle) transliterates the same reference lines

@@ -1,9 +1,9 @@
 """Box geometry + NMS kernels (vectorized NumPy).
 
 Faithful reimplementation of the reference's YOLO postprocess semantics —
-xywh→xyxy (/root/reference/onnx_engines/localizer_engine.py:140-148),
+xywh→xyxy (onnx_engines/localizer_engine.py:140-148),
 pairwise IoU (:150-169), greedy class-offset NMS (:171-277), IoM
-(/root/reference/format_effocr_recognizer_dataset.py:44-81) — without
+(format_effocr_recognizer_dataset.py:44-81) — without
 torch/torchvision. Runs per-row inside pandas UDFs; no Spark imports here.
 """
 

@@ -2,11 +2,11 @@
 
 Reimplements, in deterministic NumPy:
  - detector→image crop scale-back with full-height/width clip
-   ("double_clipped", /root/reference/infer_effocr_onnx_multi.py:307-322)
+   ("double_clipped", infer_effocr_onnx_multi.py:307-322)
  - MedianPad-to-square with override fill
-   (/root/reference/utils/datasets_utils.py:69-90)
+   (utils/datasets_utils.py:69-90)
  - the paired inference transform pad→tensor→resize(224)→ImageNet-normalize
-   (/root/reference/utils/datasets_utils.py:166-172); torchvision's
+   (utils/datasets_utils.py:166-172); torchvision's
    bilinear Resize is replaced by a deterministic nearest-neighbor resize
    (exact reproducibility across partitionings beats interpolation
    fidelity here — the synthetic encoder is trained on the same resize)

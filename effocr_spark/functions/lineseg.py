@@ -55,11 +55,16 @@ def segment_columns(gray: np.ndarray) -> list[tuple[int, int]]:
 
 def column_strip_gray_triples(img: np.ndarray
                               ) -> list[tuple[np.ndarray, np.ndarray, int]]:
-    """column_strips_with_offsets plus each strip's GRAYSCALE twin,
-    sliced from ONE page-level channel-min pass instead of re-reducing
-    every strip downstream (the localizer head needs only the gray
-    plane; channel-min commutes with slicing and the 255 padding, so
-    the twin is bit-identical to `strip.min(axis=2)`)."""
+    """Vertical page (tategaki) → (column strip, gray strip, page
+    x-offset) triples in READING order (right-to-left), each ink
+    col-band padded with STRIP_MARGIN white columns — pixel-compatible
+    with single-column fixtures. strip-local x + offset = page x (the
+    offset accounts for the left padding).
+
+    The GRAYSCALE twin is sliced from ONE page-level channel-min pass
+    instead of re-reducing every strip downstream (the localizer head
+    needs only the gray plane; channel-min commutes with slicing and the
+    255 padding, so the twin is bit-identical to `strip.min(axis=2)`)."""
     gray = img.min(axis=2) if img.ndim == 3 else img
     strips = []
     h = img.shape[0]
@@ -76,19 +81,12 @@ def column_strip_gray_triples(img: np.ndarray
     return strips
 
 
-def column_strips_with_offsets(img: np.ndarray) -> list[tuple[np.ndarray, int]]:
-    """Vertical page (tategaki) → (column strip, page x-offset) pairs in
-    READING order (right-to-left), each ink col-band padded with
-    STRIP_MARGIN white columns — pixel-compatible with single-column
-    fixtures. strip-local x + offset = page x (the offset accounts for
-    the left padding)."""
-    return [(s, off) for s, _g, off in column_strip_gray_triples(img)]
-
-
 def line_strip_gray_triples(img: np.ndarray
                             ) -> list[tuple[np.ndarray, np.ndarray, int]]:
-    """line_strips_with_offsets plus each strip's GRAYSCALE twin — see
-    column_strip_gray_triples for the bit-parity argument."""
+    """Page (H x W [x3]) → (line strip, gray strip, page y-offset)
+    triples, each strip the ink band padded with STRIP_MARGIN white rows
+    top and bottom. strip-local y + offset = page y. See
+    column_strip_gray_triples for the gray twin's bit-parity argument."""
     gray = img.min(axis=2) if img.ndim == 3 else img
     strips = []
     w = img.shape[1]
@@ -105,18 +103,11 @@ def line_strip_gray_triples(img: np.ndarray
     return strips
 
 
-def line_strips_with_offsets(img: np.ndarray) -> list[tuple[np.ndarray, int]]:
-    """Page (H x W [x3]) → (line-strip image, page y-offset) pairs, each
-    strip the ink band padded with STRIP_MARGIN white rows top and
-    bottom. strip-local y + offset = page y."""
-    return [(s, off) for s, _g, off in line_strip_gray_triples(img)]
-
-
 def column_strips(img: np.ndarray) -> list[np.ndarray]:
-    """column_strips_with_offsets minus the offsets (oracle-shared API)."""
-    return [s for s, _ in column_strips_with_offsets(img)]
+    """The column strips alone (oracle-shared API)."""
+    return [s for s, _g, _off in column_strip_gray_triples(img)]
 
 
 def line_strips(img: np.ndarray) -> list[np.ndarray]:
-    """line_strips_with_offsets minus the offsets (oracle-shared API)."""
-    return [s for s, _ in line_strips_with_offsets(img)]
+    """The line strips alone (oracle-shared API)."""
+    return [s for s, _g, _off in line_strip_gray_triples(img)]

@@ -1,16 +1,16 @@
 """Recognition kernels: embedding, kNN lookup, prototype index build.
 
  - `embed_crops`: transform + encoder + L2-normalize
-   (/root/reference/infer_effocr_onnx_multi.py:327-371 semantics, minus
+   (infer_effocr_onnx_multi.py:327-371 semantics, minus
    the thread pools — Arrow batches replace them)
  - `knn_lookup`: brute-force inner-product argmax against the prototype
    matrix — exact FAISS IndexFlatIP semantics, ties → lowest index
-   (/root/reference/infer_effocr_onnx_multi.py:372-375,496-505); the
+   (infer_effocr_onnx_multi.py:372-375,496-505); the
    prototype matrix is small (K chars × 64 floats), so at cluster scale it
    ships as a broadcast variable, never a join
  - `build_prototypes`: render each charset glyph alone and push it through
    the *identical* inference path, the analog of building ref.index from
-   NotoSerif renders (/root/reference/train_effocr_recognizer.py:47-62)
+   NotoSerif renders (train_effocr_recognizer.py:47-62)
 """
 
 from __future__ import annotations
@@ -160,23 +160,14 @@ def embed_crops(crops: list[np.ndarray | None],
     return (emb / norms).astype(np.float32)
 
 
-def ffnn_lookup(raw_embeddings: np.ndarray, class_matrix: np.ndarray) -> np.ndarray:
-    """FFNN classifier head: argmax over linear logits
-    (infer_effocr.py:325-333; class_map semantics :214-218). The
-    synthetic head's weight matrix is the prototype matrix, so the
-    class_map is the prototype char list."""
-    if raw_embeddings.shape[0] == 0:
-        return np.zeros((0,), dtype=np.int64)
-    return np.argmax(raw_embeddings @ class_matrix.T, axis=1)
-
-
 def knn_lookup(embeddings: np.ndarray, prototypes: np.ndarray) -> np.ndarray:
     """[B,D] queries × [K,D] prototypes → [B] argmax indices (k=1 exact
     inner-product kNN; np.argmax tie-break = lowest index, matching FAISS
-    IndexFlatIP first-hit). The k>1 generalization is `knn_topk`."""
-    if embeddings.shape[0] == 0:
-        return np.zeros((0,), dtype=np.int64)
-    return np.argmax(embeddings @ prototypes.T, axis=1)
+    IndexFlatIP first-hit). The k>1 generalization is `knn_topk`.
+    On raw (un-normalized) embeddings the same argmax is the FFNN
+    classifier head over linear logits (infer_effocr.py:325-333): the
+    synthetic head's weight matrix is the prototype matrix."""
+    return knn_lookup_sim(embeddings, prototypes)[0]
 
 
 def knn_topk(embeddings: np.ndarray, prototypes: np.ndarray,
@@ -187,9 +178,9 @@ def knn_topk(embeddings: np.ndarray, prototypes: np.ndarray,
     (stable argsort of -sims — FAISS IndexFlatIP ordering).
 
     Reference analogs: the GPU path retrieves k=10 and uses the top hit
-    (/root/reference/infer_effocr.py:317-319); hard-negative mining takes
+    (infer_effocr.py:317-319); hard-negative mining takes
     the k=8 nearest OTHER prototypes
-    (/root/reference/train_effocr_recognizer.py:25-44) — that is
+    (train_effocr_recognizer.py:25-44) — that is
     `exclude_self=True` over the square self-similarity (requires B==K;
     row i's own column is masked to -inf before ranking).
 
@@ -302,11 +293,10 @@ def _word_prototype_crop(word: str) -> np.ndarray | None:
 
 
 def knn_lookup_sim(embeddings: np.ndarray, prototypes: np.ndarray):
-    """knn_lookup + the winning cosine similarity (both sides
-    L2-normalized, so the inner product IS the cosine): → (idx [B],
-    sim [B] float32). The word stream needs the score to gate silver
-    correction; the char stream's k=1 path stays score-free like the
-    reference."""
+    """knn_lookup + the winning score: → (idx [B], sim [B] float32).
+    With both sides L2-normalized the inner product IS the cosine; the
+    word stream needs it to gate silver correction. The one GEMM +
+    argmax behind both recognizer streams."""
     if embeddings.shape[0] == 0:
         return np.zeros((0,), np.int64), np.zeros((0,), np.float32)
     scores = embeddings @ prototypes.T

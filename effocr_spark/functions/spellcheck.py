@@ -1,6 +1,6 @@
 """Visual (homoglyph) spell checker — opt-in postprocess branch.
 
-Faithful reimplementation of /root/reference/utils/spell_check_utils.py:
+Faithful reimplementation of utils/spell_check_utils.py:
 homoglyph dict (:26-57), candidate beam substitution + max-frequency pick
 (:155-245), majority digit/alpha normalization (:98-119), interior
 lowercase (:122-132). The reference loads its word-frequency dictionary
@@ -74,7 +74,7 @@ def load_frequency_dictionary(path: str, spark=None) -> dict[str, int]:
     """symspellpy-format frequency dictionary: one `word count` per line,
     space- or tab-separated (the reference loads the bundled 82k-word
     frequency_dictionary_en_82_765.txt this way,
-    /root/reference/utils/spell_check_utils.py:14-23).
+    utils/spell_check_utils.py:14-23).
 
     With a SparkSession this is the S5 ingestion path (SURVEY §2.1):
     spark.read.csv → collect → dict, ready for sc.broadcast at cluster

@@ -1,7 +1,7 @@
 """Text evaluation kernels: string cleaning, edit distance, textline
 accuracy / CER / ICDAR2019 normalized edit distance.
 
-Faithful to /root/reference/utils/eval_utils.py:14-70 (string_cleaner +
+Faithful to utils/eval_utils.py:14-70 (string_cleaner +
 textline_evaluation) with NLTK's edit_distance replaced by a standard
 Wagner-Fischer implementation (identical semantics: unit costs, no
 transpositions). The Spark-side aggregate (operators/evalagg.py) computes

@@ -2,7 +2,7 @@
 
 The reference enumerates a font's unicode coverage with fontTools
 (`get_unicode_coverage_from_ttf`,
-/root/reference/format_effocr_recognizer_dataset.py:188-192: union of
+format_effocr_recognizer_dataset.py:188-192: union of
 `cmap.items()` over every cmap subtable) to decide which charset
 entries the glyph renderer can draw. fontTools is not in this
 container, so this is a from-scratch sfnt + cmap parser covering the

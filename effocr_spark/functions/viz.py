@@ -1,6 +1,6 @@
 """Localizer-output visualization: draw detected boxes onto the page
 image (the --output_localizer_results debug sink,
-/root/reference/infer_effocr_onnx_multi.py:292-305 — full-height/width
+infer_effocr_onnx_multi.py:292-305 — full-height/width
 clipped rectangles in the scaled-back coordinate frame)."""
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """COCO-JSON results sink (SURVEY §2.1 K2): predicted boxes + text →
 the reference's `inference_coco.json` document.
 
-Parity target: /root/reference/utils/coco_utils.py:3-45 (skeleton +
-entry builders) and /root/reference/infer_effocr.py:558-577 (the writer
+Parity target: utils/coco_utils.py:3-45 (skeleton +
+entry builders) and infer_effocr.py:558-577 (the writer
 loop: one image entry per page carrying the full transcription, one
 annotation entry per char box carrying its recognized text; categories =
 [{id: 0, name: "char"}]).
@@ -122,9 +122,9 @@ def write_coco_json(spans: DataFrame, path: str) -> None:
 
 
 def extraction_spans(result: DataFrame) -> DataFrame:
-    """Adapter: ocr_spans_branch output (url, extracted_text, width,
-    height, boxes array<[x,y,w,h]>, chars array<string>) → the spans
-    contract above.
+    """Adapter: extract_pages(emit_boxes=True) output (url,
+    extracted_text, width, height, boxes array<[x,y,w,h]>, chars
+    array<string>) → the spans contract above.
 
     Ids are unique-but-not-dense (monotonically_increasing_id — no
     global window, no single-task funnel; COCO requires uniqueness, not

@@ -7,7 +7,7 @@ common discipline is ONE shuffle per dedup pass (groupBy on the
 signature), with map-side partial aggregation doing the heavy lifting.
 
 Reference analog: render-hash dedup, groupBy(hash).count().filter(>2)
-(/root/reference/format_effocr_recognizer_dataset.py:195-205); the
+(format_effocr_recognizer_dataset.py:195-205); the
 MinHash/SimHash/LSH family is the web-scale generalization a training
 -data pipeline needs (near-dup removal before training).
 """

@@ -1,6 +1,6 @@
 """Recognizer-dataset formatting ETL as a Spark job.
 
-Parity with /root/reference/format_effocr_recognizer_dataset.py: crop
+Parity with format_effocr_recognizer_dataset.py: crop
 one image patch per character annotation in reading order, labeled by
 the ground-truth text (:311-349); render synthetic glyphs per charset
 (:208-239) with the recurring-hash filter (:195-205); emit the
@@ -134,7 +134,7 @@ def hard_negatives(spark: SparkSession, chars: list[str],
                    prototypes: np.ndarray, k: int = 8) -> DataFrame:
     """Hard-negative mining: for every prototype char, its k nearest
     OTHER chars by embedding inner product
-    (/root/reference/train_effocr_recognizer.py:25-44,389-404; sink
+    (train_effocr_recognizer.py:25-44,389-404; sink
     analog of hns.txt, :43-44). Runs through the shared k>1 kNN kernel
     (knn_topk, exclude_self) — the same ranking the GPU retrieval path
     uses. Driver-side matmul (K×K is tiny), result as a table instead of

@@ -1,7 +1,7 @@
 """Spark-native OCR quality aggregate (A1): textline accuracy + CER /
 ICDAR2019 normalized edit distance over (gt, pred) pairs.
 
-Relational spelling of /root/reference/utils/eval_utils.py:25-70 using
+Relational spelling of utils/eval_utils.py:25-70 using
 built-in `levenshtein` — whole-stage-codegen'd, no Python. The pure
 kernel (functions/texteval.py) is the cross-check oracle in tests.
 """

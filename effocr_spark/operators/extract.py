@@ -17,6 +17,10 @@ born_digital_text and, when the JVM flagged embedded images (data-URIs
 in HTML, image XObjects in PDFs), its images from page_images with their
 OCR text appended inside the row — one output row per input row, never
 a second stage, a union, a derived-row explode or a join.
+
+pipeline.extract_pages is the stage's only caller: it adds the sniff
+columns, builds the function with make_ocr_map_fn and the schema with
+ocr_columns.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 from ..functions import assemble as asm
 from ..functions import boxes as boxes_fn
@@ -60,28 +64,35 @@ def decode_image(data: bytes):
     from ..synth.jp2codec import decode_jp2, is_jp2
     if is_jp2(data):
         return decode_jp2(data)
-    raise ValueError("unsupported image container")
+    raise NotImplementedError(
+        "unrecognized image container; plug a real decoder in here")
 
-# n_chars = number of OCR-RECOGNIZED characters (localizer detections that
-# survived NMS and got a kNN label), NOT len(extracted_text): it is 0 for
-# the dom/pdf branches and excludes the positional spaces/newlines the
-# assembler inserts. It is the reference's per-page detection-count metric
-# (infer_effocr_onnx_multi.py prints it at runtime), kept as a pipeline
-# health signal — text length is one F.length() away downstream.
-OCR_OUT_SCHEMA = (
-    "url string, extracted_text string, n_chars int, ok boolean, error string"
-)
 
-# span-emitting variant (the K2 COCO-sink feed): adds page dims + per-char
-# page-space COCO boxes [x,y,w,h] parallel to the recognized chars
-OCR_SPANS_SCHEMA = OCR_OUT_SCHEMA + (
-    ", width int, height int, boxes array<array<int>>, chars array<string>"
-)
+def ocr_columns(emit_boxes: bool,
+                emit_char_text: bool) -> list[tuple[str, str]]:
+    """The stage's output columns in order, as (name, Spark type): the
+    Spark schema string and every batch's pandas columns both come from
+    here.
 
-# two-stream variant: extracted_text is the silver-merged stream and
-# char_text the pre-merge char-only assembly, both from ONE localize +
-# encode pass (emit_char_text=True; requires word_silver)
-OCR_TWO_STREAM_SCHEMA = OCR_OUT_SCHEMA + ", char_text string"
+    n_chars = number of OCR-RECOGNIZED characters (localizer detections
+    that survived NMS and got a kNN label), NOT len(extracted_text): it
+    is 0 for the dom/pdf branches and excludes the positional
+    spaces/newlines the assembler inserts. It is the reference's
+    per-page detection-count metric (infer_effocr_onnx_multi.py prints
+    it at runtime), kept as a pipeline health signal.
+    emit_boxes adds page dims + per-char page-space COCO boxes [x,y,w,h]
+    parallel to the recognized chars (the K2 COCO-sink feed);
+    emit_char_text adds the pre-merge char-only assembly beside the
+    silver-merged extracted_text."""
+    cols = [("url", "string"), ("extracted_text", "string"),
+            ("n_chars", "int"), ("ok", "boolean"), ("error", "string")]
+    if emit_boxes:
+        cols += [("width", "int"), ("height", "int"),
+                 ("boxes", "array<array<int>>"), ("chars", "array<string>")]
+    if emit_char_text:
+        cols.append(("char_text", "string"))
+    return cols + [("branch", "string")]
+
 
 # Crops per encoder call: bounds UDF peak memory BY BYTES, not rows —
 # a [n, 3, CROP_SIZE, CROP_SIZE] float32 sub-batch is capped at ~64MB so
@@ -235,7 +246,7 @@ def page_spans(page: dict, page_chars: list[str], vertical: bool):
     by their strip's page offset → page-space [x, y, w, h] boxes,
     parallel to the recognized chars (reading order — exactly the
     reference's zip(nn_output, char_boxes) writer loop,
-    /root/reference/infer_effocr.py:560-563)."""
+    infer_effocr.py:560-563)."""
     h_page, w_page = page["height"], page["width"]
     boxes: list[list[int]] = []
     for line in page["lines"]:
@@ -253,36 +264,21 @@ def page_spans(page: dict, page_chars: list[str], vertical: bool):
     return boxes, list(page_chars)
 
 
-def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
-                    iou_thres: float = 0.01, anchor_margin=None,
-                    spell_check: bool = False, recognizer: str = "knn",
-                    vertical_override: bool | None = None,
-                    emit_boxes: bool = False,
-                    encoder_artifact: str | None = None,
-                    word_silver: float | None = None,
-                    freq_dict: str | None = None,
-                    emit_char_text: bool = False,
-                    pdf_password: bytes | str = b""):
+def make_ocr_map_fn(protos_bc, *, conf_thres, iou_thres, anchor_margin,
+                    spell_check, recognizer, emit_boxes, encoder_artifact,
+                    word_silver, freq_dict, emit_char_text, pdf_password):
     """Build the mapInPandas function for the fused extraction stage.
-
-    word_silver: cosine threshold enabling the word-level recognizer
-    stream + silver-correction merge (north star's two-stream design;
-    requires broadcast_prototypes(word_vocab=...) so protos carry an
-    'en_words' bank). None (default) = char stream only, the released
-    reference behavior.
+    The options are pipeline.extract_pages's, which documents them and
+    is the only caller.
 
     protos_bc: Spark broadcast of {lang: (chars list, [K,D] float32)}.
     Input rows: (url, html, lang, image_page, has_images), the last two
-    the JVM sniffs; output: OCR_OUT_SCHEMA (+ the span or char_text
-    columns when asked for) + the row's `branch` ('ocr'/'dom'/'pdf').
-    vertical_override: force text orientation for every row (the
-    reference's global --vertical flag, infer_effocr_onnx_multi.py:429);
-    default None derives it per row (jp → vertical).
-    recognizer: "knn" (CPU path, L2+inner-product kNN,
-    infer_effocr_onnx_multi.py:371-375) or "ffnn" (classifier-head path,
-    raw-logit argmax + class_map, infer_effocr.py:325-333) — the
-    synthetic FFNN weights ARE the prototype matrix, so the class map is
-    the prototype char list.
+    the JVM sniffs; output: the ocr_columns(emit_boxes, emit_char_text)
+    columns, ending in the row's `branch` ('ocr'/'dom'/'pdf').
+    Orientation is per row: jp is vertical. recognizer="ffnn" embeds
+    without L2-normalizing and takes the same argmax (knn_lookup) over
+    the raw logits — the synthetic FFNN weights ARE the prototype
+    matrix, so the class map is the prototype char list.
     An image_page row is localized and recognized (branch 'ocr'). Any
     other row's text is its text layer (born_digital_text), then — only
     when has_images — '\\n' and the non-NULL OCR texts of its images
@@ -291,6 +287,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
     quarantines an image page (ok=False) and drops a born-digital
     row's images, never the job.
     """
+    cols = [name for name, _ in ocr_columns(emit_boxes, emit_char_text)]
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         protos = protos_bc.value
@@ -318,8 +315,6 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
             for url, html, lang, is_image, has_images in zip(
                     pdf["url"], pdf["html"], pdf["lang"],
                     pdf["image_page"], pdf["has_images"]):
-                vertical = (vertical_override if vertical_override is not None
-                            else lang == "jp")
                 layer, blobs = None, []
                 if not is_image:
                     layer = born_digital_text(html, pdf_password)
@@ -334,7 +329,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                 for blob in blobs:
                     try:
                         page = localize_page(
-                            bytes(blob), lang, vertical, conf_thres,
+                            bytes(blob), lang, lang == "jp", conf_thres,
                             iou_thres, word_crops=word_silver is not None)
                         err = None
                     except Exception as e:  # quarantine, never crash the job
@@ -342,7 +337,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                                 "word_crops": [], "n_words": 0,
                                 "height": 0, "width": 0}
                         err = f"localize: {e!r}"[:200]
-                    pages.append((lang, page, err, vertical))
+                    pages.append((lang, page, err))
                     flat_crops.extend(page["crops"])
                     if word_silver is not None:
                         flat_word_crops.extend(page["word_crops"])
@@ -359,19 +354,15 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                    else np.zeros((0, synthmodel.EMBED_DIM), np.float32))
 
             # per-lang kNN over the flat crop axis, then positional regroup
-            flat_lang = np.repeat([l for l, _, _, _ in pages],
-                                  [p["n_chars"] for _, p, _, _ in pages])
+            flat_lang = np.repeat([l for l, _, _ in pages],
+                                  [p["n_chars"] for _, p, _ in pages])
             flat_chars: list[str] = [""] * emb.shape[0]
-            for lang in {l for l, _, _, _ in pages}:
+            for lang in {l for l, _, _ in pages}:
                 sel = np.nonzero(flat_lang == lang)[0]
                 if sel.size == 0:
                     continue
                 chars_list, proto_mat = protos[lang]
-                if recognizer == "knn":
-                    idxs = rec.knn_lookup(emb[sel], proto_mat)
-                else:
-                    idxs = rec.ffnn_lookup(emb[sel], proto_mat)
-                for pos, k in zip(sel, idxs):
+                for pos, k in zip(sel, rec.knn_lookup(emb[sel], proto_mat)):
                     flat_chars[pos] = chars_list[int(k)]
 
             # word stream: whole-word crops through the SAME encoder,
@@ -393,7 +384,7 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
             cursor = 0
             wcursor = 0
             done = []  # per page: its output columns but url
-            for lang, page, err, vertical in pages:
+            for lang, page, err in pages:
                 n = page["n_chars"]
                 page_chars = flat_chars[cursor: cursor + n]
                 cursor += n
@@ -430,18 +421,12 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
                        "ok": err is None, "error": err, "char_text": ctext,
                        "branch": "ocr"}
                 if emit_boxes:
-                    bxs, chs = (page_spans(page, page_chars, vertical)
+                    bxs, chs = (page_spans(page, page_chars, lang == "jp")
                                 if err is None else ([], []))
                     res.update(width=page["width"], height=page["height"],
                                boxes=bxs, chars=chs)
                 done.append(res)
 
-            cols = ["url", "extracted_text", "n_chars", "ok", "error"]
-            if emit_boxes:
-                cols += ["width", "height", "boxes", "chars"]
-            if emit_char_text:
-                cols.append("char_text")
-            cols.append("branch")
             out = []
             cursor = 0
             for url, layer, n_img in rows:
@@ -470,55 +455,6 @@ def make_ocr_map_fn(protos_bc, conf_thres: float = 0.35,
             yield pd.DataFrame(out, columns=cols)
 
     return ocr_batches
-
-
-def ocr_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
-               iou_thres: float = 0.01, anchor_margin=None,
-               spell_check: bool = False, recognizer: str = "knn",
-               vertical_override: bool | None = None,
-               encoder_artifact: str | None = None,
-               word_silver: float | None = None,
-               freq_dict: str | None = None,
-               emit_char_text: bool = False,
-               pdf_password: bytes | str = b"") -> DataFrame:
-    """(url, html, lang, image_page, has_images) pages →
-    (url, extracted_text, n_chars, ok, error, [char_text], branch).
-
-    encoder_artifact: path to a serialized npz encoder (visible on every
-    executor — cluster deploys ship it via spark-submit --files); loaded
-    once per executor process through the model-singleton seam.
-    word_silver: cosine threshold enabling the word-level recognizer
-    stream + silver-correction merge (see make_ocr_map_fn).
-    emit_char_text: also emit the pre-merge char-only stream as a
-    `char_text` column from the same pass (requires word_silver)."""
-    fn = make_ocr_map_fn(protos_bc, conf_thres, iou_thres,
-                         anchor_margin, spell_check, recognizer,
-                         vertical_override,
-                         encoder_artifact=encoder_artifact,
-                         word_silver=word_silver, freq_dict=freq_dict,
-                         emit_char_text=emit_char_text,
-                         pdf_password=pdf_password)
-    schema = OCR_TWO_STREAM_SCHEMA if emit_char_text else OCR_OUT_SCHEMA
-    return df.select("url", "html", "lang", "image_page",
-                     "has_images").mapInPandas(fn, schema + ", branch string")
-
-
-def ocr_spans_branch(df: DataFrame, protos_bc, conf_thres: float = 0.35,
-                     iou_thres: float = 0.01, anchor_margin=None,
-                     spell_check: bool = False, recognizer: str = "knn",
-                     vertical_override: bool | None = None) -> DataFrame:
-    """Span-emitting OCR: same fused stage as ocr_branch, plus page dims
-    and per-char page-space COCO boxes parallel to the recognized chars —
-    the feed for the K2 COCO sink (operators/coco_sink.py). Explode to
-    one row per box with posexplode(arrays_zip(boxes, chars)). Every
-    input row is taken as an image page."""
-    fn = make_ocr_map_fn(protos_bc, conf_thres, iou_thres,
-                         anchor_margin, spell_check, recognizer,
-                         vertical_override, emit_boxes=True)
-    return df.select("url", "html", "lang",
-                     F.lit(True).alias("image_page"),
-                     F.lit(False).alias("has_images")).mapInPandas(
-        fn, OCR_SPANS_SCHEMA + ", branch string")
 
 
 def is_image_page(html_col):

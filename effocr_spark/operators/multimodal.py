@@ -7,8 +7,9 @@ stdlib/NumPy: PNG (effocr_spark.synth.imgcodec), baseline JPEG incl.
 4:2:0 AND progressive SOF2 (effocr_spark.synth.jpegcodec), WAV/PCM16
 (effocr_spark.synth.wavcodec), MP4/ISO-BMFF box metadata
 (effocr_spark.synth.mp4box — dimensions/duration/tracks without any
-codec, the fields a curation pipeline filters on). Compressed audio and
-video FRAME decode remain clearly-marked seams (`_decode_any` /
+codec, the fields a curation pipeline filters on). Image decode is
+extract.decode_image, the one the OCR stage uses. Compressed audio and
+video FRAME decode remain clearly-marked seams (`decode_image` /
 `decode_wav` raise NotImplementedError) for real libraries to drop
 into — the Spark-side plumbing (schemas, batching, quarantine
 semantics, partitioning) is identical either way.
@@ -23,8 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.crops import resize_nn
-from ..synth.imgcodec import decode_png, is_png, to_rgb
+from ..synth.imgcodec import is_png
 from ..synth.wavcodec import decode_wav, is_wav
+from .extract import decode_image
 
 MEDIA_FEATURE_SCHEMA = (
     "id long, media_type string, width int, height int, "
@@ -53,22 +55,6 @@ def sniff_media_type(col):
     )
 
 
-def _decode_any(data: bytes) -> np.ndarray:
-    """Decode to an HxWx3 uint8 array. PNG and baseline JPEG are REAL
-    (synth/imgcodec.py, synth/jpegcodec.py); anything else raises for a
-    real image library to drop in."""
-    if is_png(data):
-        return to_rgb(decode_png(data))
-    from ..synth.jpegcodec import decode_jpeg, is_jpeg
-    if is_jpeg(data):
-        return decode_jpeg(data)
-    from ..synth.jp2codec import decode_jp2, is_jp2
-    if is_jp2(data):
-        return decode_jp2(data)
-    raise NotImplementedError(
-        "unrecognized image container; plug a real decoder in here")
-
-
 def media_features(df: DataFrame, id_col: str = "id",
                    media_col: str = "media") -> DataFrame:
     """Decode + featurize media rows (quarantine failures, never crash)."""
@@ -88,7 +74,7 @@ def media_features(df: DataFrame, id_col: str = "id",
                 else:
                     mt = "application/octet-stream"
                 try:
-                    img = _decode_any(data)
+                    img = decode_image(data)
                     out["width"].append(img.shape[1])
                     out["height"].append(img.shape[0])
                     out["mean_luma"].append(float(img.mean()))
@@ -167,7 +153,7 @@ def media_resize(df: DataFrame, size: int, id_col: str = "id",
             ids, blobs, oks = [], [], []
             for i, b in zip(pdf[id_col], pdf[media_col]):
                 try:
-                    img = _decode_any(bytes(b))
+                    img = decode_image(bytes(b))
                     blobs.append(encode_png(resize_nn(img, size)))
                     oks.append(True)
                 except Exception:

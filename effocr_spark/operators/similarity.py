@@ -2,7 +2,7 @@
 
 The reference's recognition IS a similarity search: kNN of crop
 embeddings against a broadcast prototype matrix
-(/root/reference/infer_effocr_onnx_multi.py:372-375). These operators
+(infer_effocr_onnx_multi.py:372-375). These operators
 generalize it to table-scale ANN for a training-data pipeline.
 
 All dot products are JVM-side (zip_with + aggregate higher-order

@@ -1,6 +1,6 @@
 """TrOCR-style seq2seq OCR baseline as a Spark stage.
 
-Parity target: /root/reference/trocr/infer_trocr.py (the reference's
+Parity target: trocr/infer_trocr.py (the reference's
 stand-alone VisionEncoderDecoder baseline, evaluated against the same
 COCO line-image tables as the main pipeline):
 
@@ -54,7 +54,7 @@ NO_REPEAT_NGRAM = 3
 LENGTH_PENALTY = 2.0
 EARLY_STOPPING = True
 
-TROCR_OUT_SCHEMA = "url string, pred string, n_tokens int, ok boolean"
+TROCR_SCHEMA = "url string, pred string, n_tokens int, ok boolean"
 
 
 def _banned_ngram_tokens(seq: list[int], n: int) -> set[int]:
@@ -222,7 +222,7 @@ def make_trocr_map_fn(protos_bc, conf_thres: float = 0.35,
 def trocr_branch(df: DataFrame, protos_bc, **kwargs) -> DataFrame:
     """(url, png) line images → (url, pred, n_tokens, ok)."""
     fn = make_trocr_map_fn(protos_bc, **kwargs)
-    return df.select("url", "png").mapInPandas(fn, TROCR_OUT_SCHEMA)
+    return df.select("url", "png").mapInPandas(fn, TROCR_SCHEMA)
 
 
 def line_images_df(spark: SparkSession, n: int, seed: int = 17):

@@ -1,5 +1,5 @@
 """Pinned plain-Python oracle: a loop-based transliteration of the
-reference inference dataflow (/root/reference/infer_effocr_onnx_multi.py:
+reference inference dataflow (infer_effocr_onnx_multi.py:
 227-397 with en/jp pre/postprocess :70-140 and the YOLO NMS,
 onnx_engines/localizer_engine.py:171-277).
 

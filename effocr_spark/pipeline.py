@@ -9,6 +9,9 @@ Dataflow (SURVEY.md §3.1 "Spark lifecycle"):
     their DOM/PDF text layer, plus the OCR text of their embedded
     images when has_images is set. One scan, no union, no join.
 
+extract_pages is the only way into the stage; batch, streaming and
+lineage runs all call it.
+
 Scale notes (the 100 TB design point):
  - the only repartition is the salted one in front of the stage: page
    cost varies ~100x across hosts (image-heavy hosts) and a born-digital
@@ -26,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.recognize import build_prototypes
 from .operators.extract import (has_embedded_png, has_pdf_images,
-                                is_image_page, is_pdf_page, ocr_branch)
+                                is_image_page, is_pdf_page,
+                                make_ocr_map_fn, ocr_columns)
 
 
 def broadcast_prototypes(spark: SparkSession, langs=("en", "jp"),
@@ -64,21 +68,41 @@ def extract_pages(
     freq_dict: str | None = None,
     pdf_password: bytes | str = b"",
     emit_char_text: bool = False,
+    emit_boxes: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) →
-    (url, extracted_text, n_chars, ok, error, branch).
+    (url, extracted_text, n_chars, ok, error, branch), plus the columns
+    emit_boxes / emit_char_text add (extract.ocr_columns). The one way
+    into the extraction stage and the one list of its options; the
+    streaming and lineage runners forward theirs here.
 
     Three-way content routing by JVM-side magic-byte sniff (no Python in
     the router): PNG/JPEG/JP2 → OCR, %PDF → PDF layout parse, else → DOM
     strip. All three run in the one ocr_batches stage (make_ocr_map_fn),
     which reads the sniff from the `image_page` column per row; the
-    salted repartition, when set, spreads every row before it.
+    salted repartition, when set, spreads every row before it. jp pages
+    are read vertically.
 
-    embedded_images: the north star's "embedded images/PDF layouts" —
-    data-URI images inside HTML pages and image XObjects inside PDFs
-    (scanned documents). A page carrying them (JVM contains() tests)
-    gets `has_images`, and the stage appends its images' OCR text to
-    its text layer; its branch stays dom/pdf."""
+    conf_thres / iou_thres: the localizer's NMS thresholds;
+    anchor_margin: en_postprocess's casing anchor (None = off).
+    spell_check: visual spell check of en lines against freq_dict (a
+    file every executor sees; None = the built-in dictionary).
+    recognizer: "knn" (L2 + inner-product kNN,
+    infer_effocr_onnx_multi.py:371-375) or "ffnn" (raw-logit argmax,
+    infer_effocr.py:325-333).
+    embedded_images: data-URI images in HTML and image XObjects in PDFs
+    (JVM contains() tests set `has_images`) are OCR'd and their text
+    appended to the row's text layer; its branch stays dom/pdf.
+    encoder_artifact: serialized npz encoder path, loaded once per
+    executor process.
+    word_silver: cosine threshold for the word-level recognizer stream
+    + silver-correction merge (needs broadcast_prototypes(word_vocab=));
+    None = char stream only, the released reference behavior.
+    pdf_password: user password for encrypted PDFs.
+    emit_char_text: add the pre-merge char-only stream as `char_text`.
+    emit_boxes: add page `width`/`height` and per-char page-space COCO
+    `boxes` parallel to `chars` — the K2 sink feed
+    (coco_sink.extraction_spans); born-digital rows get 0, 0, [], []."""
     html = F.col("html")
     # is_image_page(NULL) is NULL: coalesce so a NULL html row reaches
     # the stage as a born-digital row, which quarantines it
@@ -98,9 +122,14 @@ def extract_pages(
         rows = rows.repartition(
             salt_partitions, F.xxhash64(F.col("url"), F.lit(0x5A17)))
 
-    return ocr_branch(rows, protos_bc, conf_thres, iou_thres,
-                      anchor_margin, spell_check, recognizer,
-                      encoder_artifact=encoder_artifact,
-                      word_silver=word_silver, freq_dict=freq_dict,
-                      emit_char_text=emit_char_text,
-                      pdf_password=pdf_password)
+    fn = make_ocr_map_fn(
+        protos_bc, conf_thres=conf_thres, iou_thres=iou_thres,
+        anchor_margin=anchor_margin, spell_check=spell_check,
+        recognizer=recognizer, emit_boxes=emit_boxes,
+        encoder_artifact=encoder_artifact, word_silver=word_silver,
+        freq_dict=freq_dict, emit_char_text=emit_char_text,
+        pdf_password=pdf_password)
+    schema = ", ".join(f"{name} {typ}" for name, typ
+                       in ocr_columns(emit_boxes, emit_char_text))
+    return rows.select("url", "html", "lang", "image_page",
+                       "has_images").mapInPandas(fn, schema)

@@ -33,26 +33,19 @@ def stream_extract(
     checkpoint_dir: str,
     protos_bc,
     max_files_per_trigger: int | None = None,
-    salt_partitions: int | None = None,
-    encoder_artifact: str | None = None,
-    word_silver: float | None = None,
-    embedded_images: bool = False,
+    **extract_kwargs,
 ):
     """Incremental extraction: parquet file stream → extract_pages (the
     batch router: PNG/JPEG→ocr, %PDF→pdf, else→dom) → parquet sink with
     checkpoint. Returns the started query (caller awaits termination;
     AvailableNow stops when caught up).
 
-    Parity vs the batch pipeline: the file sink consumes extract_pages
-    itself, with the same optional salted repartition before the OCR
-    stage (a stateless repartition is legal in streaming — it only
-    reshuffles within the micro-batch). embedded_images=True needs
-    nothing extra: a page's embedded images are fused inside its own
-    row in the one stage, so the plan has no join or aggregate and the
-    same append-mode sink serves both values of the flag. The
-    serialized-encoder artifact and the word-silver stream are
-    row-local too (per-executor singleton load + in-UDF merge), so
-    batch and streaming OCR stages stay configuration-identical."""
+    extract_kwargs go to extract_pages unchanged, so batch and streaming
+    are configuration-identical: every option of the stage is row-local
+    (the salted repartition only reshuffles within the micro-batch;
+    embedded images are fused inside their own row, so the plan has no
+    join or aggregate; the encoder artifact and the word bank load once
+    per executor), and the same append-mode sink serves them all."""
     reader = (
         spark.readStream.schema(PAGES_DDL).format("parquet")
     )
@@ -60,10 +53,7 @@ def stream_extract(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.load(pages_dir)
 
-    result = extract_pages(pages, protos_bc, salt_partitions=salt_partitions,
-                           embedded_images=embedded_images,
-                           encoder_artifact=encoder_artifact,
-                           word_silver=word_silver)
+    result = extract_pages(pages, protos_bc, **extract_kwargs)
     return (
         result.writeStream.format("parquet")
         .option("path", out_dir)

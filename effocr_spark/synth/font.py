@@ -1,7 +1,7 @@
 """Deterministic bitmap font + text-line renderer (fixture generation).
 
 Reference analog: glyph rendering with PIL TTF fonts
-(/root/reference/format_effocr_recognizer_dataset.py:131-185). The
+(format_effocr_recognizer_dataset.py:131-185). The
 container has no font stack, so glyphs are seeded pseudo-random bitmaps
 with *realistic metrics* (x-height lowercase, full-height caps/digits,
 descenders), which is what the extraction pipeline's casing heuristics

@@ -6,7 +6,7 @@ table are encoded/decoded with this codec. Only what the pipeline needs:
 decode, filter-0 on encode (deterministic bytes for a given array).
 
 Replaces the reference's `Image.open(path).convert("RGB")`
-(/root/reference/infer_effocr_onnx_multi.py:307) at the UDF boundary.
+(infer_effocr_onnx_multi.py:307) at the UDF boundary.
 """
 
 from __future__ import annotations

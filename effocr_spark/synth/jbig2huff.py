@@ -31,7 +31,7 @@ on exactly those tables).
 
 Reference parity target: dell-research-harvard/effocr consumes scanned
 archives whose JBIG2 layers a real pipeline must decode
-(/root/reference README data pipeline; the engine itself has no codec
+(the reference README's data pipeline; the engine itself has no codec
 — this is capability the reference lacks).
 """
 

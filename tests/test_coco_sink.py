@@ -12,14 +12,15 @@ from effocr_spark.operators.coco_sink import (
     extraction_spans,
     write_coco_json,
 )
-from effocr_spark.operators.extract import is_image_page, ocr_spans_branch
+from effocr_spark.operators.extract import is_image_page
+from effocr_spark.pipeline import extract_pages
 from effocr_spark.synth.pages import pages_df
 
 
 def _spans(spark, protos_bc, n=40):
     pages, _ = pages_df(spark, n, seed=42)
     image_pages = pages.filter(is_image_page(F.col("html")))
-    res = ocr_spans_branch(image_pages, protos_bc)
+    res = extract_pages(image_pages, protos_bc, emit_boxes=True)
     return res, extraction_spans(res)
 
 
@@ -39,6 +40,44 @@ def test_spans_parallel_to_text(spark, protos_bc):
             assert 0 <= x <= r["width"] and 0 <= y <= r["height"]
             assert w > 0 and h > 0
             assert x + w <= r["width"] and y + h <= r["height"]
+
+
+def test_emit_boxes_on_mixed_frame(spark, protos_bc):
+    """extract_pages(emit_boxes=True) over image, HTML and text-PDF
+    rows: image rows carry boxes/chars parallel to their text,
+    born-digital rows carry their text layer with 0x0 dims and empty
+    arrays, and every row's other columns equal the plain pass."""
+    from effocr_spark.functions.domstrip import strip_html
+    from effocr_spark.functions.pdftext import extract_pdf_text
+    from effocr_spark.synth.pdfgen import make_pdf
+
+    pages, _ = pages_df(spark, 40, seed=42)
+    pdf = make_pdf([["Born digital text", "second line"]])
+    mixed = pages.unionByName(spark.createDataFrame(
+        [("pdf://text/0", None, bytearray(pdf), None, "en")],
+        pages.schema))
+    boxed = {r["url"]: r for r in
+             extract_pages(mixed, protos_bc, emit_boxes=True).collect()}
+    plain = {r["url"]: r for r in extract_pages(mixed, protos_bc).collect()}
+    assert boxed.keys() == plain.keys()
+    assert {r["branch"] for r in boxed.values()} == {"ocr", "dom", "pdf"}
+
+    cols = ["extracted_text", "n_chars", "ok", "error", "branch"]
+    html = {r["url"]: bytes(r["html"]) for r in pages.collect()}
+    html["pdf://text/0"] = pdf
+    for url, r in boxed.items():
+        assert [r[c] for c in cols] == [plain[url][c] for c in cols], url
+        if r["branch"] == "ocr":
+            assert r["ok"] and r["width"] > 0 and r["height"] > 0, url
+            assert len(r["boxes"]) == len(r["chars"]) > 0, url
+            assert "".join(r["chars"]) == \
+                r["extracted_text"].replace(" ", "").replace("\n", "")
+        else:
+            assert (r["width"], r["height"], r["boxes"], r["chars"]) \
+                == (0, 0, [], []), url
+            layer = (extract_pdf_text(html[url]) if r["branch"] == "pdf"
+                     else strip_html(html[url]))
+            assert r["extracted_text"] == layer, url
 
 
 def test_coco_document_round_trip(spark, protos_bc, tmp_path):
@@ -101,7 +140,7 @@ def test_spans_vertical_offsets(spark, protos_bc):
                       & (F.col("lang") == "jp"))
     if jp.count() == 0:
         return  # fixture draw has no jp image pages at this n
-    res = ocr_spans_branch(jp, protos_bc)
+    res = extract_pages(jp, protos_bc, emit_boxes=True)
     for r in res.filter(F.col("ok")).collect():
         for x, y, w, h in r["boxes"]:
             assert 0 <= x and x + w <= r["width"]

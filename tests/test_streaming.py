@@ -183,3 +183,31 @@ def test_stream_extract_embedded_fusion_matches_batch(spark, protos_bc,
     q2.awaitTermination(300)
     got2 = {r["url"] for r in spark.read.parquet(out_dir).collect()}
     assert got2 == {"u1", "u2", "u3"}
+
+
+def test_stream_extract_pdf_password_matches_batch(spark, protos_bc,
+                                                   tmp_path):
+    """stream_extract forwards every extract_pages option: an AES-256
+    (R6) PDF locked with a user password comes out of the stream
+    exactly as it does from the batch pipeline with that password."""
+    from effocr_spark.synth.pdfgen import make_aes256_pdf
+
+    blob = make_aes256_pdf([["Config unlocked text"]], user_pw=b"corp-pw")
+    pages = spark.createDataFrame(
+        [("pdf://locked/0", None, bytearray(blob), None, "en")],
+        streaming.PAGES_DDL)
+    pages_dir = str(tmp_path / "pages")
+    pages.write.mode("overwrite").parquet(pages_dir)
+
+    q = streaming.stream_extract(
+        spark, pages_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        protos_bc, pdf_password=b"corp-pw")
+    q.awaitTermination(300)
+    got = [r.asDict() for r in
+           spark.read.parquet(str(tmp_path / "out")).collect()]
+
+    batch = pipeline.extract_pages(spark.read.parquet(pages_dir), protos_bc,
+                                   pdf_password=b"corp-pw")
+    assert got == [r.asDict() for r in batch.collect()]
+    assert got[0]["ok"] and got[0]["branch"] == "pdf"
+    assert got[0]["extracted_text"] == "Config unlocked text"
