@@ -31,6 +31,17 @@ more negative than -180 text-space units are treated as an inter-word
 gap (the standard heuristic for extracting spaces from kerned text).
 Pages are joined with a newline.
 
+Document model: each call opens the PDF once (`_open`). One `N G obj`
+scan keeps (num, gen, body) for every object; in an encrypted
+document one security handler (`_security_handler`) validates the
+user password and returns the decrypt(raw, num, gen) that stream
+bodies and strings both go through; one pass lists the streams,
+decrypting only when the document is encrypted. extract_pdf_text then
+expands /ObjStm object streams, walks the page tree once (`_page_tree`:
+page order and per-page font scopes) and builds one decode entry per
+font object for that call; extract_pdf_images reads the stream list
+only.
+
 Shared by the fused Spark mapInPandas stage (per PDF row, through
 operators/extract.born_digital_text) and the tests, so byte-parity is
 by construction — the same contract as functions/domstrip.py.
@@ -374,7 +385,6 @@ def _parse_differences(enc_seg: bytes) -> dict[int, str]:
             out[code] = _glyph_name_to_char(name.decode("latin-1"))
             code += 1
     return out
-_OBJ_HEAD_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
 _CMAP_HEX_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>|(\[)|(\])")
 _BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.S)
 _BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.S)
@@ -532,10 +542,8 @@ def _font_entry_for(body: bytes, objects: dict[int, bytes],
     return {"cid": cid, "map": cmap, "diffs": diffs, "base": base}
 
 
-def _font_registry(data: bytes,
-                   stream_by_num: dict[int, tuple[bytes, bytes]],
-                   extra_objects: dict[int, bytes] | None = None
-                   ) -> dict[str, dict]:
+def _font_registry(data: bytes, objects: dict[int, bytes],
+                   objstm: dict[int, bytes], entry) -> dict[str, dict]:
     """Document-wide font-resource map: name → {cid, map}.
 
     Binds every /Font <<...>> resource-dict entry across the whole
@@ -544,23 +552,15 @@ def _font_registry(data: bytes,
     an inline simple font decodes instead of hitting the
     unresolved-font path, which raises in strict /Type0 documents).
     This registry is the FALLBACK scope — per-page /Resources maps
-    (from _page_font_maps) override it for streams the page tree can
+    (from _page_tree) override it for streams the page tree can
     attribute. A name rebound to a DIFFERENT font object here maps to
     the _CONFLICT sentinel: legitimate per-page reuse of /F1 resolves
     through the page scope, while a show that can only see the
     ambiguous global binding raises (stream-scoped quarantine) — fail
     closed, never silently wrong."""
-    objects = {int(m.group(1)): m.group(3)
-               for m in _OBJ_RE.finditer(data)}
-    if extra_objects:
-        objects.update(extra_objects)
-
-    def entry(body: bytes) -> dict:
-        return _font_entry_for(body, objects, stream_by_num)
-
     # /Font resource dicts can live in the raw object space OR inside
     # an expanded object stream — scan both
-    scan_spaces = [data] + list((extra_objects or {}).values())
+    scan_spaces = [data] + list(objstm.values())
     # binding key: object number for indirect refs, the dict bytes for
     # inline dicts — same name + same key (e.g. shared resource dict
     # seen from two scan spaces) is fine, different keys → _CONFLICT
@@ -579,18 +579,18 @@ def _bind_font_dict(inner: bytes, objects: dict[int, bytes], entry,
     """Parse one /Font resource dict body (`inner`, without the outer
     << >>) into `fonts`, tracking binding keys in `bound`: indirect
     refs (name N 0 R) and inline direct font dicts. A name already
-    bound to a DIFFERENT key maps to the _CONFLICT sentinel."""
+    bound to a DIFFERENT key maps to the _CONFLICT sentinel. `entry`
+    maps a binding key to its decode entry."""
     for bm in _FONT_BIND_RE.finditer(inner):
         name = bm.group(1).decode("latin-1")
         num = int(bm.group(2))
         if name in bound and bound[name] != num:
             fonts[name] = _CONFLICT
             continue
-        body = objects.get(num)
-        if body is None:
+        if num not in objects:
             continue
         bound[name] = num
-        fonts[name] = entry(body)
+        fonts[name] = entry(num)
     for im in re.finditer(rb"/([^\s/<>()\[\]]+)\s*<<", inner):
         name = im.group(1).decode("latin-1")
         body = _balanced_dict(inner, im.end() - 2)
@@ -605,108 +605,135 @@ def _bind_font_dict(inner: bytes, objects: dict[int, bytes], entry,
 
 _RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
 _FONT_REF_RE = re.compile(rb"/Font\s+(\d+)\s+\d+\s+R")
+_KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]", re.S)
+_CONTENTS_RE = re.compile(
+    rb"/Contents\s*(?:(\d+)\s+\d+\s+R|\[([^\]]*)\])", re.S)
+_REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 
 
-def _page_font_maps(data: bytes,
-                    stream_by_num: dict[int, tuple[bytes, bytes]],
-                    extra_objects: dict[int, bytes] | None = None
-                    ) -> dict[int, dict[str, dict]]:
-    """Per-page font scoping: walk /Catalog → /Pages /Kids, read each
-    PAGE's /Resources /Font dict (inline or indirect, either level),
-    and map each of that page's /Contents stream object numbers to the
-    page-local name → font-entry dict. Two pages legitimately reusing
-    /F1 for different fonts each decode through their OWN binding
-    (ISO 32000 7.8.3 resource scoping); only an intra-page conflict
-    (impossible in a well-formed dict) or an unattributable stream
-    falls back to the global registry's conflict handling."""
-    objects = {int(m.group(1)): m.group(3)
-               for m in _OBJ_RE.finditer(data)}
-    if extra_objects:
-        objects.update(extra_objects)
+def _page_tree(objects: dict[int, bytes], entry
+               ) -> tuple[dict[int, int], dict[int, dict[str, dict]]]:
+    """One walk of /Catalog → /Pages /Kids → (page order, page fonts).
 
-    def entry(body: bytes) -> dict:
-        return _font_entry_for(body, objects, stream_by_num)
-
-    root = None
-    for _num, body in objects.items():
-        if re.search(rb"/Type\s*/Catalog\b", body):
-            root = body
-            break
-    if root is None:
-        return {}
-    pm = re.search(rb"/Pages\s+(\d+)\s+\d+\s+R", root)
+    Page order maps each page's /Contents object numbers to their
+    position in traversal order: incremental updates and reordered Kids
+    arrays put pages OUT of object-number order in real files, so a
+    flat scan reads their text in the wrong sequence. Page fonts maps
+    the same content streams to the page-local name → font-entry dict
+    read from that page's /Resources /Font (per-page font scoping, ISO
+    32000 7.8.3): two pages legitimately reusing /F1 for different
+    fonts each decode through their OWN binding. Both maps are empty
+    when the tree is missing or unresolvable."""
+    order: dict[int, int] = {}
+    page_fonts: dict[int, dict[str, dict]] = {}
+    root = next((body for body in objects.values()
+                 if re.search(rb"/Type\s*/Catalog\b", body)), None)
+    pm = (re.search(rb"/Pages\s+(\d+)\s+\d+\s+R", root)
+          if root is not None else None)
     if pm is None:
-        return {}
-    out: dict[int, dict[str, dict]] = {}
+        return order, page_fonts
     seen: set[int] = set()
-
-    def walk(num: int) -> None:
+    # depth-first with an explicit stack: a hostile /Kids chain
+    # thousands of levels deep must not exhaust Python's recursion
+    stack = [int(pm.group(1))]
+    while stack:
+        num = stack.pop()
         if num in seen or num not in objects:
-            return
+            continue
         seen.add(num)
         body = objects[num]
         km = _KIDS_RE.search(body)
         if km is not None:
-            for rm in _REF_RE.finditer(km.group(1)):
-                walk(int(rm.group(1)))
-            return
+            stack.extend(reversed([int(rm.group(1))
+                                   for rm in _REF_RE.finditer(km.group(1))]))
+            continue
         cm = _CONTENTS_RE.search(body)
         if cm is None:
-            return
-        # the page's /Resources: inline dict or indirect object
-        res = body
-        rm2 = re.search(rb"/Resources\s*<<", body)
-        if rm2 is not None:
-            res = _balanced_dict(body, rm2.end() - 2)
-        else:
-            rref = _RESOURCES_REF_RE.search(body)
-            if rref is not None and int(rref.group(1)) in objects:
-                res = objects[int(rref.group(1))]
-            else:
-                return  # no resolvable resources: global fallback
-        # the /Font dict inside resources: inline or indirect
-        font_inner = None
-        fm = re.search(rb"/Font\s*<<", res)
-        if fm is not None:
-            font_inner = _balanced_dict(res, fm.end() - 2)[2:-2]
-        else:
-            fref = _FONT_REF_RE.search(res)
-            if fref is not None and int(fref.group(1)) in objects:
-                fbody = objects[int(fref.group(1))].strip()
-                if fbody.startswith(b"<<") and fbody.endswith(b">>"):
-                    font_inner = fbody[2:-2]
-        if font_inner is None:
-            return
-        fonts: dict[str, dict] = {}
-        _bind_font_dict(font_inner, objects, entry, {}, fonts)
-        if not fonts:
-            return
-        refs = ([cm.group(1)] if cm.group(1) is not None
-                else [r.group(1)
+            continue
+        refs = ([int(cm.group(1))] if cm.group(1) is not None
+                else [int(r.group(1))
                       for r in _REF_RE.finditer(cm.group(2))])
         for ref in refs:
-            out[int(ref)] = fonts
+            order.setdefault(ref, len(order))
+        fonts = _page_fonts(body, objects, entry)
+        if fonts:
+            for ref in refs:
+                page_fonts[ref] = fonts
+    return order, page_fonts
 
-    walk(int(pm.group(1)))
-    return out
+
+def _page_fonts(page: bytes, objects: dict[int, bytes], entry
+                ) -> dict[str, dict]:
+    """One page's /Resources /Font dict (inline or indirect, either
+    level) → name → font entry; {} when it can't be resolved (the
+    page's streams then fall back to the global registry)."""
+    rm = re.search(rb"/Resources\s*<<", page)
+    if rm is not None:
+        res = _balanced_dict(page, rm.end() - 2)
+    else:
+        rref = _RESOURCES_REF_RE.search(page)
+        if rref is None or int(rref.group(1)) not in objects:
+            return {}
+        res = objects[int(rref.group(1))]
+    font_inner = None
+    fm = re.search(rb"/Font\s*<<", res)
+    if fm is not None:
+        font_inner = _balanced_dict(res, fm.end() - 2)[2:-2]
+    else:
+        fref = _FONT_REF_RE.search(res)
+        if fref is not None and int(fref.group(1)) in objects:
+            fbody = objects[int(fref.group(1))].strip()
+            if fbody.startswith(b"<<") and fbody.endswith(b">>"):
+                font_inner = fbody[2:-2]
+    fonts: dict[str, dict] = {}
+    if font_inner is not None:
+        _bind_font_dict(font_inner, objects, entry, {}, fonts)
+    return fonts
 
 
-def _plain_streams(data: bytes) -> list[tuple[bytes, bytes, int]]:
-    """All streams with their owning object number → [(dict, body,
-    num)]. Scanning PER OBJECT keeps each stream's dict scoped to its
-    own object (a whole-document `<<.*?>>\\s*stream` scan bleeds
-    preceding objects' dicts into the match and mis-attributes the
-    object number). Malformed documents without N G obj envelopes fall
-    back to the flat scan with num = -1 (their streams still decode or
-    quarantine on their own filters)."""
-    out = []
-    for om in _OBJ_RE.finditer(data):
-        sm = _STREAM_RE.search(om.group(3))
-        if sm is not None:
-            out.append((sm.group(1), sm.group(2), int(om.group(1))))
-    if not out:
-        out = [(d, b, -1) for d, b in _STREAM_RE.findall(data)]
-    return out
+def _open(data: bytes, password: bytes | str
+          ) -> tuple[list[tuple[int, int, bytes]],
+                     list[tuple[bytes, bytes, int]], object]:
+    """Open a PDF once → (objects, streams, decrypt).
+
+    objects: (num, gen, body) for every `N G obj ... endobj`, from the
+    document's one object scan. streams: (dict, body, num) for every
+    object that holds a stream, in file order — scanning PER OBJECT
+    keeps each stream's dict scoped to its own object (a whole-document
+    `<<.*?>>\\s*stream` scan bleeds preceding objects' dicts into the
+    match and mis-attributes the object number). Malformed unencrypted
+    documents without N G obj envelopes fall back to the flat scan with
+    num = -1 (their streams still decode or quarantine on their own
+    filters). decrypt: the standard security handler's decrypt(raw,
+    num, gen) for strings when the document is encrypted, else None;
+    its stream bodies are already decrypted here, a single corrupt one
+    skipped (the key was already validated)."""
+    if not is_pdf(data):
+        raise ValueError("not a PDF (missing %PDF- header)")
+    objs = [(int(m.group(1)), int(m.group(2)), m.group(3))
+            for m in _OBJ_RE.finditer(data)]
+    decrypt = None
+    if b"/Encrypt" in data:
+        decrypt, enc_num, encrypt_metadata = _security_handler(
+            data, objs, _norm_password(password))
+    streams = []
+    for num, gen, body in objs:
+        sm = _STREAM_RE.search(body)
+        if sm is None:
+            continue
+        raw = sm.group(2)
+        if decrypt is not None:
+            if num == enc_num:
+                continue
+            if not _skip_decrypt(sm.group(1), encrypt_metadata):
+                try:
+                    raw = decrypt(_strip_eol(raw), num, gen)
+                except ValueError:
+                    continue  # one corrupt stream ≠ a corrupt document
+        streams.append((sm.group(1), raw, num))
+    if not streams and decrypt is None:
+        streams = [(d, b, -1) for d, b in _STREAM_RE.findall(data)]
+    return objs, streams, decrypt
 
 
 def extract_pdf_text(data: bytes, password: bytes | str = b"",
@@ -728,29 +755,34 @@ def extract_pdf_text(data: bytes, password: bytes | str = b"",
     `stats` dict is supplied. Only if NO content stream decodes does
     the document fail closed (raise) — never a silent partial loss.
     """
-    if not is_pdf(data):
-        raise ValueError("not a PDF (missing %PDF- header)")
-    if b"/Encrypt" in data:
-        # standard-handler decryption with the supplied (default:
-        # empty) user password; raises for wrong-password docs
-        streams = _decrypt_streams(data, _norm_password(password))
-    else:
-        streams = _plain_streams(data)
+    objs, streams, decrypt = _open(data, password)
     # font resources resolve over the PLAINTEXT object dicts (names and
     # dicts are never encrypted — only strings and stream bodies) PLUS
     # any /ObjStm-packed objects (the modern-writer shape); ToUnicode
     # CMap STREAMS come from the decrypted stream set
     objstm = _expand_objstms(streams)
+    objects = {num: body for num, _gen, body in objs}
+    objects.update(objstm)
     stream_by_num = {num: (d, b) for d, b, num in streams if num >= 0}
-    fonts = _font_registry(data, stream_by_num, objstm)
+
+    @functools.cache
+    def entry(key: int | bytes) -> dict:
+        # key: a font object number, or an inline font dict's bytes —
+        # a font shared by every page builds its decode entry once
+        body = objects[key] if isinstance(key, int) else key
+        return _font_entry_for(body, objects, stream_by_num)
+
+    fonts = _font_registry(data, objects, objstm, entry)
     # per-page resource scoping (ISO 32000 7.8.3): a page's own /Font
     # bindings override the global registry for ITS content streams —
     # legitimate cross-page reuse of /F1 decodes correctly instead of
     # hitting the global-conflict sentinel
-    page_fonts = _page_font_maps(data, stream_by_num, objstm)
+    order, page_fonts = _page_tree(objects, entry)
     strict = (_TYPE0_RE.search(data) is not None
               or any(_TYPE0_RE.search(b) for b in objstm.values()))
-    streams = _page_order(data, objstm, streams)
+    # content streams in page-tree order, everything else (fonts,
+    # XObjects, ToUnicode, ...) after them in file order
+    streams = sorted(streams, key=lambda s: order.get(s[2], len(order)))
     lines: list[str] = []
     n_quarantined = 0
     first_font_err: UnresolvedFontError | None = None
@@ -780,83 +812,8 @@ def extract_pdf_text(data: bytes, password: bytes | str = b"",
         raise first_font_err
     if stats is not None:
         stats["quarantined_streams"] = n_quarantined
-    # text content OUTSIDE content streams: AcroForm text-field values
-    # (/FT /Tx ... /V) and FreeText annotation /Contents. In encrypted
-    # documents strings carry the same per-object (V≤4) / file (V5)
-    # encryption as streams — decrypted through _string_decryptor;
-    # if the decryptor can't be built, forms are omitted (fail-safe)
-    dec = None
-    if b"/Encrypt" in data:
-        dec = _string_decryptor(data, _norm_password(password))
-        if dec is None:
-            text = "\n".join(ln for ln in lines if ln.strip())
-            return text
-    lines.extend(_form_and_annot_text(data, objstm, dec))
-    text = "\n".join(ln for ln in lines if ln.strip())
-    return text
-
-
-_KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]", re.S)
-_CONTENTS_RE = re.compile(
-    rb"/Contents\s*(?:(\d+)\s+\d+\s+R|\[([^\]]*)\])", re.S)
-_REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
-
-
-def _page_order(data: bytes, objstm: dict[int, bytes],
-                streams: list[tuple[bytes, bytes, int]]
-                ) -> list[tuple[bytes, bytes, int]]:
-    """Reorder streams into PAGE-TREE order: walk /Type /Catalog →
-    /Pages /Kids recursively, collect each page's /Contents object
-    numbers in traversal order; content streams sort by that order,
-    everything else (fonts, XObjects, ToUnicode, ...) keeps its file
-    position after them. Incremental updates and reordered Kids arrays
-    put pages OUT of object-number order in real files — a flat scan
-    reads their text in the wrong sequence. Falls back to the original
-    order when the tree is missing or unresolvable."""
-    objects = {int(m.group(1)): m.group(3)
-               for m in _OBJ_RE.finditer(data)}
-    objects.update(objstm)
-    root = None
-    for num, body in objects.items():
-        if re.search(rb"/Type\s*/Catalog\b", body):
-            root = body
-            break
-    if root is None:
-        return streams
-    pm = re.search(rb"/Pages\s+(\d+)\s+\d+\s+R", root)
-    if pm is None:
-        return streams
-    order: dict[int, int] = {}
-    seen: set[int] = set()
-
-    def walk(num: int) -> None:
-        if num in seen or num not in objects:
-            return
-        seen.add(num)
-        body = objects[num]
-        km = _KIDS_RE.search(body)
-        if km is not None:
-            for rm in _REF_RE.finditer(km.group(1)):
-                walk(int(rm.group(1)))
-            return
-        cm = _CONTENTS_RE.search(body)
-        if cm is None:
-            return
-        refs = ([cm.group(1)] if cm.group(1) is not None
-                else [r.group(1)
-                      for r in _REF_RE.finditer(cm.group(2))])
-        for ref in refs:
-            n = int(ref)
-            if n not in order:
-                order[n] = len(order)
-
-    walk(int(pm.group(1)))
-    if not order:
-        return streams
-    n_pages = len(order)
-    indexed = list(enumerate(streams))
-    return [s for _, s in sorted(
-        indexed, key=lambda t: (order.get(t[1][2], n_pages), t[0]))]
+    lines.extend(_form_and_annot_text(objs, objstm, decrypt))
+    return "\n".join(ln for ln in lines if ln.strip())
 
 
 def _pdf_text_string(raw: bytes) -> str:
@@ -871,91 +828,24 @@ _FT_TX_RE = re.compile(rb"/FT\s*/Tx\b")
 _FREETEXT_RE = re.compile(rb"/Subtype\s*/FreeText\b")
 
 
-def _string_decryptor(data: bytes, password: bytes = b""):
-    """→ callable(raw_string_bytes, obj_num) -> plaintext bytes for
-    the document's standard security handler (strings use the same
-    per-object key as streams for V≤4, the file key for V5; AES
-    strings are IV-prefixed CBC), or None when no decryptor can be
-    built (caller omits string-sourced text — fail-safe)."""
-    from .aescipher import cbc_decrypt, cbc_decrypt_nopad
-
-    try:
-        em = _ENCRYPT_REF_RE.search(data)
-        if em is None:
-            return None
-        enc_num = int(em.group(1))
-        enc_dict = None
-        for om in _OBJ_RE.finditer(data):
-            if int(om.group(1)) == enc_num:
-                enc_dict = om.group(3)
-                break
-        if enc_dict is None:
-            return None
-        vm = re.search(rb"/V\s+(\d+)", enc_dict)
-        rm = re.search(rb"/R\s+(\d+)", enc_dict)
-        v = int(vm.group(1)) if vm else 0
-        r = int(rm.group(1)) if rm else 2
-        if v == 5:
-            u = _pdf_string(enc_dict, rb"/U")
-            ue = _pdf_string(enc_dict, rb"/UE")
-            if u is None or ue is None:
-                return None
-            inter = _hash_2b(password, u[40:48], b"", r)  # lru-cached
-            file_key = cbc_decrypt_nopad(inter, b"\x00" * 16, ue[:32])
-
-            def dec_v5(raw: bytes, num: int) -> bytes:
-                if not raw:
-                    return raw
-                return cbc_decrypt(file_key, raw[:16], raw[16:])
-
-            return dec_v5
-        cfm = b"V2"
-        if v == 4:
-            cm = re.search(rb"/CFM\s*/(\w+)", enc_dict)
-            cfm = cm.group(1) if cm else b"V2"
-            if cfm not in (b"AESV2", b"V2"):
-                return None
-        o = _pdf_string(enc_dict, rb"/O")
-        pm = re.search(rb"/P\s+(-?\d+)", enc_dict)
-        lm = re.search(rb"/Length\s+(\d+)", enc_dict)
-        if o is None or pm is None:
-            return None
-        idm = _ID_RE.search(data)
-        id0 = (bytes.fromhex(
-            re.sub(rb"\s+", b"", idm.group(1)).decode()) if idm else b"")
-        key = _std_key(password, o, int(pm.group(1)), id0, r,
-                       (int(lm.group(1)) // 8) if lm else 5)
-
-        def dec_classic(raw: bytes, num: int) -> bytes:
-            if not raw:
-                return raw
-            if cfm == b"AESV2":
-                return cbc_decrypt(_object_key(key, num, 0, aes=True),
-                                   raw[:16], raw[16:])
-            return _rc4(_object_key(key, num, 0), raw)
-
-        return dec_classic
-    except Exception:
-        return None
-
-
-def _form_and_annot_text(data: bytes, objstm: dict[int, bytes],
-                         dec=None) -> list[str]:
+def _form_and_annot_text(objs: list[tuple[int, int, bytes]],
+                         objstm: dict[int, bytes],
+                         decrypt=None) -> list[str]:
     """Interactive-form text values and FreeText annotation contents,
     in object-number order — the text a filled form carries that no
-    content stream shows. `dec` decrypts string values in encrypted
-    documents; a string that fails to decrypt is skipped.
+    content stream shows. `decrypt` (the security handler's, in
+    encrypted documents) decrypts string values with their object's
+    number and generation; a string that fails to decrypt is skipped.
 
     Provenance matters for decryption: strings in RAW-FILE objects
     carry per-object encryption, but strings inside /ObjStm-expanded
     bodies were already decrypted with the OBJECT STREAM (ISO 32000
     7.6.2: strings in object streams are not separately encrypted) —
-    applying dec() to those would garble (RC4) or drop (AES) them."""
+    decrypting those again would garble (RC4) or drop (AES) them."""
     out: list[tuple[int, str]] = []
-    spaces = [(int(m.group(1)), m.group(3), True)
-              for m in _OBJ_RE.finditer(data)]
-    spaces += [(num, body, False) for num, body in sorted(objstm.items())]
-    for num, body, raw_file in spaces:
+    spaces = [(num, gen, body, True) for num, gen, body in objs]
+    spaces += [(num, 0, body, False) for num, body in sorted(objstm.items())]
+    for num, gen, body, raw_file in spaces:
         if _FT_TX_RE.search(body):
             v = _pdf_string(body, rb"/V")
         elif _FREETEXT_RE.search(body):
@@ -964,9 +854,9 @@ def _form_and_annot_text(data: bytes, objstm: dict[int, bytes],
             continue
         if not v:
             continue
-        if dec is not None and raw_file:
+        if decrypt is not None and raw_file:
             try:
-                v = dec(v, num)
+                v = decrypt(v, num, gen)
             except ValueError:
                 continue  # corrupt/undecryptable string: skip it
         if v:
@@ -1129,10 +1019,7 @@ def extract_pdf_images(data: bytes,
     star's 'embedded images/PDF layouts' input. Remaining image shapes
     (raw samplers, unsupported codec modes) are skipped:
     quarantine-by-omission, the text layer still extracts."""
-    if not is_pdf(data):
-        raise ValueError("not a PDF (missing %PDF- header)")
-    streams = (_decrypt_streams(data, _norm_password(password))
-               if b"/Encrypt" in data else _plain_streams(data))
+    streams = _open(data, password)[1]
     by_num = {num: (d, b) for d, b, num in streams if num >= 0}
     out: list[bytes] = []
     for dict_part, body, _num in streams:
@@ -1573,100 +1460,117 @@ def _skip_decrypt(dict_part: bytes, encrypt_metadata: bool) -> bool:
     return False
 
 
-def _decrypt_streams(data: bytes,
-                     password: bytes = b"") -> list[tuple[bytes, bytes, int]]:
-    """Standard-handler decryption with the supplied (default: empty)
-    user password:
-    → [(stream dict, decrypted body, object number)] for every stream,
-    or raises NotImplementedError for truly password-protected /
-    unsupported-cipher documents. Cross-reference streams (and
-    /Metadata when /EncryptMetadata false) pass through as the
-    plaintext they are; a single stream whose ciphertext is corrupt is
-    skipped, not document-fatal (the key was already validated)."""
+def _strip_eol(raw: bytes) -> bytes:
+    """Stream bytes as the stream regex captures them → the stream
+    data: the EOL marker before `endstream` is not part of it (ISO
+    32000 7.3.8.1), and a cipher must not decrypt it as ciphertext."""
+    if raw.endswith(b"\r\n"):
+        return raw[:-2]
+    return raw[:-1] if raw[-1:] in (b"\n", b"\r") else raw
+
+
+def _security_handler(data: bytes, objs: list[tuple[int, int, bytes]],
+                      password: bytes = b""):
+    """The document's standard security handler, opened with the
+    supplied (default: empty) user password → (decrypt, encryption
+    dictionary object number, encrypt_metadata), or raises
+    NotImplementedError for truly password-protected /
+    unsupported-cipher documents.
+
+    decrypt(raw, num, gen) decrypts one stream body or string of
+    object num/gen: V 1/2/4 use the per-object key (Algorithm 3.1)
+    with RC4 or /AESV2 AES-128-CBC; V5 (R5 legacy / R6 = PDF 2.0
+    /AESV3) uses the 32-byte FILE key directly with AES-256-CBC. AES
+    data is IV-prefixed with PKCS#7 padding; bad AES framing raises
+    ValueError. V≤4 validates the password by recomputing /U
+    (Algorithms 3.4/3.5). V5 unwraps the file key from /UE with the
+    key-salt hash and proves it via the /Perms single-block check (ISO
+    32000-2 7.6.4.4.12 — one Algorithm 2.B evaluation instead of two,
+    which matters because R6's hash costs ~0.2s in pure Python),
+    falling back to the /U validation hash when /Perms is absent."""
+    from .aescipher import cbc_decrypt, cbc_decrypt_nopad, ecb_decrypt_block
+
     em = _ENCRYPT_REF_RE.search(data)
     if em is None:
         raise ValueError("no /Encrypt reference")
     enc_num = int(em.group(1))
     enc_dict = None
-    objs: list[tuple[int, int, bytes]] = []
-    for om in _OBJ_RE.finditer(data):
-        num, gen, body = int(om.group(1)), int(om.group(2)), om.group(3)
-        objs.append((num, gen, body))
+    for num, _gen, body in objs:
         if num == enc_num:
             enc_dict = body
     if enc_dict is None:
         raise ValueError("missing encryption dictionary object")
     vm = re.search(rb"/V\s+(\d+)", enc_dict)
     rm = re.search(rb"/R\s+(\d+)", enc_dict)
-    pm = re.search(rb"/P\s+(-?\d+)", enc_dict)
-    lm = re.search(rb"/Length\s+(\d+)", enc_dict)
+    cm = re.search(rb"/CFM\s*/(\w+)", enc_dict)
     v = int(vm.group(1)) if vm else 0
     r = int(rm.group(1)) if rm else 2
-    cfm = b"V2"  # RC4 for V 1/2
-    if v == 4:
-        # crypt-filter dictionary: only the standard /StdCF shape with
-        # /CFM /AESV2 (AES-128-CBC) or /V2 (RC4) is handled
-        cm = re.search(rb"/CFM\s*/(\w+)", enc_dict)
-        cfm = cm.group(1) if cm else b"V2"
-        if cfm not in (b"AESV2", b"V2"):
+    if v == 5:
+        if r not in (5, 6):
             raise NotImplementedError(
-                f"crypt filter /{cfm.decode('latin-1')} (custom); "
+                f"encryption V=5 revision R={r}; plug a real PDF library in")
+        if cm is not None and cm.group(1) != b"AESV3":
+            raise NotImplementedError(
+                f"V=5 crypt filter /{cm.group(1).decode('latin-1')}; "
                 f"plug a real PDF library in")
-    elif v == 5:
-        return _decrypt_streams_v5(data, enc_dict, enc_num, objs, r,
-                                   password)
-    elif v not in (1, 2):
-        raise NotImplementedError(
-            f"encryption V={v} (custom crypt filters); plug a real "
-            f"PDF library in")
-    if r not in (2, 3, 4):
-        raise NotImplementedError(
-            f"encryption revision R={r}; plug a real PDF library in")
-    o = _pdf_string(enc_dict, rb"/O")
-    u = _pdf_string(enc_dict, rb"/U")
-    if o is None or u is None or pm is None:
-        raise ValueError("malformed encryption dictionary")
-    p = int(pm.group(1))
-    key_len = (int(lm.group(1)) // 8) if lm else 5
-    idm = _ID_RE.search(data)
-    id0 = (bytes.fromhex(re.sub(rb"\s+", b"", idm.group(1)).decode())
-           if idm else b"")
-    key = _std_key(password, o, p, id0, r, key_len)
-    if not _check_user_password(key, u, id0, r):
+        cfm = b"AESV3"
+        u = _pdf_string(enc_dict, rb"/U")
+        ue = _pdf_string(enc_dict, rb"/UE")
+        if u is None or ue is None or len(u) < 48 or len(ue) < 32:
+            raise ValueError("malformed V5 encryption dictionary")
+        perms = _pdf_string(enc_dict, rb"/Perms")
+        inter = _hash_2b(password, u[40:48], b"", r)
+        key = cbc_decrypt_nopad(inter, b"\x00" * 16, ue[:32])
+        unlocked = ((perms is not None and len(perms) >= 16
+                     and ecb_decrypt_block(key, perms[:16])[9:12] == b"adb")
+                    or _hash_2b(password, u[32:40], b"", r) == u[:32])
+    else:
+        cfm = b"V2"  # RC4 for V 1/2
+        if v == 4:
+            # crypt-filter dictionary: only the standard /StdCF shape
+            # with /CFM /AESV2 (AES-128-CBC) or /V2 (RC4) is handled
+            cfm = cm.group(1) if cm else b"V2"
+            if cfm not in (b"AESV2", b"V2"):
+                raise NotImplementedError(
+                    f"crypt filter /{cfm.decode('latin-1')} (custom); "
+                    f"plug a real PDF library in")
+        elif v not in (1, 2):
+            raise NotImplementedError(
+                f"encryption V={v} (custom crypt filters); plug a real "
+                f"PDF library in")
+        if r not in (2, 3, 4):
+            raise NotImplementedError(
+                f"encryption revision R={r}; plug a real PDF library in")
+        o = _pdf_string(enc_dict, rb"/O")
+        u = _pdf_string(enc_dict, rb"/U")
+        pm = re.search(rb"/P\s+(-?\d+)", enc_dict)
+        if o is None or u is None or pm is None:
+            raise ValueError("malformed encryption dictionary")
+        lm = re.search(rb"/Length\s+(\d+)", enc_dict)
+        idm = _ID_RE.search(data)
+        id0 = (bytes.fromhex(re.sub(rb"\s+", b"", idm.group(1)).decode())
+               if idm else b"")
+        key = _std_key(password, o, int(pm.group(1)), id0, r,
+                       (int(lm.group(1)) // 8) if lm else 5)
+        unlocked = _check_user_password(key, u, id0, r)
+    if not unlocked:
         raise NotImplementedError(
             "password-protected PDF (wrong user password); plug a "
             "real PDF library in" if password else
             "password-protected PDF (non-empty user password); plug a "
             "real PDF library in")
+
+    def decrypt(raw: bytes, num: int, gen: int) -> bytes:
+        if cfm == b"AESV3":
+            return cbc_decrypt(key, raw[:16], raw[16:])
+        if cfm == b"AESV2":
+            return cbc_decrypt(_object_key(key, num, gen, aes=True),
+                               raw[:16], raw[16:])
+        return _rc4(_object_key(key, num, gen), raw)
+
     encrypt_metadata = (re.search(rb"/EncryptMetadata\s+false",
                                   enc_dict) is None)
-    out = []
-    for num, gen, body in objs:
-        sm = _STREAM_RE.search(body)
-        if sm is None or num == enc_num:
-            continue
-        if _skip_decrypt(sm.group(1), encrypt_metadata):
-            out.append((sm.group(1), sm.group(2), num))
-            continue
-        if cfm == b"AESV2":
-            ok_key = _object_key(key, num, gen, aes=True)
-            sbody = sm.group(2)  # NOT `data` — don't shadow the PDF arg
-            # the regex body includes any EOL before `endstream`; real
-            # ciphertext is block-aligned, so strip EOL bytes only while
-            # misaligned (mirrors the Flate .strip retry)
-            while (len(sbody) - 16) % 16 and sbody[-1:] in (b"\n", b"\r"):
-                sbody = sbody[:-1]
-            from .aescipher import cbc_decrypt
-            try:
-                if len(sbody) < 16:
-                    raise ValueError("AESV2 stream shorter than its IV")
-                body_out = cbc_decrypt(ok_key, sbody[:16], sbody[16:])
-            except ValueError:
-                continue  # one corrupt stream ≠ a corrupt document
-        else:
-            body_out = _rc4(_object_key(key, num, gen), sm.group(2))
-        out.append((sm.group(1), body_out, num))
-    return out
+    return decrypt, enc_num, encrypt_metadata
 
 
 @functools.lru_cache(maxsize=256)
@@ -1692,68 +1596,3 @@ def _hash_2b(pw: bytes, salt: bytes, udata: bytes, r: int) -> bytes:
         rnd += 1
         if rnd >= 64 and e[-1] <= rnd - 32:
             return k[:32]
-
-
-def _decrypt_streams_v5(data: bytes, enc_dict: bytes, enc_num: int,
-                        objs: list[tuple[int, int, bytes]], r: int,
-                        password: bytes = b"",
-                        ) -> list[tuple[bytes, bytes, int]]:
-    """AES-256 security handler (V5: R5 legacy / R6 = PDF 2.0 /AESV3)
-    with the supplied (default: empty) USER password: unwrap the
-    32-byte file key from /UE with the key-salt hash and prove it via
-    the /Perms single-block check (ISO 32000-2 7.6.4.4.12 — one
-    Algorithm 2.B evaluation instead of two, which matters because R6's
-    hash costs ~0.2s in pure Python); fall back to the /U validation
-    hash when /Perms is absent. Streams AES-256-CBC-decrypt with the
-    FILE key directly (V5 has no per-object key derivation; the IV is
-    the stream's first 16 bytes, padding is PKCS#7 — same framing as
-    /AESV2). Cross-reference streams (and /Metadata under
-    /EncryptMetadata false) are spec-unencrypted and pass through; a
-    single corrupt stream is skipped, not document-fatal."""
-    from .aescipher import cbc_decrypt, cbc_decrypt_nopad, ecb_decrypt_block
-
-    if r not in (5, 6):
-        raise NotImplementedError(
-            f"encryption V=5 revision R={r}; plug a real PDF library in")
-    cm = re.search(rb"/CFM\s*/(\w+)", enc_dict)
-    if cm is not None and cm.group(1) != b"AESV3":
-        raise NotImplementedError(
-            f"V=5 crypt filter /{cm.group(1).decode('latin-1')}; "
-            f"plug a real PDF library in")
-    u = _pdf_string(enc_dict, rb"/U")
-    ue = _pdf_string(enc_dict, rb"/UE")
-    if u is None or ue is None or len(u) < 48 or len(ue) < 32:
-        raise ValueError("malformed V5 encryption dictionary")
-    perms = _pdf_string(enc_dict, rb"/Perms")
-    inter = _hash_2b(password, u[40:48], b"", r)
-    file_key = cbc_decrypt_nopad(inter, b"\x00" * 16, ue[:32])
-    validated = (perms is not None and len(perms) >= 16
-                 and ecb_decrypt_block(file_key, perms[:16])[9:12]
-                 == b"adb")
-    if not validated and _hash_2b(password, u[32:40], b"", r) != u[:32]:
-        raise NotImplementedError(
-            "password-protected PDF (wrong user password); plug a "
-            "real PDF library in" if password else
-            "password-protected PDF (non-empty user password); plug a "
-            "real PDF library in")
-    encrypt_metadata = (re.search(rb"/EncryptMetadata\s+false",
-                                  enc_dict) is None)
-    out = []
-    for num, gen, body in objs:
-        sm = _STREAM_RE.search(body)
-        if sm is None or num == enc_num:
-            continue
-        if _skip_decrypt(sm.group(1), encrypt_metadata):
-            out.append((sm.group(1), sm.group(2), num))
-            continue
-        sbody = sm.group(2)
-        while (len(sbody) - 16) % 16 and sbody[-1:] in (b"\n", b"\r"):
-            sbody = sbody[:-1]
-        try:
-            if len(sbody) < 16:
-                raise ValueError("AESV3 stream shorter than its IV")
-            body_out = cbc_decrypt(file_key, sbody[:16], sbody[16:])
-        except ValueError:
-            continue  # one corrupt stream ≠ a corrupt document
-        out.append((sm.group(1), body_out, num))
-    return out

@@ -821,11 +821,13 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
     """Post-hoc encryptor: take ANY fixture PDF and produce the
     standard-security-handler encrypted equivalent (empty user
     password) — r = 2/3 RC4, 4 AES-128 /AESV2, 6 AES-256 /AESV3.
-    Every stream body is encrypted in place (per-object keys for
-    r ≤ 4, the file key for r = 6) and /Length corrected; the
-    /Encrypt dictionary and /ID land in the trailer. Lets every
-    fixture shape (CID + ToUnicode, ObjStm, CCITT, JBIG2) be
-    exercised under encryption without a bespoke writer each."""
+    Every stream body and every string (literal or hex) outside
+    stream objects is encrypted in place (per-object keys from each
+    object's own number and generation for r ≤ 4, the file key for
+    r = 6) and /Length corrected; the /Encrypt dictionary and /ID land
+    in the trailer. Lets every fixture shape (CID + ToUnicode, ObjStm,
+    CCITT, JBIG2) be exercised under encryption without a bespoke
+    writer each."""
     import hashlib
     import re as _re
 
@@ -895,38 +897,43 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
                 f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>").encode()
 
     header_end = pdf.find(b"\n") + 1
-    def enc_string(raw: bytes, num: int) -> bytes:
+    def enc_string(raw: bytes, num: int, gen: int) -> bytes:
         if r == 6:
             iv = hashlib.md5(b"siv%d%d" % (num, len(raw))).digest()
             return iv + cbc_encrypt(file_key, iv, raw)
         if r == 4:
             iv = hashlib.md5(b"siv%d%d" % (num, len(raw))).digest()
-            return iv + cbc_encrypt(_object_key(key, num, 0, aes=True),
+            return iv + cbc_encrypt(_object_key(key, num, gen, aes=True),
                                     iv, raw)
-        return _rc4(_object_key(key, num, 0), raw)
+        return _rc4(_object_key(key, num, gen), raw)
 
-    _STRLIT_RE = _re.compile(rb"\((?:\\.|[^\\()])*\)", _re.S)
+    # literal OR hex string; `<<` / `>>` dict delimiters never match.
+    # One pass, so the hex this emits is never encrypted a second time.
+    _STRING_RE = _re.compile(
+        rb"\((?P<lit>(?:\\.|[^\\()])*)\)"
+        rb"|(?<!<)<(?!<)(?P<hex>[0-9A-Fa-f\s]*)>", _re.S)
 
-    def enc_strings_in(body: bytes, num: int) -> bytes:
+    def enc_strings_in(body: bytes, num: int, gen: int) -> bytes:
         # spec: ALL strings in the document encrypt (except the
         # encryption dict / ID). Emitted as HEX strings so ciphertext
         # can never unbalance the surrounding dict syntax.
-        from ..functions.pdftext import _unescape
+        from ..functions.pdftext import _hexstr_bytes, _unescape
 
         def repl(m):
-            raw = _unescape(m.group(0)[1:-1])
-            return b"<" + enc_string(raw, num).hex().encode() + b">"
+            raw = (_unescape(m.group("lit")) if m.group("lit") is not None
+                   else _hexstr_bytes(m.group("hex")))
+            return b"<" + enc_string(raw, num, gen).hex().encode() + b">"
 
-        return _STRLIT_RE.sub(repl, body)
+        return _STRING_RE.sub(repl, body)
 
-    objs: list[tuple[int, bytes]] = []
+    objs: list[tuple[int, int, bytes]] = []
     max_num = 0
     for om in _OBJ_RE.finditer(pdf):
-        num, body = int(om.group(1)), om.group(3)
+        num, gen, body = int(om.group(1)), int(om.group(2)), om.group(3)
         max_num = max(max_num, num)
         sm = _STREAM_RE.search(body)
         if sm is None:
-            body = enc_strings_in(body, num)
+            body = enc_strings_in(body, num, gen)
         if sm is not None:
             sbody = sm.group(2)
             if r == 6:
@@ -935,28 +942,28 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
             elif r == 4:
                 iv = hashlib.md5(b"iv%d" % num).digest()
                 enc = iv + cbc_encrypt(
-                    _object_key(key, num, 0, aes=True), iv, sbody)
+                    _object_key(key, num, gen, aes=True), iv, sbody)
             else:
-                enc = _rc4(_object_key(key, num, 0), sbody)
+                enc = _rc4(_object_key(key, num, gen), sbody)
             dict_part = _re.sub(
                 rb"/Length\s+\d+",
                 b"/Length " + str(len(enc)).encode(),
                 sm.group(1), count=1)
             body = (body[: sm.start()] + b"<<" + dict_part
                     + b">>\nstream\n" + enc + b"\nendstream")
-        objs.append((num, body.strip()))
+        objs.append((num, gen, body.strip()))
     enc_num = max_num + 1
-    objs.append((enc_num, enc_dict))
+    objs.append((enc_num, 0, enc_dict))
 
     out = bytearray(pdf[:header_end])
-    offsets: dict[int, int] = {}
-    for num, body in sorted(objs):
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
+    offsets: dict[int, tuple[int, int]] = {}
+    for num, gen, body in sorted(objs):
+        offsets[num] = (len(out), gen)
+        out += f"{num} {gen} obj\n".encode() + body + b"\nendobj\n"
     xref_at = len(out)
     out += b"xref\n0 1\n0000000000 65535 f \n"
-    for num in sorted(offsets):
-        out += f"{num} 1\n{offsets[num]:010d} 00000 n \n".encode()
+    for num, (off, gen) in sorted(offsets.items()):
+        out += f"{num} 1\n{off:010d} {gen:05d} n \n".encode()
     out += (f"trailer\n<< /Size {enc_num + 1} /Root 1 0 R "
             f"/Encrypt {enc_num} 0 R /ID [<{id0.hex()}> <{id0.hex()}>]"
             f" >>\nstartxref\n{xref_at}\n%%EOF\n".encode())

@@ -783,24 +783,82 @@ def test_page_tree_order_beats_file_order():
     no_cat = b"".join(objs[n] for n in (3, 4, 5, 6, 7))
     assert extract_pdf_text(b"%PDF-1.4\n" + no_cat) == \
         "First page text\nSecond page text"
+    # a /Kids chain deeper than Python's recursion limit still walks
+    depth = 3000
+    chain = [b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj"] + [
+        b"%d 0 obj << /Type /Pages /Kids [%d 0 R] >> endobj" % (n, n + 1)
+        for n in range(2, depth + 2)]
+    leaf = depth + 2
+    chain.append(b"%d 0 obj << /Type /Page /Contents %d 0 R >> endobj"
+                 % (leaf, leaf + 1))
+    chain.append(b"%d 0 obj << /Length 16 >> stream\n"
+                 b"BT (deep) Tj ET\nendstream endobj" % (leaf + 1))
+    assert extract_pdf_text(b"%PDF-1.4\n" + b"\n".join(chain)) == "deep"
 
 
 def test_form_text_in_encrypted_documents():
     """Strings carry the same encryption as streams (per-object key
     for V≤4, file key for V5): form values and annotations extract
     from RC4 / AES-128 / AES-256 documents; the raw value never
-    appears in the encrypted bytes."""
+    appears in the encrypted bytes. The per-object key uses the
+    object's own generation number: a field object at generation 1
+    decrypts too."""
+    import re
+
     from effocr_spark.functions.pdftext import extract_pdf_text
     from effocr_spark.synth.pdfgen import encrypt_pdf, make_form_pdf
 
     base = make_form_pdf([["Printed form page"]],
                          fields=[("name", "Jordan Applicant")],
                          freetext=["A margin note"])
-    for r in (2, 4, 6):
-        enc = encrypt_pdf(base, r=r)
+    gen1, n = re.subn(rb"(\d+) 0 obj\n(<< /Type /Annot /Subtype /Widget)",
+                      rb"\1 1 obj\n\2", base)
+    assert n == 1
+    for doc, r in [(base, 2), (base, 3), (base, 4), (base, 6),
+                   (gen1, 2), (gen1, 3), (gen1, 4)]:
+        enc = encrypt_pdf(doc, r=r)
         assert b"Jordan Applicant" not in enc
+        assert (b" 1 obj\n" in enc) == (doc is gen1)
         assert extract_pdf_text(enc) == \
             "Printed form page\nJordan Applicant\nA margin note", r
+
+
+def test_encryption_parity_over_committed_corpus():
+    """Every unencrypted committed fixture, encrypted at R2/R3/R4 (and
+    R6 for one text and one scan fixture, each R6 encryption costing
+    ~0.4 s), extracts the same text and images as the plain document,
+    or raises the same exception type. Covers the stream framing (the
+    EOL before `endstream` is not ciphertext) and hex-string
+    encryption. bad_0.pdf has no `N G obj` envelope, so encrypt_pdf
+    cannot carry its stream over."""
+    from effocr_spark.functions.pdftext import extract_pdf_images
+    from effocr_spark.synth import pdf_fixture_set, pdf_scan_fixture_set
+    from effocr_spark.synth.pdfgen import encrypt_pdf
+
+    def outcome(fn, doc):
+        try:
+            return fn(doc)
+        except Exception as e:  # noqa: BLE001 — compared by type
+            return type(e)
+
+    paths = sorted(pdf_fixture_set.FIXTURE_DIR.glob("*.pdf")) + sorted(
+        pdf_scan_fixture_set.FIXTURE_DIR.glob("*.pdf"))
+    n_docs = 0
+    for path in paths:
+        plain = path.read_bytes()
+        if b"/Encrypt" in plain or path.name == "bad_0.pdf":
+            continue
+        n_docs += 1
+        want = (outcome(extract_pdf_text, plain),
+                outcome(extract_pdf_images, plain))
+        revisions = (2, 3, 4, 6) if path.name in (
+            "form_fields.pdf", "scan_00.pdf") else (2, 3, 4)
+        for r in revisions:
+            enc = encrypt_pdf(plain, r=r)
+            assert (outcome(extract_pdf_text, enc),
+                    outcome(extract_pdf_images, enc)) == want, \
+                (path.name, r)
+    assert n_docs == 47
 
 
 def test_named_base_encodings_winansi_macroman():
