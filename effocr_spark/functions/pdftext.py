@@ -57,6 +57,8 @@ import zlib
 import numpy as np
 
 _STREAM_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.S)
+# a stream dict's /Length N, unless it is an indirect `N G R` reference
+_DIRECT_LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R\b)")
 _FILTER_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
 _PREDICTOR_RE = re.compile(rb"/Predictor\s+(\d+)")
@@ -714,7 +716,7 @@ def _open(data: bytes, password: bytes | str
             for m in _OBJ_RE.finditer(data)]
     decrypt = None
     if b"/Encrypt" in data:
-        decrypt, enc_num, encrypt_metadata = _security_handler(
+        decrypt, enc_num, encrypt_metadata, aes = _security_handler(
             data, objs, _norm_password(password))
     streams = []
     for num, gen, body in objs:
@@ -727,7 +729,8 @@ def _open(data: bytes, password: bytes | str
                 continue
             if not _skip_decrypt(sm.group(1), encrypt_metadata):
                 try:
-                    raw = decrypt(_strip_eol(raw), num, gen)
+                    raw = decrypt(_stream_data(sm.group(1), raw, aes),
+                                  num, gen)
                 except ValueError:
                     continue  # one corrupt stream ≠ a corrupt document
         streams.append((sm.group(1), raw, num))
@@ -1460,10 +1463,25 @@ def _skip_decrypt(dict_part: bytes, encrypt_metadata: bool) -> bool:
     return False
 
 
-def _strip_eol(raw: bytes) -> bytes:
-    """Stream bytes as the stream regex captures them → the stream
-    data: the EOL marker before `endstream` is not part of it (ISO
-    32000 7.3.8.1), and a cipher must not decrypt it as ciphertext."""
+def _stream_data(sdict: bytes, raw: bytes, aes: bool) -> bytes:
+    """Stream bytes as the stream regex captures them → the encrypted
+    stream data: the EOL marker before `endstream` is not part of it
+    (ISO 32000 7.3.8.1), and a cipher must not decrypt it as
+    ciphertext. A direct /Length is the data's length when only
+    whitespace follows it (and, for AES, it is whole IV + blocks).
+    Without one, AES strips EOL bytes only while the body is not
+    block-aligned (a ciphertext ending in 0x0d or 0x0a stays whole);
+    RC4 strips one EOL marker."""
+    lm = _DIRECT_LENGTH_RE.search(sdict)
+    if lm is not None:
+        n = int(lm.group(1))
+        if (n <= len(raw) and not raw[n:].strip()
+                and not (aes and (n < 16 or n % 16))):
+            return raw[:n]
+    if aes:
+        while (len(raw) - 16) % 16 and raw[-1:] in (b"\n", b"\r"):
+            raw = raw[:-1]
+        return raw
     if raw.endswith(b"\r\n"):
         return raw[:-2]
     return raw[:-1] if raw[-1:] in (b"\n", b"\r") else raw
@@ -1473,7 +1491,7 @@ def _security_handler(data: bytes, objs: list[tuple[int, int, bytes]],
                       password: bytes = b""):
     """The document's standard security handler, opened with the
     supplied (default: empty) user password → (decrypt, encryption
-    dictionary object number, encrypt_metadata), or raises
+    dictionary object number, encrypt_metadata, aes), or raises
     NotImplementedError for truly password-protected /
     unsupported-cipher documents.
 
@@ -1570,7 +1588,7 @@ def _security_handler(data: bytes, objs: list[tuple[int, int, bytes]],
 
     encrypt_metadata = (re.search(rb"/EncryptMetadata\s+false",
                                   enc_dict) is None)
-    return decrypt, enc_num, encrypt_metadata
+    return decrypt, enc_num, encrypt_metadata, cfm != b"V2"
 
 
 @functools.lru_cache(maxsize=256)

@@ -861,6 +861,47 @@ def test_encryption_parity_over_committed_corpus():
     assert n_docs == 47
 
 
+def test_encrypted_stream_whose_ciphertext_ends_in_cr():
+    """A writer that encrypts exactly the stream data and ends it with
+    a plain LF leaves `...\\r\\nendstream` when the last ciphertext byte
+    is 0x0d (about 1 stream in 256). That 0x0d is data: the direct
+    /Length keeps it, and without /Length AES strips EOL bytes only
+    while the body is not block-aligned. Each owner password below
+    was picked so that the named stream's ciphertext ends in 0x0d —
+    the Flate text stream (4) of a text page, the DCT image (5) of a
+    scan — at R2/R3 (RC4) and R4 (AES)."""
+    import re
+
+    from effocr_spark.functions.pdftext import (_OBJ_RE, _STREAM_RE,
+                                                extract_pdf_images)
+    from effocr_spark.synth import pdf_scan_fixture_set
+    from effocr_spark.synth.pdfgen import encrypt_pdf
+
+    def data_only(doc):  # streams with no EOL of their own
+        return re.sub(rb"\r?\nendstream", b"endstream", doc)
+
+    text = data_only(make_pdf([["Ciphertext framing line"]]))
+    scan = data_only((pdf_scan_fixture_set.FIXTURE_DIR
+                      / "scan_00.pdf").read_bytes())
+    cases = [(text, 4, 2, 584), (text, 4, 3, 268), (text, 4, 4, 5),
+             (scan, 5, 2, 747), (scan, 5, 3, 1127), (scan, 5, 4, 102)]
+    for plain, num, r, k in cases:
+        enc = encrypt_pdf(plain, r=r, owner_pw=b"owner-%d" % k)
+        bodies = {int(m.group(1)): _STREAM_RE.search(m.group(3))
+                  for m in _OBJ_RE.finditer(enc)}
+        assert bodies[num].group(2).endswith(b"\r\n"), (num, r, k)
+        variants = [enc]
+        if r == 4:  # no /Length: the block-alignment rule alone
+            variants.append(re.sub(rb"/Length \d+([^<>]*>>\s*stream)",
+                                   rb"\1", enc))
+            assert variants[1].count(b"/Length") < enc.count(b"/Length")
+        for doc in variants:
+            assert extract_pdf_text(doc) == extract_pdf_text(plain), \
+                (num, r, k)
+            assert extract_pdf_images(doc) == \
+                extract_pdf_images(plain), (num, r, k)
+
+
 def test_named_base_encodings_winansi_macroman():
     """Simple fonts with a named /Encoding decode through the real
     Annex-D tables, not latin-1: WinAnsi's 0x80-0x9F range (curly
