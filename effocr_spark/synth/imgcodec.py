@@ -7,6 +7,13 @@ decode, filter-0 on encode (deterministic bytes for a given array).
 
 Replaces the reference's `Image.open(path).convert("RGB")`
 (infer_effocr_onnx_multi.py:307) at the UDF boundary.
+
+Decode inflates IDAT only up to the size the IHDR implies (h rows of
+1 + stride bytes) and raises ValueError when more data remains or the
+data is short, so a tiny PNG cannot inflate to gigabytes. Unfiltering
+copies the whole image once (which decodes every filter-0 row), then
+redoes Up and Sub rows in uint8 array arithmetic and Average and Paeth
+rows per pixel.
 """
 
 from __future__ import annotations
@@ -48,34 +55,42 @@ def encode_png(img: np.ndarray) -> bytes:
 
 
 def _unfilter(data: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
-    out = np.zeros((h, stride), dtype=np.uint8)
+    """Undo the PNG row filters (also the PDF /Predictor ≥ 10 path):
+    `data` is h rows of one filter-type byte + `stride` bytes, `bpp`
+    the byte distance to the pixel on the left. Every row starts as
+    its raw bytes — one copy, which already decodes every filter-0
+    row — then the filtered rows are redone in order: Up and Sub in
+    uint8 array arithmetic (mod 256), Average and Paeth per pixel."""
     rows = data.reshape(h, stride + 1)
-    for y in range(h):
-        ftype = rows[y, 0]
-        cur = rows[y, 1:].astype(np.int32)
-        prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, np.int32)
-        if ftype == 0:
-            line = cur
-        elif ftype == 2:  # Up
-            line = (cur + prev) & 0xFF
+    ftypes = rows[:, 0]
+    out = rows[:, 1:].copy()
+    if (ftypes > 4).any():
+        raise ValueError(f"bad PNG filter {ftypes[ftypes > 4][0]}")
+    zero = np.zeros(stride, np.uint8)
+    for y in np.flatnonzero(ftypes).tolist():
+        ftype = ftypes[y]
+        prev = out[y - 1] if y > 0 else zero
+        if ftype == 2:  # Up
+            out[y] += prev
+        elif ftype == 1:  # Sub: running sum per byte lane, mod 256
+            lanes = np.zeros(-(-stride // bpp) * bpp, np.uint8)
+            lanes[:stride] = out[y]
+            out[y] = np.cumsum(lanes.reshape(-1, bpp), axis=0,
+                               dtype=np.uint8).ravel()[:stride]
         else:
-            line = np.zeros(stride, np.int32)
+            cur, up, line = out[y].tolist(), prev.tolist(), [0] * stride
             for x in range(stride):
                 a = line[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if ftype == 1:  # Sub
-                    pred = a
-                elif ftype == 3:  # Average
+                b = up[x]
+                if ftype == 3:  # Average
                     pred = (a + b) // 2
-                elif ftype == 4:  # Paeth
+                else:  # Paeth
+                    c = up[x - bpp] if x >= bpp else 0
                     p = a + b - c
                     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
                     pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                else:
-                    raise ValueError(f"bad PNG filter {ftype}")
                 line[x] = (cur[x] + pred) & 0xFF
-        out[y] = line.astype(np.uint8)
+            out[y] = line
     return out
 
 
@@ -108,8 +123,18 @@ def decode_png(data: bytes) -> np.ndarray:
             break
     channels = 3 if color_type == 2 else 1
     stride = w * channels
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
-    out = _unfilter(raw, h, stride, channels)
+    # inflate no further than the image needs: a crafted IDAT that
+    # inflates to gigabytes under a tiny IHDR quarantines the row
+    # after at most one byte past the expected size
+    size = h * (stride + 1)
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(idat, size)
+    if inflater.unconsumed_tail and inflater.decompress(
+            inflater.unconsumed_tail, 1):
+        raise ValueError("PNG image data exceeds its IHDR size")
+    if len(raw) < size:
+        raise ValueError("PNG image data is short")
+    out = _unfilter(np.frombuffer(raw, np.uint8), h, stride, channels)
     if channels == 1:
         return out.reshape(h, w)
     return out.reshape(h, w, 3)

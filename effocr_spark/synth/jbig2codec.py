@@ -19,7 +19,13 @@ are independent walks of the published algorithm; tests pin (a) the
 Table E.1, Qe monotone envelope, index ranges), (b) MQ
 encode→decode roundtrips over adversarial bit/context sequences
 (incl. 0xFF-stuffing paths), and (c) generic-region roundtrips across
-templates, TPGDON, AT-pixel placements, and sizes. No external JBIG2
+templates, TPGDON, AT-pixel placements, and sizes. The MQ coder keeps
+its adaptive state (icx, mps) in Python lists and reads Table E.1 as
+tuples. Generic-region contexts (templates 0-3) come from rolling
+per-row bit windows with the AT pixels read explicitly
+(_generic_code, shared by the generic region, symbol dictionary and
+halftone paths, encode and decode), in the spec-figure bit layout the
+committed fixtures were coded with. No external JBIG2
 oracle ships in this container, so cross-implementation interop rests
 on following the spec's context layouts literally (6.2.5.7 figures);
 that residual risk is documented here rather than hidden.
@@ -33,7 +39,7 @@ import numpy as np
 
 # ------------------------------------------------ MQ coder (Annex E)
 # (Qe, NMPS, NLPS, SWITCH) — T.88 Table E.1 (same table as JPEG2000).
-_QE = [
+_QE = (
     (0x5601, 1, 1, 1), (0x3401, 2, 6, 0), (0x1801, 3, 9, 0),
     (0x0AC1, 4, 12, 0), (0x0521, 5, 29, 0), (0x0221, 38, 33, 0),
     (0x5601, 7, 6, 1), (0x5401, 8, 14, 0), (0x4801, 9, 14, 0),
@@ -50,7 +56,7 @@ _QE = [
     (0x0085, 40, 37, 0), (0x0049, 41, 38, 0), (0x0025, 42, 39, 0),
     (0x0015, 43, 40, 0), (0x0009, 44, 41, 0), (0x0005, 45, 42, 0),
     (0x0001, 45, 43, 0), (0x5601, 46, 46, 0),
-]
+)
 
 
 def _check_region_dims(rw: int, rh: int) -> None:
@@ -71,8 +77,9 @@ def _check_page_alloc(h: int, w: int) -> None:
 
 class MQDecoder:
     """T.88 Annex E software-conventions MQ decoder. Context state
-    (index, MPS) lives in caller-supplied arrays so one decoder serves
-    the whole region."""
+    (index, MPS) lives in caller-supplied Python lists so one decoder
+    serves the whole region; registers live in locals for the
+    duration of one decode."""
 
     def __init__(self, data: bytes):
         self.data = data
@@ -102,39 +109,45 @@ class MQDecoder:
             self.c += b1 << 8
             self.ct = 8
 
-    def decode(self, icx: np.ndarray, mps: np.ndarray, cx: int) -> int:
+    def decode(self, icx: list[int], mps: list[int], cx: int) -> int:
         qe, nmps, nlps, switch = _QE[icx[cx]]
-        self.a -= qe
-        if ((self.c >> 16) & 0xFFFF) < qe:
-            if self.a < qe:  # conditional MPS/LPS exchange
-                d = int(mps[cx])
+        a = self.a - qe
+        c = self.c
+        if c >> 16 < qe:  # C stays below 2^32, so C >> 16 is Chigh
+            if a < qe:  # conditional MPS/LPS exchange
+                d = mps[cx]
                 icx[cx] = nmps
             else:
-                d = 1 - int(mps[cx])
+                d = 1 - mps[cx]
                 if switch:
-                    mps[cx] = 1 - mps[cx]
+                    mps[cx] = d
                 icx[cx] = nlps
-            self.a = qe
+            a = qe
         else:
-            self.c = (self.c - (qe << 16)) & 0xFFFFFFFF
-            if self.a & 0x8000:
-                return int(mps[cx])
-            if self.a < qe:
-                d = 1 - int(mps[cx])
+            c -= qe << 16
+            if a & 0x8000:
+                self.a, self.c = a, c
+                return mps[cx]
+            if a < qe:
+                d = 1 - mps[cx]
                 if switch:
-                    mps[cx] = 1 - mps[cx]
+                    mps[cx] = d
                 icx[cx] = nlps
             else:
-                d = int(mps[cx])
+                d = mps[cx]
                 icx[cx] = nmps
+        ct = self.ct
         while True:  # RENORMD
-            if self.ct == 0:
+            if ct == 0:
+                self.c = c
                 self._bytein()
-            self.a = (self.a << 1) & 0xFFFF
-            self.c = (self.c << 1) & 0xFFFFFFFF
-            self.ct -= 1
-            if self.a & 0x8000:
+                c, ct = self.c, self.ct
+            a = (a << 1) & 0xFFFF
+            c = (c << 1) & 0xFFFFFFFF
+            ct -= 1
+            if a & 0x8000:
                 break
+        self.a, self.c, self.ct = a, c, ct
         return d
 
 
@@ -168,36 +181,37 @@ class MQEncoder:
         self.c &= 0x7FFFF
         self.ct = 8
 
-    def encode(self, icx: np.ndarray, mps: np.ndarray, cx: int,
+    def encode(self, icx: list[int], mps: list[int], cx: int,
                d: int) -> None:
         qe, nmps, nlps, switch = _QE[icx[cx]]
-        if d == int(mps[cx]):  # CODEMPS
-            self.a -= qe
-            if self.a & 0x8000:
+        a = self.a - qe
+        if d == mps[cx]:  # CODEMPS
+            if a & 0x8000:
+                self.a = a
                 self.c += qe
                 return
-            if self.a < qe:
-                self.a = qe
+            if a < qe:
+                a = qe
             else:
                 self.c += qe
             icx[cx] = nmps
         else:  # CODELPS
-            self.a -= qe
-            if self.a < qe:
+            if a < qe:
                 self.c += qe
             else:
-                self.a = qe
+                a = qe
             if switch:
                 mps[cx] = 1 - mps[cx]
             icx[cx] = nlps
         while True:  # RENORME
             if self.ct == 0:
                 self._byteout()
-            self.a = (self.a << 1) & 0xFFFF
+            a = (a << 1) & 0xFFFF
             self.c = (self.c << 1) & 0xFFFFFFFF
             self.ct -= 1
-            if self.a & 0x8000:
+            if a & 0x8000:
                 break
+        self.a = a
 
     def flush(self) -> bytes:
         # SETBITS: drive the low 16 code bits to ONES — the decoder
@@ -236,41 +250,92 @@ _TPGDON_CTX = {0: 0x9B25, 1: 0x0795, 2: 0x00E5, 3: 0x0195}
 _CTX_BITS = {0: 16, 1: 13, 2: 10, 3: 10}
 
 
-def _ctx_fn(template: int, at: list[tuple[int, int]]):
-    """Pixel-context builder for one template: (bitmap, x, y) → int.
-    Bit layout follows the spec figures (LSB = nearest left pixel)."""
-    if template == 0:
-        a1, a2, a3, a4 = at
-        spots = [(-1, 0), (-2, 0), (-3, 0), (-4, 0), a1,
-                 (2, -1), (1, -1), (0, -1), (-1, -1), (-2, -1), a2,
-                 a3, (1, -2), (0, -2), (-1, -2), a4]
-    elif template == 1:
-        (a1,) = at
-        spots = [(-1, 0), (-2, 0), (-3, 0), a1,
-                 (2, -1), (1, -1), (0, -1), (-1, -1), (-2, -1),
-                 (2, -2), (1, -2), (0, -2), (-1, -2)]
-    elif template == 2:
-        (a1,) = at
-        spots = [(-1, 0), (-2, 0), a1,
-                 (1, -1), (0, -1), (-1, -1), (-2, -1),
-                 (1, -2), (0, -2), (-1, -2)]
-    elif template == 3:
-        (a1,) = at
-        spots = [(-1, 0), (-2, 0), (-3, 0), (-4, 0), a1,
-                 (1, -1), (0, -1), (-1, -1), (-2, -1), (-3, -1)]
-    else:
-        raise ValueError(f"bad GBTEMPLATE {template}")
+# Rolling context windows for the nominal template pixels (6.2.5.7,
+# figures 3-6). Per template: the current row's window width (pixel
+# x-1 in context bit 0, x-2 in bit 1, ...); (dy, rightmost dx, width,
+# lowest context bit) for each row above, its rightmost pixel in the
+# lowest bit; and the context bit of each AT pixel in order. Template 3
+# has no row -2: its zero-width window always reads 0.
+_WINDOWS = {
+    0: (4, ((-1, 2, 5, 5), (-2, 1, 3, 12)), (4, 10, 11, 15)),
+    1: (3, ((-1, 2, 5, 4), (-2, 2, 4, 9)), (3,)),
+    2: (2, ((-1, 1, 4, 3), (-2, 1, 3, 7)), (2,)),
+    3: (4, ((-1, 1, 5, 5), (-2, 0, 0, 0)), (4,)),
+}
 
-    def ctx(bm: np.ndarray, x: int, y: int) -> int:
-        h, w = bm.shape
-        c = 0
-        for bit, (dx, dy) in enumerate(spots):
-            xx, yy = x + dx, y + dy
-            if 0 <= xx < w and 0 <= yy < h and bm[yy, xx]:
-                c |= 1 << bit
-        return c
 
-    return ctx
+def _generic_code(mq, icx: list[int], mps: list[int], template: int,
+                  at: list[tuple[int, int]], bm: np.ndarray,
+                  tpgdon: bool = False,
+                  skip: np.ndarray | None = None) -> None:
+    """Code one generic region's pixels (6.2.5.7) on the caller's MQ
+    coder and context lists: an MQDecoder decodes into `bm` (HxW
+    uint8, zeroed), an MQEncoder encodes `bm`. The context of each
+    pixel is built from rolling per-row bit windows plus explicit
+    reads of the AT pixels; pixels outside the region read 0. `skip`
+    marks pixels that are never coded (they read and stay 0; the
+    encoder's caller zeroes them in `bm`)."""
+    h, w = bm.shape
+    encode = isinstance(mq, MQEncoder)
+    code = mq.encode if encode else mq.decode
+    n0, ((dy1, dx1, n1, b1), (dy2, dx2, n2, b2)), at_bits = \
+        _WINDOWS[template]
+    m0, m1, m2 = (1 << n0) - 1, (1 << n1) - 1, (1 << n2) - 1
+    pad = max([4] + [abs(dx) for dx, _ in at])
+    zero = [0] * (w + 2 * pad)
+    src = [[0] * pad + r + [0] * pad for r in bm.tolist()] \
+        if encode else None
+    skips = skip.tolist() if skip is not None else None
+    rows: list[list[int]] = []  # coded rows, `pad` zeros each side
+    tp_ctx = _TPGDON_CTX[template]
+    ltp = 0
+    for y in range(h):
+        cur = src[y] if encode else [0] * (w + 2 * pad)
+        if tpgdon:
+            if encode:
+                same = int(y > 0 and cur == src[y - 1])
+                code(icx, mps, tp_ctx, ltp ^ same)
+                ltp = same
+            else:
+                ltp ^= code(icx, mps, tp_ctx)
+            if ltp:  # typical row: a copy of the one above
+                if y:
+                    rows.append(rows[-1])
+                    if not encode:
+                        bm[y] = bm[y - 1]
+                else:
+                    rows.append(zero)
+                continue
+        r1 = rows[y + dy1] if y + dy1 >= 0 else zero
+        r2 = rows[y + dy2] if y + dy2 >= 0 else zero
+        o1, o2 = pad + dx1, pad + dx2
+        w1 = w2 = 0
+        for j in range(o1 - n1 + 1, o1):
+            w1 = (w1 << 1) | r1[j]
+        for j in range(o2 - n2 + 1, o2):
+            w2 = (w2 << 1) | r2[j]
+        ats = [(cur if dy == 0 else rows[y + dy] if 0 <= y + dy < y
+                else zero, pad + dx, bit)
+               for (dx, dy), bit in zip(at, at_bits)]
+        srow = skips[y] if skips is not None else None
+        w0 = 0
+        for x in range(w):
+            w1 = ((w1 << 1) | r1[x + o1]) & m1
+            w2 = ((w2 << 1) | r2[x + o2]) & m2
+            cx = w0 | w1 << b1 | w2 << b2
+            for r, o, bit in ats:
+                cx |= r[x + o] << bit
+            if srow is not None and srow[x]:
+                v = 0
+            elif encode:
+                v = cur[x + pad]
+                code(icx, mps, cx, v)
+            else:
+                v = cur[x + pad] = code(icx, mps, cx)
+            w0 = ((w0 << 1) | v) & m0
+        rows.append(cur)
+        if not encode:
+            bm[y] = cur[pad:pad + w]
 
 
 def generic_region_decode(data: bytes, w: int, h: int,
@@ -280,22 +345,10 @@ def generic_region_decode(data: bytes, w: int, h: int,
     """MQ-coded generic region → {0,1} bitmap (1 = black), spec
     6.2.5.7 per-pixel path (no skip bitmap, no refinement)."""
     at = at or _NOMINAL_AT[template]
-    ctx = _ctx_fn(template, at)
     n_ctx = 1 << _CTX_BITS[template]
-    icx = np.zeros(n_ctx, np.int64)
-    mps = np.zeros(n_ctx, np.int64)
-    dec = MQDecoder(data)
     bm = np.zeros((h, w), np.uint8)
-    ltp = 0
-    for y in range(h):
-        if tpgdon:
-            ltp ^= dec.decode(icx, mps, _TPGDON_CTX[template])
-            if ltp:
-                if y > 0:
-                    bm[y] = bm[y - 1]
-                continue
-        for x in range(w):
-            bm[y, x] = dec.decode(icx, mps, ctx(bm, x, y))
+    _generic_code(MQDecoder(data), [0] * n_ctx, [0] * n_ctx, template,
+                  at, bm, tpgdon)
     return bm
 
 
@@ -304,28 +357,13 @@ def generic_region_encode(bm: np.ndarray, template: int = 0,
                           at: list[tuple[int, int]] | None = None
                           ) -> bytes:
     """{0,1} bitmap → MQ-coded generic region (inverse of
-    generic_region_decode; shared context builder ⇒ roundtrip by
-    construction)."""
+    generic_region_decode; the shared _generic_code walk ⇒ roundtrip
+    by construction)."""
     at = at or _NOMINAL_AT[template]
-    ctx = _ctx_fn(template, at)
     n_ctx = 1 << _CTX_BITS[template]
-    icx = np.zeros(n_ctx, np.int64)
-    mps = np.zeros(n_ctx, np.int64)
     enc = MQEncoder()
-    h, w = bm.shape
-    ltp = 0
-    for y in range(h):
-        if tpgdon:
-            same = bool(y > 0 and np.array_equal(bm[y], bm[y - 1]))
-            if ltp != same:
-                enc.encode(icx, mps, _TPGDON_CTX[template], 1)
-                ltp = int(same)
-            else:
-                enc.encode(icx, mps, _TPGDON_CTX[template], 0)
-            if ltp:
-                continue
-        for x in range(w):
-            enc.encode(icx, mps, ctx(bm, x, y), int(bm[y, x]))
+    _generic_code(enc, [0] * n_ctx, [0] * n_ctx, template, at, bm,
+                  tpgdon)
     return enc.flush()
 
 
@@ -347,30 +385,21 @@ _REF_REFERENCE = [
 _REF_NOMINAL_AT = [(-1, -1), (-1, -1)]
 
 
-def _ref_ctx_fn(template: int, at: list[tuple[int, int]]):
+def _ref_layout(template: int, at: list[tuple[int, int]]):
+    """→ ((coding, reference), n_bits): (tx, ty, bit) per context
+    pixel of the current bitmap and of the reference, `bit` its place
+    in the context label (coding then reference, MSB first in listing
+    order)."""
     coding = list(_REF_CODING[template])
     reference = list(_REF_REFERENCE[template])
     if template == 0:
         coding.append(tuple(at[0]))
         reference.append(tuple(at[1]))
-
-    def ctx(bm: np.ndarray, ref: np.ndarray, x: int, y: int,
-            dx: int, dy: int) -> int:
-        h, w = bm.shape
-        rh, rw = ref.shape
-        cx = 0
-        for tx, ty in coding:
-            xx, yy = x + tx, y + ty
-            cx = (cx << 1) | (int(bm[yy, xx])
-                              if 0 <= xx < w and 0 <= yy < h else 0)
-        for tx, ty in reference:
-            xx, yy = x - dx + tx, y - dy + ty
-            cx = (cx << 1) | (int(ref[yy, xx])
-                              if 0 <= xx < rw and 0 <= yy < rh else 0)
-        return cx
-
     n_bits = len(coding) + len(reference)
-    return ctx, n_bits
+    bits = iter(range(n_bits - 1, -1, -1))
+    layout = ([(tx, ty, next(bits)) for tx, ty in coding],
+              [(tx, ty, next(bits)) for tx, ty in reference])
+    return layout, n_bits
 
 
 #: SLTP contexts for refinement typical prediction (T.88 6.3.5.6):
@@ -378,75 +407,82 @@ def _ref_ctx_fn(template: int, at: list[tuple[int, int]]):
 _TPGRON_SLTP_CTX = {0: 0x0100, 1: 0x0080}
 
 
-def _typical_ref_val(ref: np.ndarray, x: int, y: int,
-                     dx: int, dy: int) -> int | None:
-    """TYPPIX test (6.3.5.6): the 3×3 reference neighborhood around
-    the corresponding pixel — uniform → that value, else None."""
-    rh, rw = ref.shape
-    v0 = None
-    for yy in (y - dy - 1, y - dy, y - dy + 1):
-        for xx in (x - dx - 1, x - dx, x - dx + 1):
-            v = (int(ref[yy, xx])
-                 if 0 <= xx < rw and 0 <= yy < rh else 0)
-            if v0 is None:
-                v0 = v
-            elif v != v0:
-                return None
-    return v0
+def _shifted(rows: list[list[int]], y: int, shift: int,
+             n: int) -> list[int]:
+    """Row y of `rows` re-indexed so out[k] = rows[y][k + shift] for
+    k < n, 0 outside the bitmap (never allocates more than n)."""
+    if not 0 <= y < len(rows):
+        return [0] * n
+    row = rows[y]
+    lo, hi = max(0, -shift), min(n, len(row) - shift)
+    if lo >= hi:
+        return [0] * n
+    return [0] * lo + row[lo + shift:hi + shift] + [0] * (n - hi)
 
 
-def _refine_core_decode(dec: "MQDecoder", icx: np.ndarray,
-                        mps: np.ndarray, ctx, w: int, h: int,
-                        ref: np.ndarray, dx: int, dy: int,
-                        tpgron: bool = False, sltp_ctx: int = 0x0100
-                        ) -> np.ndarray:
-    """Refinement decode on an EXISTING MQ decoder with caller-owned
-    contexts — the form symbol-dict REFAGG and text-region REFINE use
-    (one arithmetic stream shared with the integer procedures).
-    tpgron enables typical prediction (6.3.5.6): a per-row LTP toggle
-    bit; in LTP rows, pixels whose 3×3 reference neighborhood is
-    uniform take that value without decoding."""
-    bm = np.zeros((h, w), np.uint8)
-    ltp = 0
-    for y in range(h):
-        if tpgron:
-            ltp ^= dec.decode(icx, mps, sltp_ctx)
-        for x in range(w):
-            if tpgron and ltp:
-                tv = _typical_ref_val(ref, x, y, dx, dy)
-                if tv is not None:
-                    bm[y, x] = tv
-                    continue
-            bm[y, x] = dec.decode(icx, mps, ctx(bm, ref, x, y, dx, dy))
-    return bm
-
-
-def _refine_core_encode(enc: "MQEncoder", icx: np.ndarray,
-                        mps: np.ndarray, ctx, bm: np.ndarray,
-                        ref: np.ndarray, dx: int, dy: int,
-                        tpgron: bool = False,
-                        sltp_ctx: int = 0x0100) -> None:
+def _refine_code(mq, icx: list[int], mps: list[int], layout,
+                 bm: np.ndarray, ref: np.ndarray, dx: int, dy: int,
+                 tpgron: bool = False, sltp_ctx: int = 0x0100) -> None:
+    """Code one refinement region's pixels (6.3.5) against `ref` on
+    the caller's MQ coder and contexts — the form symbol-dict REFAGG
+    and text-region REFINE use (one arithmetic stream shared with the
+    integer procedures): an MQDecoder decodes into `bm` (HxW uint8,
+    zeroed), an MQEncoder encodes `bm`. Each context pixel is read
+    from a Python row list — reference rows shifted once per row to
+    line up with x — so pixels outside either bitmap read 0 without a
+    bounds test. tpgron enables typical prediction (6.3.5.6): a
+    per-row LTP toggle bit; in LTP rows, pixels whose 3×3 reference
+    neighbourhood is uniform take that value uncoded (the encoder
+    turns LTP on only when every such pixel in the row really equals
+    it — lossless by construction, with real row-to-row toggles)."""
     h, w = bm.shape
+    encode = isinstance(mq, MQEncoder)
+    code = mq.encode if encode else mq.decode
+    coding, reference = layout
+    pad = max(abs(tx) for tx, _, _ in coding)
+    zero = [0] * (w + 2 * pad)
+    src = [[0] * pad + r + [0] * pad for r in bm.tolist()] \
+        if encode else None
+    refrows = ref.tolist()
+    rows: list[list[int]] = []  # coded rows, `pad` zeros each side
     ltp = 0
     for y in range(h):
+        cur = src[y] if encode else [0] * (w + 2 * pad)
+        spots = [(cur if ty == 0 else rows[y + ty] if 0 <= y + ty < y
+                  else zero, pad + tx, bit) for tx, ty, bit in coding]
+        spots += [(_shifted(refrows, y - dy + ty, tx - dx, w), 0, bit)
+                  for tx, ty, bit in reference]
+        typical = None
         if tpgron:
-            # LTP on only when every typical pixel in the row really
-            # equals its uniform neighborhood value — lossless by
-            # construction, with real row-to-row toggles
-            want = 1
-            for x in range(w):
-                tv = _typical_ref_val(ref, x, y, dx, dy)
-                if tv is not None and int(bm[y, x]) != tv:
-                    want = 0
-                    break
-            enc.encode(icx, mps, sltp_ctx, ltp ^ want)
-            ltp = want
+            # 3×3 reference sums: 0 → typical 0, 9 → typical 1
+            cols = [a + b + c for a, b, c in zip(
+                *(_shifted(refrows, y - dy + k, -dx - 1, w + 2)
+                  for k in (-1, 0, 1)))]
+            sums = [a + b + c for a, b, c in zip(cols, cols[1:],
+                                                  cols[2:])]
+            typical = [0 if t == 0 else 1 if t == 9 else None
+                       for t in sums]
+            if encode:
+                want = int(all(tv is None or tv == v for tv, v in
+                               zip(typical, cur[pad:pad + w])))
+                code(icx, mps, sltp_ctx, ltp ^ want)
+                ltp = want
+            else:
+                ltp ^= code(icx, mps, sltp_ctx)
         for x in range(w):
-            if tpgron and ltp \
-                    and _typical_ref_val(ref, x, y, dx, dy) is not None:
+            if ltp and typical[x] is not None:
+                cur[x + pad] = typical[x]
                 continue
-            enc.encode(icx, mps, ctx(bm, ref, x, y, dx, dy),
-                       int(bm[y, x]))
+            cx = 0
+            for r, o, bit in spots:
+                cx |= r[x + o] << bit
+            if encode:
+                code(icx, mps, cx, cur[x + pad])
+            else:
+                cur[x + pad] = code(icx, mps, cx)
+        rows.append(cur)
+        if not encode:
+            bm[y] = cur[pad:pad + w]
 
 
 def refinement_region_decode(data: bytes, w: int, h: int,
@@ -458,12 +494,13 @@ def refinement_region_decode(data: bytes, w: int, h: int,
     against a reference bitmap (spec 6.3.5; tpgron=True enables the
     6.3.5.6 typical-prediction row path)."""
     at = at or _REF_NOMINAL_AT
-    ctx, n_bits = _ref_ctx_fn(template, at)
-    icx = np.zeros(1 << n_bits, np.int64)
-    mps = np.zeros(1 << n_bits, np.int64)
-    return _refine_core_decode(MQDecoder(data), icx, mps, ctx, w, h,
-                               ref, dx, dy, tpgron=tpgron,
-                               sltp_ctx=_TPGRON_SLTP_CTX[template])
+    layout, n_bits = _ref_layout(template, at)
+    icx = [0] * (1 << n_bits)
+    mps = [0] * (1 << n_bits)
+    bm = np.zeros((h, w), np.uint8)
+    _refine_code(MQDecoder(data), icx, mps, layout, bm, ref, dx, dy,
+                 tpgron=tpgron, sltp_ctx=_TPGRON_SLTP_CTX[template])
+    return bm
 
 
 def refinement_region_encode(bm: np.ndarray, ref: np.ndarray,
@@ -471,17 +508,16 @@ def refinement_region_encode(bm: np.ndarray, ref: np.ndarray,
                              dy: int = 0,
                              at: list[tuple[int, int]] | None = None,
                              tpgron: bool = False) -> bytes:
-    """Inverse of refinement_region_decode (shared context builder ⇒
-    roundtrip by construction). Compression is high exactly when bm is
+    """Inverse of refinement_region_decode (the shared _refine_code
+    walk ⇒ roundtrip by construction). Compression is high exactly when bm is
     mostly equal to ref — the refinement use case."""
     at = at or _REF_NOMINAL_AT
-    ctx, n_bits = _ref_ctx_fn(template, at)
-    icx = np.zeros(1 << n_bits, np.int64)
-    mps = np.zeros(1 << n_bits, np.int64)
+    layout, n_bits = _ref_layout(template, at)
+    icx = [0] * (1 << n_bits)
+    mps = [0] * (1 << n_bits)
     enc = MQEncoder()
-    _refine_core_encode(enc, icx, mps, ctx, bm, ref, dx, dy,
-                        tpgron=tpgron,
-                        sltp_ctx=_TPGRON_SLTP_CTX[template])
+    _refine_code(enc, icx, mps, layout, bm, ref, dx, dy, tpgron=tpgron,
+                 sltp_ctx=_TPGRON_SLTP_CTX[template])
     return enc.flush()
 
 
@@ -588,19 +624,14 @@ def decode_halftone_region(payload: bytes, patterns: list[np.ndarray]
             prev = bit
     else:
         at = _halftone_gray_at(template)
-        ctx = _ctx_fn(template, at)
         n_ctx = 1 << _CTX_BITS[template]
-        icx = np.zeros(n_ctx, np.int64)
-        mps = np.zeros(n_ctx, np.int64)
+        icx = [0] * n_ctx
+        mps = [0] * n_ctx
         dec = MQDecoder(payload[38:])
         for j in range(n_bits - 1, -1, -1):  # MSB first, Gray-decoded
             plane = np.zeros((hgh, hgw), np.uint8)
-            for y in range(hgh):
-                for x in range(hgw):
-                    if skip is not None and skip[y, x]:
-                        continue  # skipped pixel: 0, never decoded
-                    plane[y, x] = dec.decode(icx, mps,
-                                             ctx(plane, x, y))
+            # skipped pixels: 0, never decoded
+            _generic_code(dec, icx, mps, template, at, plane, skip=skip)
             bit = plane ^ prev  # Gray code: b_j = plane_j XOR b_{j+1}
             gray |= bit.astype(np.int64) << j
             prev = bit
@@ -661,20 +692,14 @@ def encode_halftone_region(w: int, h: int, gray: np.ndarray,
         body = g4_encode(np.where(tall == 1, 0, 255).astype(np.uint8))
     else:
         at = _halftone_gray_at(template)
-        ctx = _ctx_fn(template, at)
         n_ctx = 1 << _CTX_BITS[template]
-        icx = np.zeros(n_ctx, np.int64)
-        mps = np.zeros(n_ctx, np.int64)
+        icx = [0] * n_ctx
+        mps = [0] * n_ctx
         enc = MQEncoder()
         for plane in planes:
             if skip is not None:
                 plane = np.where(skip == 1, np.uint8(0), plane)
-            for y in range(hgh):
-                for x in range(hgw):
-                    if skip is not None and skip[y, x]:
-                        continue
-                    enc.encode(icx, mps, ctx(plane, x, y),
-                               int(plane[y, x]))
+            _generic_code(enc, icx, mps, template, at, plane, skip=skip)
         body = enc.flush()
     flags = (((template & 3) << 1) | (1 if mmr else 0)
              | (8 if enableskip else 0))
@@ -1080,8 +1105,8 @@ class _IntCtx:
     __slots__ = ("icx", "mps")
 
     def __init__(self, n: int = 512):
-        self.icx = np.zeros(n, np.int64)
-        self.mps = np.zeros(n, np.int64)
+        self.icx = [0] * n
+        self.mps = [0] * n
 
 
 _IA_CLASSES = [  # (prefix-length, value-bits, offset) per Annex A.2
@@ -1227,16 +1252,15 @@ def _decode_symbol_dict(payload: bytes,
 
     mq = MQDecoder(payload[pos:])
     iadh, iadw, iaex = _IntCtx(), _IntCtx(), _IntCtx()
-    gb_icx = np.zeros(1 << _CTX_BITS[template], np.int64)
-    gb_mps = np.zeros(1 << _CTX_BITS[template], np.int64)
-    ctx = _ctx_fn(template, at)
+    gb_icx = [0] * (1 << _CTX_BITS[template])
+    gb_mps = [0] * (1 << _CTX_BITS[template])
     if sdrefagg:
         iaai, iardx, iardy = _IntCtx(), _IntCtx(), _IntCtx()
         symcodelen = _symcodelen(len(input_syms) + n_new)
         iaid = _IntCtx(1 << (symcodelen + 1))
-        rctx, rn_bits = _ref_ctx_fn(rtemplate, rat or _REF_NOMINAL_AT)
-        gr_icx = np.zeros(1 << rn_bits, np.int64)
-        gr_mps = np.zeros(1 << rn_bits, np.int64)
+        rlayout, rn_bits = _ref_layout(rtemplate, rat or _REF_NOMINAL_AT)
+        gr_icx = [0] * (1 << rn_bits)
+        gr_mps = [0] * (1 << rn_bits)
 
     new_syms: list[np.ndarray] = []
     hcheight = 0
@@ -1265,15 +1289,12 @@ def _decode_symbol_dict(payload: bytes,
                 pool = input_syms + new_syms
                 if rdx is OOB or rdy is OOB or not 0 <= sid < len(pool):
                     raise ValueError("bad REFAGG reference")
-                bm = _refine_core_decode(mq, gr_icx, gr_mps, rctx,
-                                         symwidth, hcheight,
-                                         pool[sid], rdx, rdy)
+                bm = np.zeros((hcheight, symwidth), np.uint8)
+                _refine_code(mq, gr_icx, gr_mps, rlayout, bm, pool[sid],
+                             rdx, rdy)
             else:
                 bm = np.zeros((hcheight, symwidth), np.uint8)
-                for y in range(hcheight):
-                    for x in range(symwidth):
-                        bm[y, x] = mq.decode(gb_icx, gb_mps,
-                                             ctx(bm, x, y))
+                _generic_code(mq, gb_icx, gb_mps, template, at, bm)
             new_syms.append(bm)
             if len(new_syms) > n_new:
                 raise ValueError("more symbols than declared")
@@ -1343,10 +1364,10 @@ def _decode_text_region(payload: bytes,
     if refine:
         iari, iardw, iardh = _IntCtx(), _IntCtx(), _IntCtx()
         iardx, iardy = _IntCtx(), _IntCtx()
-        rctx, rn_bits = _ref_ctx_fn(rtemplate,
+        rlayout, rn_bits = _ref_layout(rtemplate,
                                     sbrat or _REF_NOMINAL_AT)
-        gr_icx = np.zeros(1 << rn_bits, np.int64)
-        gr_mps = np.zeros(1 << rn_bits, np.int64)
+        gr_icx = [0] * (1 << rn_bits)
+        gr_mps = [0] * (1 << rn_bits)
 
     bm = np.full((rh, rw), sbdefpixel, np.uint8)
     stript = -(_ia_decode(mq, iadt)) * sbstrips
@@ -1398,9 +1419,9 @@ def _decode_text_region(payload: bytes,
                     if nw <= 0 or nh <= 0:
                         raise ValueError("non-positive refined dims")
                     # spec 6.4.11: GRREFERENCEDX = floor(RDW/2)+RDX
-                    sym = _refine_core_decode(
-                        mq, gr_icx, gr_mps, rctx, nw, nh, sym,
-                        (rdw >> 1) + rdx, (rdh >> 1) + rdy)
+                    ref, sym = sym, np.zeros((nh, nw), np.uint8)
+                    _refine_code(mq, gr_icx, gr_mps, rlayout, sym, ref,
+                                 (rdw >> 1) + rdx, (rdh >> 1) + rdy)
                     hs, ws = nh, nw
             # placement per REFCORNER; 0 BOTTOMLEFT, 1 TOPLEFT,
             # 2 BOTTOMRIGHT, 3 TOPRIGHT (spec 6.4.5 step 3c(x))
@@ -1433,9 +1454,8 @@ def _encode_symbol_dict(symbols: list[np.ndarray],
     at = _NOMINAL_AT[template]
     mq = MQEncoder()
     iadh, iadw, iaex = _IntCtx(), _IntCtx(), _IntCtx()
-    gb_icx = np.zeros(1 << _CTX_BITS[template], np.int64)
-    gb_mps = np.zeros(1 << _CTX_BITS[template], np.int64)
-    ctx = _ctx_fn(template, at)
+    gb_icx = [0] * (1 << _CTX_BITS[template])
+    gb_mps = [0] * (1 << _CTX_BITS[template])
 
     hcheight = 0
     i = 0
@@ -1449,11 +1469,7 @@ def _encode_symbol_dict(symbols: list[np.ndarray],
             w = symbols[i].shape[1]
             _ia_encode(mq, iadw, w - symwidth)
             symwidth = w
-            bm = symbols[i]
-            for y in range(h):
-                for x in range(w):
-                    mq.encode(gb_icx, gb_mps, ctx(bm, x, y),
-                              int(bm[y, x]))
+            _generic_code(mq, gb_icx, gb_mps, template, at, symbols[i])
             i += 1
         _ia_encode(mq, iadw, OOB)
     _ia_encode(mq, iaex, 0)
@@ -1479,9 +1495,9 @@ def _encode_symbol_dict_refagg(new_symbols: list[np.ndarray],
     n = len(new_symbols)
     symcodelen = _symcodelen(len(input_syms) + n)
     iaid = _IntCtx(1 << (symcodelen + 1))
-    rctx, rn_bits = _ref_ctx_fn(0, _REF_NOMINAL_AT)
-    gr_icx = np.zeros(1 << rn_bits, np.int64)
-    gr_mps = np.zeros(1 << rn_bits, np.int64)
+    rlayout, rn_bits = _ref_layout(0, _REF_NOMINAL_AT)
+    gr_icx = [0] * (1 << rn_bits)
+    gr_mps = [0] * (1 << rn_bits)
     pool = list(input_syms)
 
     hcheight = 0
@@ -1501,8 +1517,8 @@ def _encode_symbol_dict_refagg(new_symbols: list[np.ndarray],
             _iaid_encode(mq, iaid, symcodelen, ref_ids[i])
             _ia_encode(mq, iardx, 0)
             _ia_encode(mq, iardy, 0)
-            _refine_core_encode(mq, gr_icx, gr_mps, rctx,
-                                new_symbols[i], pool[ref_ids[i]], 0, 0)
+            _refine_code(mq, gr_icx, gr_mps, rlayout, new_symbols[i],
+                         pool[ref_ids[i]], 0, 0)
             pool.append(new_symbols[i])
             i += 1
         _ia_encode(mq, iadw, OOB)
@@ -1537,9 +1553,9 @@ def _encode_text_region(w: int, h: int,
     if refine is not None:
         iari, iardw, iardh = _IntCtx(), _IntCtx(), _IntCtx()
         iardx, iardy = _IntCtx(), _IntCtx()
-        rctx, rn_bits = _ref_ctx_fn(0, _REF_NOMINAL_AT)
-        gr_icx = np.zeros(1 << rn_bits, np.int64)
-        gr_mps = np.zeros(1 << rn_bits, np.int64)
+        rlayout, rn_bits = _ref_layout(0, _REF_NOMINAL_AT)
+        gr_icx = [0] * (1 << rn_bits)
+        gr_mps = [0] * (1 << rn_bits)
     by_t: dict[int, list[tuple[int, int, int]]] = {}
     for idx, (x, y, sid) in enumerate(instances):
         t, s = (x, y) if transposed else (y, x)
@@ -1573,8 +1589,8 @@ def _encode_text_region(w: int, h: int,
                     _ia_encode(mq, iardh, nh - hs)
                     _ia_encode(mq, iardx, 0)
                     _ia_encode(mq, iardy, 0)
-                    _refine_core_encode(
-                        mq, gr_icx, gr_mps, rctx, tgt, symbols[sid],
+                    _refine_code(
+                        mq, gr_icx, gr_mps, rlayout, tgt, symbols[sid],
                         (nw - ws) >> 1, (nh - hs) >> 1)
                     hs, ws = nh, nw
                 else:

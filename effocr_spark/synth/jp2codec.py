@@ -24,7 +24,14 @@ Implemented, from the T.800 spec structure:
   contexts with XOR, 19 contexts over the SAME MQ coder the JBIG2
   codec implements (jbig2codec.MQDecoder/MQEncoder — T.88 and T.800
   share the 47-state Qe machine; only context initialization
-  differs: uniform=46, run-length=3, zero-significance=4).
+  differs: uniform=46, run-length=3, zero-significance=4). The
+  pass walker (_Coder) keeps σ, sign, visited and first-refinement
+  flags in flat bytearrays over the padded block, plus an 8-bit
+  neighbour-significance mask per coefficient that _set_sig updates;
+  the significance context is one lookup of that mask in the band's
+  256-entry Table D.1, and the magnitude context and the cleanup
+  run-length test read the same mask. Magnitudes stay Python ints
+  until coefficients().
 
 Both the REVERSIBLE path (5/3 integer wavelet, no quantization, RCT —
 bit-lossless, exactly pinned by tests) and the IRREVERSIBLE path real
@@ -59,6 +66,7 @@ implemented envelope.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 
@@ -345,69 +353,61 @@ N_CTX = 19  # 0-8 significance, 9-13 sign, 14-16 refinement, 17 RL, 18 UNI
 _CTX_RL, _CTX_UNI = 17, 18
 
 
-def _init_ctx() -> tuple[np.ndarray, np.ndarray]:
+def _init_ctx() -> tuple[list[int], list[int]]:
     """T.800 context initialization: zero-significance ctx → state 4,
     run-length → 3, uniform → 46, everything else 0."""
-    icx = np.zeros(N_CTX, np.int64)
+    icx = [0] * N_CTX
     icx[0] = 4
     icx[_CTX_RL] = 3
     icx[_CTX_UNI] = 46
-    return icx, np.zeros(N_CTX, np.int64)
+    return icx, [0] * N_CTX
 
 
-def _sig_ctx(sigma: np.ndarray, x: int, y: int, band: str) -> int:
-    """Significance context (Table D.1) from padded-coordinate
-    neighborhood; HL swaps H/V, HH keys on the diagonal count."""
-    hh = int(sigma[y, x - 1]) + int(sigma[y, x + 1])
-    vv = int(sigma[y - 1, x]) + int(sigma[y + 1, x])
-    dd = (int(sigma[y - 1, x - 1]) + int(sigma[y - 1, x + 1])
-          + int(sigma[y + 1, x - 1]) + int(sigma[y + 1, x + 1]))
-    if band == "HL":
-        hh, vv = vv, hh
-    if band != "HH":
-        if hh == 2:
-            return 8
-        if hh == 1:
-            return 7 if vv >= 1 else (6 if dd >= 1 else 5)
-        if vv == 2:
-            return 4
-        if vv == 1:
-            return 3
-        return 2 if dd >= 2 else (1 if dd == 1 else 0)
-    if dd >= 3:
-        return 8
-    if dd == 2:
-        return 7 if hh + vv >= 1 else 6
-    if dd == 1:
-        return (3, 4, 5)[min(hh + vv, 2)]
-    return (0, 1, 2)[min(hh + vv, 2)]
+# Neighbour-significance mask bits: each coefficient keeps one byte
+# saying which of its 8 neighbours are significant.
+_W, _E, _N, _S = 1, 2, 4, 8
+_NW, _NE, _SW, _SE = 16, 32, 64, 128
 
 
-def _sign_ctx(sigma: np.ndarray, sgn: np.ndarray, x: int,
-              y: int) -> tuple[int, int]:
-    """Sign context + XOR bit (Table D.3); sgn 1 = negative."""
-    def c(yy: int, xx: int) -> int:
-        if not sigma[yy, xx]:
-            return 0
-        return -1 if sgn[yy, xx] else 1
+def _sig_table(band: str) -> bytes:
+    """Table D.1 as a 256-entry lookup: neighbour-significance mask →
+    significance context. HL swaps H/V, HH keys on the diagonal
+    count. Context 0 ⇔ mask 0 in every band."""
+    out = bytearray(256)
+    for m in range(256):
+        hh = (m & _W and 1) + (m & _E and 1)
+        vv = (m & _N and 1) + (m & _S and 1)
+        dd = bin(m >> 4).count("1")
+        if band == "HL":
+            hh, vv = vv, hh
+        if band != "HH":
+            if hh == 2:
+                ctx = 8
+            elif hh == 1:
+                ctx = 7 if vv >= 1 else (6 if dd >= 1 else 5)
+            elif vv == 2:
+                ctx = 4
+            elif vv == 1:
+                ctx = 3
+            else:
+                ctx = 2 if dd >= 2 else dd
+        elif dd >= 3:
+            ctx = 8
+        elif dd == 2:
+            ctx = 7 if hh + vv >= 1 else 6
+        else:
+            ctx = 3 * dd + min(hh + vv, 2)
+        out[m] = ctx
+    return bytes(out)
 
-    hc = max(-1, min(1, c(y, x - 1) + c(y, x + 1)))
-    vc = max(-1, min(1, c(y - 1, x) + c(y + 1, x)))
-    if hc == 1:
-        return (13, 0) if vc == 1 else ((12, 0) if vc == 0 else (11, 0))
-    if hc == 0:
-        return (10, 0) if vc == 1 else ((9, 0) if vc == 0 else (10, 1))
-    return (11, 1) if vc == 1 else ((12, 1) if vc == 0 else (13, 1))
 
+_SIG_CTX = {band: _sig_table(band) for band in ("LL", "HL", "LH", "HH")}
 
-def _mag_ctx(sigma: np.ndarray, x: int, y: int, first: bool) -> int:
-    if not first:
-        return 16
-    neigh = (int(sigma[y - 1, x - 1]) + int(sigma[y - 1, x])
-             + int(sigma[y - 1, x + 1]) + int(sigma[y, x - 1])
-             + int(sigma[y, x + 1]) + int(sigma[y + 1, x - 1])
-             + int(sigma[y + 1, x]) + int(sigma[y + 1, x + 1]))
-    return 15 if neigh else 14
+# Table D.3: (sign context, XOR bit) by the clipped horizontal and
+# vertical sign contributions, each indexed -1/0/1 → 0/1/2.
+_SIGN_CTX = (((13, 1), (12, 1), (11, 1)),
+             ((10, 1), (9, 0), (10, 0)),
+             ((11, 0), (12, 0), (13, 0)))
 
 
 class _Coder:
@@ -416,140 +416,163 @@ class _Coder:
     to code_sig/code_sign/code_ref/code_run — implemented by the MQ
     decoder (reads bits) and the encoder (derives bits from the known
     coefficients and writes them), so both sides execute the IDENTICAL
-    context-modeling walk and roundtrip by construction."""
+    context-modeling walk and roundtrip by construction.
+
+    State lives in flat per-coefficient arrays over the block padded by
+    one coefficient on every side (index i = (y+1)·(w+2) + x+1):
+    σ, sign, visited-this-plane and first-refinement flags in
+    bytearrays, the neighbour-significance mask `nbr` that `_set_sig`
+    keeps current for the 8 neighbours, and the magnitudes as a list
+    of ints. The significance context is one lookup of `nbr` in the
+    band's Table D.1; the magnitude context and the cleanup run test
+    read the same mask. A coefficient that became significant in this
+    plane's significance pass is σ and visited, which is how the
+    refinement pass skips it."""
 
     def __init__(self, w: int, h: int, band: str, n_planes: int) -> None:
-        self.w, self.h, self.band = w, h, band
         self.n_planes = n_planes
-        self.sigma = np.zeros((h + 2, w + 2), np.uint8)
-        self.sgn = np.zeros((h + 2, w + 2), np.uint8)
-        self.visited = np.zeros((h + 2, w + 2), np.uint8)
-        self.newly = np.zeros((h + 2, w + 2), np.uint8)
-        self.first_ref = np.ones((h + 2, w + 2), np.uint8)
-        self.mag = np.zeros((h, w), np.int64)
+        stride = self.stride = w + 2
+        n = (h + 2) * stride
+        self.sigma = bytearray(n)
+        self.sgn = bytearray(n)
+        self.visited = bytearray(n)
+        self.first_ref = bytearray(b"\x01") * n
+        self.nbr = bytearray(n)
+        self.mag = [0] * n
+        self.sig_ctx = _SIG_CTX[band]
         self.icx, self.mps = _init_ctx()
-        self._plane_bit = 0
+        self._bit = 0  # mask of the bit plane being coded
+        # stripe-column scan: (index of the column's top, its height)
+        self.columns = [((y0 + 1) * stride + x + 1, min(4, h - y0))
+                        for y0 in range(0, h, 4) for x in range(w)]
+        self.order = [i + k * stride for i, m in self.columns
+                      for k in range(m)]
 
     # bit-transfer hooks (decoder reads, encoder derives+writes) ------
-    def code_sig(self, ctx: int, py: int, px: int) -> int:
+    def code_sig(self, ctx: int, i: int) -> int:
         raise NotImplementedError
 
-    def code_sign(self, py: int, px: int) -> int:
+    def code_sign(self, i: int) -> int:
         raise NotImplementedError
 
-    def code_ref(self, ctx: int, py: int, px: int) -> int:
+    def code_ref(self, ctx: int, i: int) -> int:
         raise NotImplementedError
 
-    def code_run(self, y0: int, px: int):
+    def code_run(self, i0: int):
         raise NotImplementedError
 
     # ----------------------------------------------------------------
-    def _set_sig(self, py: int, px: int, sign: int) -> None:
-        self.sigma[py, px] = 1
-        self.sgn[py, px] = sign
-        self.newly[py, px] = 1
-        self.mag[py - 1, px - 1] |= 1 << self._plane_bit
+    def _sign_ctx(self, i: int) -> tuple[int, int]:
+        """Sign context + XOR bit (Table D.3); sgn 1 = negative, so
+        σ - 2·sgn is a neighbour's contribution (0, 1 or -1)."""
+        sigma, sgn, s = self.sigma, self.sgn, self.stride
+        hc = (sigma[i - 1] - 2 * sgn[i - 1]
+              + sigma[i + 1] - 2 * sgn[i + 1])
+        vc = (sigma[i - s] - 2 * sgn[i - s]
+              + sigma[i + s] - 2 * sgn[i + s])
+        return _SIGN_CTX[(hc > 0) - (hc < 0) + 1][(vc > 0) - (vc < 0) + 1]
 
-    def sig_prop(self, plane: int) -> None:
-        for y0 in range(0, self.h, 4):
-            for x in range(self.w):
-                for y in range(y0, min(y0 + 4, self.h)):
-                    py, px = y + 1, x + 1
-                    if self.sigma[py, px]:
-                        continue
-                    ctx = _sig_ctx(self.sigma, px, py, self.band)
-                    if ctx == 0:
-                        continue
-                    self.visited[py, px] = 1
-                    if self.code_sig(ctx, py, px):
-                        self._set_sig(py, px, self.code_sign(py, px))
+    def _set_sig(self, i: int, sign: int) -> None:
+        self.sigma[i] = 1
+        self.sgn[i] = sign
+        self.mag[i] |= self._bit
+        nbr, s = self.nbr, self.stride
+        nbr[i + 1] |= _W
+        nbr[i - 1] |= _E
+        nbr[i + s] |= _N
+        nbr[i - s] |= _S
+        nbr[i + s + 1] |= _NW
+        nbr[i + s - 1] |= _NE
+        nbr[i - s + 1] |= _SW
+        nbr[i - s - 1] |= _SE
 
-    def mag_ref(self, plane: int) -> None:
-        for y0 in range(0, self.h, 4):
-            for x in range(self.w):
-                for y in range(y0, min(y0 + 4, self.h)):
-                    py, px = y + 1, x + 1
-                    if not self.sigma[py, px] or self.newly[py, px]:
-                        continue
-                    ctx = _mag_ctx(self.sigma, px, py,
-                                   bool(self.first_ref[py, px]))
-                    b = self.code_ref(ctx, py, px)
-                    self.first_ref[py, px] = 0
-                    if b:
-                        self.mag[py - 1, px - 1] |= 1 << self._plane_bit
+    def sig_prop(self) -> None:
+        sigma, nbr, visited = self.sigma, self.nbr, self.visited
+        table, code_sig = self.sig_ctx, self.code_sig
+        for i in self.order:
+            if sigma[i] or not nbr[i]:
+                continue
+            visited[i] = 1
+            if code_sig(table[nbr[i]], i):
+                self._set_sig(i, self.code_sign(i))
 
-    def cleanup(self, plane: int) -> None:
-        for y0 in range(0, self.h, 4):
-            full = y0 + 4 <= self.h
-            for x in range(self.w):
-                px = x + 1
-                start = 0
-                if full and all(
-                        not self.sigma[y0 + k + 1, px]
-                        and not self.visited[y0 + k + 1, px]
-                        and _sig_ctx(self.sigma, px, y0 + k + 1,
-                                     self.band) == 0
-                        for k in range(4)):
-                    r = self.code_run(y0, px)
-                    if r is None:
-                        continue  # all four stay clear this plane
-                    py = y0 + r + 1
-                    self._set_sig(py, px, self.code_sign(py, px))
-                    start = r + 1
-                for y in range(y0 + start, min(y0 + 4, self.h)):
-                    py = y + 1
-                    if self.sigma[py, px] or self.visited[py, px]:
-                        continue
-                    ctx = _sig_ctx(self.sigma, px, py, self.band)
-                    if self.code_sig(ctx, py, px):
-                        self._set_sig(py, px, self.code_sign(py, px))
+    def mag_ref(self) -> None:
+        sigma, visited, nbr = self.sigma, self.visited, self.nbr
+        first_ref, mag, bit = self.first_ref, self.mag, self._bit
+        code_ref = self.code_ref
+        for i in self.order:
+            if not sigma[i] or visited[i]:
+                continue
+            if first_ref[i]:
+                first_ref[i] = 0
+                ctx = 15 if nbr[i] else 14
+            else:
+                ctx = 16
+            if code_ref(ctx, i):
+                mag[i] |= bit
+
+    def cleanup(self) -> None:
+        sigma, nbr, visited = self.sigma, self.nbr, self.visited
+        table, code_sig, s = self.sig_ctx, self.code_sig, self.stride
+        for i0, m in self.columns:
+            i = i0
+            if m == 4 and not (
+                    sigma[i0] | visited[i0] | nbr[i0]
+                    | sigma[i0 + s] | visited[i0 + s] | nbr[i0 + s]
+                    | sigma[i0 + 2 * s] | visited[i0 + 2 * s]
+                    | nbr[i0 + 2 * s] | sigma[i0 + 3 * s]
+                    | visited[i0 + 3 * s] | nbr[i0 + 3 * s]):
+                r = self.code_run(i0)
+                if r is None:
+                    continue  # all four stay clear this plane
+                i = i0 + r * s
+                self._set_sig(i, self.code_sign(i))
+                i += s
+            for i in range(i, i0 + m * s, s):
+                if sigma[i] or visited[i]:
+                    continue
+                if code_sig(table[nbr[i]], i):
+                    self._set_sig(i, self.code_sign(i))
 
     def run_passes(self, n_passes: int) -> None:
         done = 0
         for plane in range(self.n_planes):
-            self._plane_bit = self.n_planes - 1 - plane
-            passes = ([self.cleanup] if plane == 0
-                      else [self.sig_prop, self.mag_ref, self.cleanup])
+            self._bit = 1 << (self.n_planes - 1 - plane)
+            passes = ((self.cleanup,) if plane == 0
+                      else (self.sig_prop, self.mag_ref, self.cleanup))
             for p in passes:
                 if done >= n_passes:
                     return
-                p(plane)
-                if p == self.cleanup:
-                    self.visited[:] = 0
-                    self.newly[:] = 0
+                p()
                 done += 1
-            # newly-significant flags only guard the SAME plane's
-            # refinement pass
-            self.newly[:] = 0
+            self.visited = bytearray(len(self.sigma))
 
 
 class _BlockDecoder(_Coder):
     def __init__(self, data: bytes, w: int, h: int, band: str,
                  n_planes: int) -> None:
         super().__init__(w, h, band, n_planes)
-        self.mq = MQDecoder(data)
+        # one MQ decode in this block's contexts
+        self.decode = partial(MQDecoder(data).decode, self.icx, self.mps)
 
-    def code_sig(self, ctx, py, px):
-        return self.mq.decode(self.icx, self.mps, ctx)
+    def code_sig(self, ctx, i):
+        return self.decode(ctx)
 
-    def code_ref(self, ctx, py, px):
-        return self.mq.decode(self.icx, self.mps, ctx)
+    code_ref = code_sig
 
-    def code_sign(self, py, px):
-        sctx, xo = _sign_ctx(self.sigma, self.sgn, px, py)
-        return self.mq.decode(self.icx, self.mps, sctx) ^ xo
+    def code_sign(self, i):
+        sctx, xo = self._sign_ctx(i)
+        return self.decode(sctx) ^ xo
 
-    def code_run(self, y0, px):
-        if not self.mq.decode(self.icx, self.mps, _CTX_RL):
+    def code_run(self, i0):
+        if not self.decode(_CTX_RL):
             return None
-        return ((self.mq.decode(self.icx, self.mps, _CTX_UNI) << 1)
-                | self.mq.decode(self.icx, self.mps, _CTX_UNI))
+        return (self.decode(_CTX_UNI) << 1) | self.decode(_CTX_UNI)
 
     def coefficients(self) -> np.ndarray:
-        out = self.mag.copy()
-        neg = self.sgn[1:-1, 1:-1] == 1
-        out[neg] = -out[neg]
-        return out
+        out = np.array(self.mag, np.int64).reshape(-1, self.stride)
+        neg = np.frombuffer(self.sgn, np.uint8).reshape(-1, self.stride)
+        return np.where(neg == 1, -out, out)[1:-1, 1:-1]
 
 
 class _BlockEncoder(_Coder):
@@ -557,30 +580,28 @@ class _BlockEncoder(_Coder):
                  n_planes: int) -> None:
         h, w = coefs.shape
         super().__init__(w, h, band, n_planes)
-        self.t_mag = np.abs(coefs).astype(np.int64)
-        self.t_sgn = (coefs < 0).astype(np.uint8)
+        padded = np.pad(coefs.astype(np.int64), 1)
+        self.t_mag = np.abs(padded).ravel().tolist()
+        self.t_sgn = (padded < 0).ravel().tolist()
         self.mq = MQEncoder()
 
-    def code_sig(self, ctx, py, px):
-        b = int((self.t_mag[py - 1, px - 1] >> self._plane_bit) & 1)
+    def code_sig(self, ctx, i):
+        b = 1 if self.t_mag[i] & self._bit else 0
         self.mq.encode(self.icx, self.mps, ctx, b)
         return b
 
-    def code_ref(self, ctx, py, px):
-        b = int((self.t_mag[py - 1, px - 1] >> self._plane_bit) & 1)
-        self.mq.encode(self.icx, self.mps, ctx, b)
-        return b
+    code_ref = code_sig
 
-    def code_sign(self, py, px):
-        sctx, xo = _sign_ctx(self.sigma, self.sgn, px, py)
-        sign = int(self.t_sgn[py - 1, px - 1])
+    def code_sign(self, i):
+        sctx, xo = self._sign_ctx(i)
+        sign = int(self.t_sgn[i])
         self.mq.encode(self.icx, self.mps, sctx, sign ^ xo)
         return sign
 
-    def code_run(self, y0, px):
+    def code_run(self, i0):
         r = None
         for k in range(4):
-            if (self.t_mag[y0 + k, px - 1] >> self._plane_bit) & 1:
+            if self.t_mag[i0 + k * self.stride] & self._bit:
                 r = k
                 break
         if r is None:

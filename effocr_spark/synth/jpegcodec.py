@@ -30,8 +30,18 @@ path; with all scans applied the reconstructed coefficients equal the
 baseline encoder's exactly, so progressive-decode output is BITWISE
 equal to baseline-decode output for the same image.
 
+Entropy decoding is table-driven, as in libjpeg's jdhuff: each DHT
+table carries a 9-bit lookahead table of (length, value), and
+_HuffTable.decode peeks 9 bits (_BitReader.peek/skip) and resolves the
+code in one lookup. Only codes longer than 9 bits, or a peek cut short
+by an RST marker, walk the canonical bit loop. Baseline scans gather
+zigzag coefficients into per-component Python lists; baseline and
+progressive frames then share one dequantise + IDCT (_reconstruct, a
+batched matmul per component).
+
 JPEG is lossy: round-trip tests assert PSNR, not byte equality; decode
-itself is deterministic.
+itself is deterministic (tests/test_codec_pixel_pins.py pins the
+decoded pixels).
 """
 
 from __future__ import annotations
@@ -310,6 +320,11 @@ def encode_jpeg(img: np.ndarray, subsample: bool = False) -> bytes:
 # ---------------------------------------------------------------- decoder
 
 class _BitReader:
+    """MSB-first reader over one entropy-coded segment: unstuffs 0xFF00,
+    stops filling at an RSTn marker (the caller realigns), pads with
+    1-bits at any other marker or past the end. Buffers at most 32
+    bits; peek/skip serve the Huffman lookahead."""
+
     def __init__(self, data: bytes, pos: int):
         self.data = data
         self.pos = pos
@@ -317,38 +332,47 @@ class _BitReader:
         self.n = 0
 
     def _fill(self):
-        while self.n <= 24:
-            if self.pos >= len(self.data):
-                self.acc = (self.acc << 8) | 0xFF  # pad past end
-                self.n += 8
-                continue
-            b = self.data[self.pos]
-            if b == 0xFF:
-                nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else 0xD9
-                if nxt == 0x00:
-                    self.pos += 2
-                elif 0xD0 <= nxt <= 0xD7:
-                    return  # restart marker: caller handles
-                else:
-                    self.acc = (self.acc << 8) | 0xFF
-                    self.n += 8
-                    continue
+        data, pos, acc, n = self.data, self.pos, self.acc, self.n
+        end = len(data)
+        while n <= 24:
+            if pos >= end:
+                b = 0xFF  # pad past end
             else:
-                self.pos += 1
-            self.acc = (self.acc << 8) | b
-            self.n += 8
+                b = data[pos]
+                if b == 0xFF:
+                    nxt = data[pos + 1] if pos + 1 < end else 0xD9
+                    if nxt == 0x00:
+                        pos += 2
+                    elif 0xD0 <= nxt <= 0xD7:
+                        break  # restart marker: caller handles
+                    # any other marker: pad, stay put
+                else:
+                    pos += 1
+            acc = ((acc << 8) | b) & 0xFFFFFFFF
+            n += 8
+        self.pos, self.acc, self.n = pos, acc, n
+
+    def peek(self, length: int) -> int | None:
+        """The next `length` bits, not consumed; None when fewer are
+        buffered (an RST marker cut the fill short)."""
+        if self.n < length:
+            self._fill()
+            if self.n < length:
+                return None
+        return (self.acc >> (self.n - length)) & ((1 << length) - 1)
+
+    def skip(self, length: int) -> None:
+        self.n -= length
 
     def read(self, length: int) -> int:
-        if length == 0:
-            return 0
-        self._fill()
         if self.n < length:
-            # _fill returned early at a restart marker with too few bits
-            # buffered — a truncated/malformed entropy-coded segment.
-            raise ValueError("truncated entropy-coded segment")
+            self._fill()
+            if self.n < length:
+                # _fill stopped at a restart marker with too few bits
+                # buffered — a truncated/malformed entropy-coded segment.
+                raise ValueError("truncated entropy-coded segment")
         self.n -= length
-        v = (self.acc >> self.n) & ((1 << length) - 1)
-        return v
+        return (self.acc >> self.n) & ((1 << length) - 1)
 
     def align_restart(self):
         """Skip to just past the next RSTn marker, dropping buffered bits."""
@@ -361,6 +385,9 @@ class _BitReader:
             self.pos += 1
 
 
+_LOOKAHEAD = 9  # libjpeg jdhuff's HUFF_LOOKAHEAD
+
+
 class _HuffTable:
     def __init__(self, bits: list[int], values: bytes):
         self.maxcode = [-1] * 17
@@ -368,6 +395,7 @@ class _HuffTable:
         self.valptr = [0] * 17
         code = 0
         k = 0
+        overfull = False
         for L in range(1, 17):
             if bits[L]:
                 self.valptr[L] = k
@@ -375,10 +403,30 @@ class _HuffTable:
                 code += bits[L]
                 k += bits[L]
                 self.maxcode[L] = code - 1
+                overfull |= code > 1 << L
             code <<= 1
         self.values = values
+        # every 9-bit string a code of ≤ 9 bits prefixes → length << 8
+        # | value; 0 sends decode to the bit loop. An overfull (not
+        # prefix-free) table gets no lookahead, so the bit loop keeps
+        # deciding what such a table decodes to.
+        self.lookup = [0] * (1 << _LOOKAHEAD)
+        for L in range(1, _LOOKAHEAD + 1 if not overfull else 1):
+            span = 1 << (_LOOKAHEAD - L)
+            for j in range(bits[L]):
+                if self.valptr[L] + j < len(values):
+                    lo = (self.mincode[L] + j) * span
+                    self.lookup[lo:lo + span] = \
+                        [(L << 8) | values[self.valptr[L] + j]] * span
 
     def decode(self, br: _BitReader) -> int:
+        look = br.peek(_LOOKAHEAD)
+        if look is not None:
+            hit = self.lookup[look]
+            if hit:
+                br.skip(hit >> 8)
+                return hit & 0xFF
+        # a code longer than 9 bits, or fewer than 9 bits buffered
         code = br.read(1)
         for L in range(1, 17):
             if self.maxcode[L] >= 0 and code <= self.maxcode[L]:
@@ -511,27 +559,28 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             continue
         pos += seglen
     if coefs is not None:
-        return _reconstruct_progressive(frame, coefs, qtabs)
+        return _reconstruct(frame, frame["comps"], coefs, qtabs)
     raise ValueError("no scan data found")
 
 
 def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
-    h, w = frame["h"], frame["w"]
     if len(scan) == 1:
         # T.81 A.2: a single-component scan is NON-interleaved — the MCU
         # is one data unit regardless of the component's declared
         # sampling factors (a grayscale JPEG may legally declare 2x2).
         c, td, ta = scan[0]
         scan = [(dict(c, h=1, v=1), td, ta)]
-    hmax = max(c["h"] for c, _, _ in scan)
-    vmax = max(c["v"] for c, _, _ in scan)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = []
-    for c, _, _ in scan:
-        planes.append(np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]),
-                               np.float64))
+    comps = [c for c, _, _ in scan]
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    mcux = -(-frame["w"] // (8 * hmax))
+    mcuy = -(-frame["h"] // (8 * vmax))
+    # per component: zigzag coefficients of its block grid, flat
+    coefs = [[0] * (mcuy * c["v"] * mcux * c["h"] * 64) for c in comps]
+    tabs = [(htabs[(0, td)].decode, htabs[(1, ta)].decode)
+            for _, td, ta in scan]
     br = _BitReader(data, pos)
+    read = br.read
     preds = [0] * len(scan)
     mcu_count = 0
     for my in range(mcuy):
@@ -541,18 +590,20 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                 br.align_restart()
                 preds = [0] * len(scan)
             mcu_count += 1
-            for ci, (c, td, ta) in enumerate(scan):
-                q = qtabs[c["tq"]]
+            for ci, c in enumerate(comps):
+                dc, ac = tabs[ci]
+                flat = coefs[ci]
                 for by in range(c["v"]):
                     for bx in range(c["h"]):
-                        blk = np.zeros(64, np.float64)
-                        cat = htabs[(0, td)].decode(br)
-                        diff = _extend(br.read(cat), cat) if cat else 0
-                        preds[ci] += diff
-                        blk[0] = preds[ci]
+                        base = (((my * c["v"] + by) * mcux + mx) * c["h"]
+                                + bx) * 64
+                        cat = dc(br)
+                        if cat:
+                            preds[ci] += _extend(read(cat), cat)
+                        flat[base] = preds[ci]
                         k = 1
                         while k < 64:
-                            rs = htabs[(1, ta)].decode(br)
+                            rs = ac(br)
                             r, s = rs >> 4, rs & 0xF
                             if s == 0:
                                 if r == 15:
@@ -562,32 +613,47 @@ def _decode_scan(data, pos, frame, scan, qtabs, htabs, restart_interval):
                             k += r
                             if k > 63:
                                 raise ValueError("AC index overflow")
-                            blk[k] = _extend(br.read(s), s)
+                            flat[base + k] = _extend(read(s), s)
                             k += 1
-                        deq = np.zeros(64, np.float64)
-                        deq[ZIGZAG] = blk * q.flatten()[ZIGZAG]
-                        pix = (DCT_M.T @ deq.reshape(8, 8) @ DCT_M
-                               + float(1 << (frame.get("prec", 8) - 1)))
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = pix
-    # upsample to full grid and crop
+    blocks = [np.array(f, np.float64).reshape(mcuy * c["v"],
+                                              mcux * c["h"], 64)
+              for f, c in zip(coefs, comps)]
+    return _reconstruct(frame, comps, blocks, qtabs)
+
+
+def _reconstruct(frame, comps, coefs, qtabs) -> np.ndarray:
+    """Dequantize + IDCT every block of each component's (rows, cols,
+    64) zigzag coefficient grid, upsample to the full grid, crop and
+    convert to 8-bit RGB. Baseline and progressive frames both end
+    here, so a fully-refined progressive stream reconstructs BITWISE
+    identically to its baseline counterpart. The IDCT is one batched
+    matmul per component: numpy's matmul runs the same per-matrix
+    kernel for a stack as for one 8x8 block (the pixel pins hold)."""
+    h, w = frame["h"], frame["w"]
+    prec = frame.get("prec", 8)
+    shift = float(1 << (prec - 1))
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
     full = []
-    for (c, _, _), plane in zip(scan, planes):
+    for c, blocks in zip(comps, coefs):
+        qzz = qtabs[c["tq"]].flatten()[ZIGZAG].astype(np.float64)
+        nbh, nbw = blocks.shape[:2]
+        deq = np.zeros((nbh, nbw, 64), np.float64)
+        deq[..., ZIGZAG] = blocks * qzz
+        pix = DCT_M.T @ deq.reshape(nbh, nbw, 8, 8) @ DCT_M + shift
+        plane = pix.transpose(0, 2, 1, 3).reshape(nbh * 8, nbw * 8)
         ry, rx = vmax // c["v"], hmax // c["h"]
         if ry > 1 or rx > 1:
             plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
         full.append(plane[:h, :w])
     if len(full) == 1:
-        prec = frame.get("prec", 8)
         top = float((1 << prec) - 1)
         g = np.clip(full[0], 0, top)
         if prec > 8:  # pipeline output is 8-bit: scale down
             g = g * (255.0 / top)
         g = g.round().astype(np.uint8)
         return np.repeat(g[:, :, None], 3, axis=2)
-    return _ycbcr_to_rgb(np.stack(full, axis=-1),
-                         frame.get("prec", 8))
+    return _ycbcr_to_rgb(np.stack(full, axis=-1), prec)
 
 
 # ------------------------------------------------- progressive decoder
@@ -761,41 +827,6 @@ def _ac_refine_unit(br, blk, ss, se, al, tab, eobrun) -> int:
             k += 1
         eobrun -= 1
     return eobrun
-
-
-def _reconstruct_progressive(frame, coefs, qtabs) -> np.ndarray:
-    """Dequantize + IDCT the accumulated coefficients. Uses the exact
-    per-block expression of the baseline path so a fully-refined
-    progressive stream reconstructs BITWISE identically to its baseline
-    counterpart."""
-    h, w = frame["h"], frame["w"]
-    prec = frame.get("prec", 8)
-    shift = float(1 << (prec - 1))
-    hmax, vmax, _, _ = _geometry(frame)
-    full = []
-    for c, blocks in zip(frame["comps"], coefs):
-        q = qtabs[c["tq"]]
-        qzz = q.flatten()[ZIGZAG].astype(np.float64)
-        nbh, nbw = blocks.shape[:2]
-        plane = np.zeros((nbh * 8, nbw * 8), np.float64)
-        for r_ in range(nbh):
-            for c_ in range(nbw):
-                deq = np.zeros(64, np.float64)
-                deq[ZIGZAG] = blocks[r_, c_].astype(np.float64) * qzz
-                plane[r_ * 8:r_ * 8 + 8, c_ * 8:c_ * 8 + 8] = \
-                    DCT_M.T @ deq.reshape(8, 8) @ DCT_M + shift
-        ry, rx = vmax // c["v"], hmax // c["h"]
-        if ry > 1 or rx > 1:
-            plane = np.repeat(np.repeat(plane, ry, axis=0), rx, axis=1)
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        top = float((1 << prec) - 1)
-        g = np.clip(full[0], 0, top)
-        if prec > 8:  # pipeline output is 8-bit: scale down
-            g = g * (255.0 / top)
-        g = g.round().astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    return _ycbcr_to_rgb(np.stack(full, axis=-1), prec)
 
 
 # ------------------------------------------------- progressive encoder

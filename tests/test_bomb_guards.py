@@ -56,6 +56,42 @@ def test_dom_gzip_bomb_yields_empty():
     assert "real page text" in strip_html(ok)
 
 
+def test_png_idat_inflation_bomb_quarantines():
+    """The IHDR dims guard does not bound IDAT inflation: an 8x8 gray
+    PNG whose IDAT inflates to 200 MB must raise without ever holding
+    the inflated bytes (inflation stops one byte past 8·(8+1))."""
+    import tracemalloc
+
+    from effocr_spark.synth.imgcodec import _PNG_SIG, _chunk, decode_png
+
+    inflated = 200 << 20
+    co = zlib.compressobj(9)
+    chunk = b"\x00" * (1 << 20)
+    idat = b"".join([co.compress(chunk) for _ in range(inflated >> 20)]
+                    + [co.flush()])
+    assert len(idat) < (300 << 10)  # the attack: tiny input, huge output
+    png = (_PNG_SIG
+           + _chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0))
+           + _chunk(b"IDAT", idat) + _chunk(b"IEND", b""))
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="exceeds its IHDR size"):
+            decode_png(png)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < (4 << 20), peak  # vs 200 MB for an uncapped inflate
+    # the cap is exact: the same image with the right amount of data
+    # decodes, and a short IDAT is a clean parse error too
+    ok = zlib.compress(b"\x00" * (8 * 9))
+    good = png.replace(_chunk(b"IDAT", idat), _chunk(b"IDAT", ok))
+    assert decode_png(good).shape == (8, 8)
+    short = png.replace(_chunk(b"IDAT", idat),
+                        _chunk(b"IDAT", zlib.compress(b"\x00" * 40)))
+    with pytest.raises(ValueError, match="short"):
+        decode_png(short)
+
+
 def test_crafted_dims_quarantine_every_codec():
     from effocr_spark.synth.jp2codec import decode_jp2, encode_jp2
     from effocr_spark.synth.imgcodec import decode_png, encode_png

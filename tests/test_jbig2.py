@@ -42,14 +42,12 @@ def test_mq_roundtrip(skew):
         ncx = rng.randint(1, 64)
         bits = (rng.rand(n) < skew).astype(np.int64)
         cxs = rng.randint(0, ncx, n)
-        icx = np.zeros(ncx, np.int64)
-        mps = np.zeros(ncx, np.int64)
+        icx, mps = [0] * ncx, [0] * ncx
         enc = MQEncoder()
         for b, c in zip(bits, cxs):
             enc.encode(icx, mps, int(c), int(b))
         data = enc.flush()
-        icx2 = np.zeros(ncx, np.int64)
-        mps2 = np.zeros(ncx, np.int64)
+        icx2, mps2 = [0] * ncx, [0] * ncx
         dec = MQDecoder(data)
         out = [dec.decode(icx2, mps2, int(c)) for c in cxs]
         assert out == bits.tolist()
@@ -64,6 +62,63 @@ def test_generic_region_roundtrip(template, tpgdon):
         enc = generic_region_encode(bm, template, tpgdon)
         assert np.array_equal(
             generic_region_decode(enc, w, h, template, tpgdon), bm)
+
+
+def _spec_context(template, at, bm, x, y):
+    """Generic-region context straight from the T.88 6.2.5.7 figures
+    (bit i = the i-th listed pixel, LSB = nearest left pixel; pixels
+    outside the bitmap read 0) — the layout the committed fixtures
+    were coded with and that indexes the adaptive state."""
+    if template == 0:
+        a1, a2, a3, a4 = at
+        spots = [(-1, 0), (-2, 0), (-3, 0), (-4, 0), a1,
+                 (2, -1), (1, -1), (0, -1), (-1, -1), (-2, -1), a2,
+                 a3, (1, -2), (0, -2), (-1, -2), a4]
+    elif template == 1:
+        spots = [(-1, 0), (-2, 0), (-3, 0), at[0],
+                 (2, -1), (1, -1), (0, -1), (-1, -1), (-2, -1),
+                 (2, -2), (1, -2), (0, -2), (-1, -2)]
+    elif template == 2:
+        spots = [(-1, 0), (-2, 0), at[0],
+                 (1, -1), (0, -1), (-1, -1), (-2, -1),
+                 (1, -2), (0, -2), (-1, -2)]
+    else:
+        spots = [(-1, 0), (-2, 0), (-3, 0), (-4, 0), at[0],
+                 (1, -1), (0, -1), (-1, -1), (-2, -1), (-3, -1)]
+    h, w = bm.shape
+    c = 0
+    for bit, (dx, dy) in enumerate(spots):
+        xx, yy = x + dx, y + dy
+        if 0 <= xx < w and 0 <= yy < h and bm[yy, xx]:
+            c |= 1 << bit
+    return c
+
+
+@pytest.mark.parametrize("template", [0, 1, 2, 3])
+@pytest.mark.parametrize("at_kind", ["nominal", "far"])
+def test_rolling_window_contexts_match_spec_figures(template, at_kind):
+    """The rolling-window context builder codes every pixel with the
+    spec-figure context, AT pixels included (nominal, and far ones:
+    long reach left/right and several rows up)."""
+    from effocr_spark.synth.jbig2codec import (_CTX_BITS, _NOMINAL_AT,
+                                               _generic_code)
+
+    class _Recorder(MQEncoder):
+        def encode(self, icx, mps, cx, d):
+            seen.append(cx)
+
+    far = [(-9, 0), (7, -1), (-12, -5), (3, -2)]
+    at = _NOMINAL_AT[template] if at_kind == "nominal" \
+        else far[:len(_NOMINAL_AT[template])]
+    if template and at_kind == "far":
+        at = [(-6, -3)]
+    rng = np.random.RandomState(template)
+    bm = (rng.rand(11, 37) < 0.45).astype(np.uint8)
+    seen = []
+    n = 1 << _CTX_BITS[template]
+    _generic_code(_Recorder(), [0] * n, [0] * n, template, at, bm)
+    assert seen == [_spec_context(template, at, bm, x, y)
+                    for y in range(11) for x in range(37)]
 
 
 def test_generic_region_custom_at_and_tpgdon_copy():

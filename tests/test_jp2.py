@@ -34,6 +34,49 @@ def test_ebcot_block_roundtrip_all_bands():
             assert (out == coefs).all(), (band, shape)
 
 
+def _table_d1(band, h, v, d):
+    """T.800 Table D.1 row by row: significance context from the
+    counts of significant horizontal, vertical and diagonal
+    neighbours (HL swaps the H and V columns)."""
+    if band == "HL":
+        h, v = v, h
+    if band == "HH":
+        hv = h + v
+        rows = [(d >= 3, 8), (d == 2 and hv >= 1, 7), (d == 2, 6),
+                (d == 1 and hv >= 2, 5), (d == 1 and hv == 1, 4),
+                (d == 1, 3), (hv >= 2, 2), (hv == 1, 1)]
+    else:
+        rows = [(h == 2, 8), (h == 1 and v >= 1, 7),
+                (h == 1 and d >= 1, 6), (h == 1, 5), (v == 2, 4),
+                (v == 1, 3), (d >= 2, 2), (d == 1, 1)]
+    return next((ctx for hit, ctx in rows if hit), 0)
+
+
+@pytest.mark.parametrize("band", ["LL", "HL", "LH", "HH"])
+def test_significance_context_is_table_d1(band):
+    """Every subset of the 8 neighbours of a coefficient, made
+    significant through the walker's own _set_sig, yields the Table
+    D.1 context through the neighbour mask and the band's lookup, and
+    the mask is 0 exactly when no neighbour is significant."""
+    from effocr_spark.synth.jp2codec import _Coder
+
+    offsets = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1),
+               (1, 0), (1, 1)]
+    for subset in range(256):
+        coder = _Coder(3, 3, band, 1)
+        centre = 2 * coder.stride + 2
+        on = [(dy, dx) for k, (dy, dx) in enumerate(offsets)
+              if subset >> k & 1]
+        for dy, dx in on:
+            coder._set_sig(centre + dy * coder.stride + dx, 0)
+        h = sum(1 for dy, dx in on if dy == 0)
+        v = sum(1 for dy, dx in on if dx == 0)
+        d = len(on) - h - v
+        mask = coder.nbr[centre]
+        assert (mask == 0) == (not on)
+        assert coder.sig_ctx[mask] == _table_d1(band, h, v, d), on
+
+
 def test_jp2_lossless_roundtrip_gray_color_raw_multiblock():
     from effocr_spark.synth.jp2codec import (decode_jp2, encode_jp2,
                                              is_jp2)

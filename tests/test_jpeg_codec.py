@@ -170,6 +170,43 @@ def test_bitreader_truncation_is_a_clean_parse_error():
         br.read(4)
 
 
+def test_huffman_lookahead_matches_the_bit_loop():
+    """One code per length 1-16: codes up to 9 bits come from the
+    lookahead table, longer ones from the bit loop; both decode the
+    same symbols as a table with the lookahead switched off, through
+    0xFF stuffing, and a code cut short by an RST marker (fewer than 9
+    bits buffered) falls back to the loop and ends cleanly."""
+    from effocr_spark.synth.jpegcodec import (_BitReader, _BitWriter,
+                                              _HuffTable)
+
+    bits = [0] + [1] * 16
+    values = bytes(range(40, 56))
+    codes, code = [], 0
+    for length in range(1, 17):
+        codes.append((code, length))
+        code = (code + 1) << 1
+    rng = np.random.RandomState(5)
+    syms = rng.randint(0, 16, 3000).tolist()
+    bw = _BitWriter()
+    for s_ in syms:
+        bw.write(*codes[s_])
+    bw.flush()
+    data = bytes(bw.out) + b"\xff\xd9"
+    assert b"\xff\x00" in data  # stuffing exercised
+    fast = _HuffTable(bits, values)
+    slow = _HuffTable(bits, values)
+    slow.lookup = [0] * len(slow.lookup)
+    want = [values[s_] for s_ in syms]
+    for tab in (fast, slow):
+        br = _BitReader(data, 0)
+        assert [tab.decode(br) for _ in syms] == want
+    # a 10-bit code cut by RST0 after its first 8 bits (one stuffed
+    # 0xFF byte): the loop runs dry instead of reading past the marker
+    br = _BitReader(b"\xff\x00\xff\xd0", 0)
+    with pytest.raises(ValueError, match="truncated entropy-coded"):
+        fast.decode(br)
+
+
 # ---------------------------------------------------------- progressive
 
 PROG_CONFIGS = [
