@@ -4,8 +4,9 @@ Backs the PDF standard security handler's /AESV2 and /AESV3 crypt
 filters (functions/pdftext.py): modern "encrypted" web PDFs use
 AES-CBC with a per-object (V4) or file (V5) key, and most carry an
 empty user password (permissions-only locking), so decrypting them is
-a container-parsing job, not a secrets job. No cryptography library
-ships in this container, so this is FIPS-197 from first principles:
+a container-parsing job, not a secrets job. The `cryptography`
+library is installed but not yet used: ROADMAP item 3 is the change
+that adopts it. Until then this is FIPS-197 from first principles:
 the S-box is COMPUTED (GF(2^8) inverse + affine transform), not a
 pasted table, and both directions are implemented (encrypt for fixture
 generation, decrypt for extraction).

@@ -9,9 +9,17 @@ templates 0-3, TPGDON, AT pixels; MMR via the T.6 codec), AND the
 symbol-coded path text pages actually ship: arithmetic symbol
 dictionaries + text regions (Annex A integer decoding procedures,
 height classes, strip placement) — plus matching encoders for fixture
-generation. Huffman-coded variants, refinement coding, and halftone
-regions are declared seams: anything using them raises so the caller
-quarantines.
+generation. Three further modes decode, each with a fixture in the
+`extract_pdf_scanned` golden: Huffman-coded symbol dictionaries and
+text regions (synth/jbig2huff.py, custom tables and B.1-B.6),
+refinement coding (generic refinement regions, refined text-region
+instances and single-instance SDREFAGG symbols, all through
+_refine_code) and halftone regions over pattern dictionaries
+(decode_halftone_region). The declared seams that still raise, so
+the caller quarantines: Huffman standard-table selections B.7-B.15,
+Huffman SDREFAGG symbol dictionaries (they hardcode Table B.15),
+arithmetic SDREFAGG with REFAGGNINST > 1, HENABLESKIP with HMMR, and
+any other segment type.
 
 Correctness strategy mirrors ccittcodec.py: the encoder and decoder
 are independent walks of the published algorithm; tests pin (a) the
@@ -865,9 +873,10 @@ def jbig2_decode_embedded(data: bytes,
     approximation exact for the single-dict streams PDF encoders
     emit). HUFFMAN-coded symbol dictionaries and text regions decode
     too (SDHUFF collective bitmaps, SBHUFF runcode symbol-ID tables,
-    custom type-53 code tables — synth/jbig2huff.py); refinement and
-    halftone segments raise NotImplementedError — the caller
-    quarantines (skip, text layer still flows)."""
+    custom type-53 code tables — synth/jbig2huff.py), and so do
+    generic refinement regions, pattern dictionaries and halftone
+    regions; other segment types raise NotImplementedError — the
+    caller quarantines (skip, text layer still flows)."""
     segs = parse_segments(data)
     if globals_data:
         segs = parse_segments(globals_data) + segs

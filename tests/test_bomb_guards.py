@@ -56,6 +56,24 @@ def test_dom_gzip_bomb_yields_empty():
     assert "real page text" in strip_html(ok)
 
 
+@pytest.mark.parametrize("unit", [b"<a ", b"<a", b"<!--"])
+def test_dom_unterminated_tail_is_linear(unit):
+    """A page whose tail no `>` (or `-->`) terminates: the stdlib
+    tokenizer's close() rescans the rest of the input at every `<`, so
+    30 KB of `<a ` took 11 s on a 4-vCPU host and each doubling 4x
+    more. 200 KB must come back as text in well under a second."""
+    import time
+
+    from effocr_spark.functions.domstrip import strip_html
+
+    page = b"<body><div>" + unit * ((200 << 10) // len(unit) + 1)
+    t0 = time.perf_counter()
+    out = strip_html(page)
+    elapsed = time.perf_counter() - t0
+    assert isinstance(out, str) and out
+    assert elapsed < 1.0, f"{unit!r}: {elapsed:.2f} s"
+
+
 def test_png_idat_inflation_bomb_quarantines():
     """The IHDR dims guard does not bound IDAT inflation: an 8x8 gray
     PNG whose IDAT inflates to 200 MB must raise without ever holding

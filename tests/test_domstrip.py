@@ -1,3 +1,11 @@
+import ast
+from html.parser import HTMLParser
+from unittest import mock
+
+import pytest
+from hypothesis import example, given, settings, strategies as st
+
+from effocr_spark.functions import domstrip
 from effocr_spark.functions.domstrip import strip_html
 from effocr_spark.synth.pages import generate_page
 
@@ -183,3 +191,148 @@ def test_transport_encodings_and_legacy_charsets():
     assert strip_html(legacy2) == "Smart “quotes” and — dashes"
     # truncated gzip quarantines to empty, never raises
     assert strip_html(gzip.compress(doc.encode())[:10]) == ""
+
+
+# ---- the tokenizer against the stdlib's: `_Extractor.goahead` (fast
+# path, unterminated-tail predictions) must give the event sequence of
+# `html.parser.HTMLParser.goahead` on the running interpreter, and so
+# the same `strip_html` output ----
+
+
+class _Recorder(domstrip._Extractor):
+    def __init__(self):
+        super().__init__()
+        self.events = []
+
+    def handle_starttag(self, tag, attrs):
+        self.events.append(("start", tag))
+        super().handle_starttag(tag, attrs)
+
+    def handle_endtag(self, tag):
+        self.events.append(("end", tag))
+        super().handle_endtag(tag)
+
+    def handle_data(self, data):
+        self.events.append(("data", data))
+        super().handle_data(data)
+
+    def handle_comment(self, data):
+        self.events.append(("comment", data))
+
+    def handle_decl(self, decl):
+        self.events.append(("decl", decl))
+
+    def handle_pi(self, data):
+        self.events.append(("pi", data))
+
+    def unknown_decl(self, data):
+        self.events.append(("unknown_decl", data))
+
+
+class _StdlibRecorder(_Recorder):
+    goahead = HTMLParser.goahead
+
+
+class _StdlibExtractor(domstrip._Extractor):
+    goahead = HTMLParser.goahead
+
+
+def _events(cls, text):
+    parser = cls()
+    try:
+        parser.feed(text)
+        parser.close()
+    except Exception as e:  # strip_html turns these into ""
+        parser.events.append(("raises", type(e).__name__))
+    return parser.events
+
+
+def _assert_stdlib_parity(pages):
+    for html in pages:
+        text = (html.decode("utf-8", "replace") if isinstance(html, bytes)
+                else html)
+        assert _events(_Recorder, text) == _events(_StdlibRecorder, text), \
+            text[:300]
+    ours = [strip_html(h) for h in pages]
+    with mock.patch.object(domstrip, "_Extractor", _StdlibExtractor):
+        stdlib = [strip_html(h) for h in pages]
+    assert ours == stdlib
+
+
+def test_tokenizer_matches_stdlib_on_born_digital_pages():
+    from perfbench.workloads import html_page
+
+    _assert_stdlib_parity([html_page(1, r)["html"] for r in range(4000)])
+
+
+def test_tokenizer_matches_stdlib_on_crawl_and_embedded_pages():
+    from perfbench.workloads import SIZES, crawl_page, embedded_page
+
+    rows = [crawl_page(1, r) for r in range(SIZES["full"]["crawl_mix"])]
+    rows += [embedded_page(1, r) for r in range(150)]
+    pages = [r["html"] for r in rows if r["kind"] != "ocr"]
+    assert len(pages) > 1000
+    _assert_stdlib_parity(pages)
+
+
+def test_tokenizer_matches_stdlib_on_this_files_literals():
+    with open(__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    literals = [node.value for node in ast.walk(tree)
+                if isinstance(node, ast.Constant)
+                and isinstance(node.value, (str, bytes))
+                and ("<" in node.value if isinstance(node.value, str)
+                     else b"<" in node.value)]
+    assert len(literals) > 30
+    _assert_stdlib_parity(literals)
+
+
+@pytest.mark.parametrize("unit", [
+    "<a ", "<a", "<!--", "</a", "< ", "<a\x00", "<?", "<!x", "<!doctype ",
+    "<![CDATA[", "<![if ", "<a x='>' ", "<a x='", '<a b="', "<a/", "<a =",
+    "x<a", "<a b", "<a b=c ", "<a\x00 ", "<a b='c'<b ",
+])
+def test_unterminated_tails_match_stdlib(unit):
+    tail = unit * (1500 // len(unit))
+    _assert_stdlib_parity([
+        "<body><div><p>lead text</p>" + tail,
+        "<body><div><p>lead</p><b x='1'>" + tail + "</div>",
+        "<body><div>" + tail + " & more &amp",
+    ])
+
+
+# a hostile alphabet for tag soup: case, `/>`, quotes holding `>`,
+# unquoted and `=`-less attributes, CDATA elements and their odd end
+# tags, comments, declarations, marked sections, processing
+# instructions, character references near the end, stray `<`, NUL,
+# and the unterminated-tail units
+_SOUP = [
+    "<div>", "<DIV>", "<p>", "</p>", "<P CLASS=X>", "</P >", "<td>", "</td>",
+    "<main>", "<nav>", "</nav>", "<a href='x>y'>", '<a href="q">',
+    "<a b=c>", "<a b>", "<a b = 'c' >", "<a b=c d='e' f=\"g\">",
+    "<a b=='c'>", "<a b='c'd>", "<a =b>", "<a b=>", "<a b= >", "<a<b>",
+    "<a b=<c>", "<a\tb\nc\rd\fe>", "<a\x0bb>", "<a　b>", "<a b\x00=c>",
+    "<a @click=x>", "<br/>", "<br />", "<img src=x/>", "<a/b>", "<a / >",
+    "</a b>", "</ a>", "</>", "</1>", "<script>", "<script type=x>",
+    "</script>", "</script >", "</SCRIPT>", "<style>", "</style>",
+    "<!-- c -->", "<!--", "-->", "--!>", "--", "<!>", "<!x>",
+    "<!DOCTYPE html>", "<!doctype", "<![CDATA[x]]>", "<![CDATA[", "]]>",
+    "<![if x]>", "<![endif]>", "<![foo]>", "<?pi x?>", "<?", "&amp",
+    "&amp;", "&#x41;", "&#65", "&#", "&", "<", ">", "\x00", "<a ", "<a",
+    "</a", "< ", "<a\x00", "text", "word", "é", " ", "\n", "\t", "\x0b",
+    "\xa0", "　", "=", '"', "'", "/", "`",
+]
+
+
+@settings(deadline=None)
+# a tag name holds the vertical tab and Unicode spaces, which `\s`
+# matches: the fast path must not split the name there
+@example("<a\xa0\x00=-->")
+@example("<a\u3000 b=c>")
+@example("<a\x0b b>")
+@given(st.lists(st.one_of(st.sampled_from(_SOUP),
+                          st.text(alphabet="<>/='\"!-?&#;ab \x00\n",
+                                  max_size=6)),
+                max_size=40).map("".join))
+def test_tokenizer_matches_stdlib_on_tag_soup(text):
+    _assert_stdlib_parity([text])
