@@ -104,11 +104,20 @@ def extract_crops(img: np.ndarray, boxes_640: np.ndarray,
     """Cut crop windows out of an RGB image; empty windows → None
     (quarantined, not crashed — SURVEY.md §1.4)."""
     h, w = img.shape[:2]
-    wins = scale_back_boxes(boxes_640, h, w, vertical=vertical)
+    return cut_windows(img, scale_back_boxes(boxes_640, h, w,
+                                             vertical=vertical))
+
+
+def cut_windows(img: np.ndarray, wins: np.ndarray
+                ) -> list[np.ndarray | None]:
+    """The crops of `scale_back_boxes` windows, clipped to the image;
+    empty windows → None. extract_crops is scale-back + this, for
+    callers that keep the windows too."""
+    h, w = img.shape[:2]
     crops: list[np.ndarray | None] = []
-    for x0, y0, x1, y1 in wins:
-        x0c, y0c = max(int(x0), 0), max(int(y0), 0)
-        x1c, y1c = min(int(x1), w), min(int(y1), h)
+    for x0, y0, x1, y1 in wins.tolist():  # python ints: no numpy scalars
+        x0c, y0c = max(x0, 0), max(y0, 0)
+        x1c, y1c = min(x1, w), min(y1, h)
         if x1c <= x0c or y1c <= y0c:
             crops.append(None)
         else:

@@ -22,6 +22,22 @@ MIN_GAP = 3      # blank-row run that separates lines (fixture gap is 6)
 STRIP_MARGIN = 3  # white rows re-added around each band (= font.MARGIN)
 
 
+def channel_min(img: np.ndarray) -> np.ndarray:
+    """H x W x C page → H x W gray plane, the per-pixel minimum over the
+    channels (a 2-D plane comes back as is). Elementwise np.minimum over
+    the channel slices instead of `img.min(axis=2)`: numpy reduces over
+    a 3-long inner axis ~10x slower per element than it runs a binary
+    ufunc, and min is exact, so the plane is bit-identical. The one
+    channel-min of the OCR path: lineseg's gray twin and the localizer
+    head's RGB input both come through here."""
+    if img.ndim != 3:
+        return img
+    gray = img[..., 0]
+    for c in range(1, img.shape[2]):
+        gray = np.minimum(gray, img[..., c])
+    return gray
+
+
 def segment_lines(gray: np.ndarray) -> list[tuple[int, int]]:
     """→ list of (row_start, row_stop) ink bands, top to bottom.
     Bands separated by >= MIN_GAP blank rows; single-band pages (the
@@ -61,11 +77,12 @@ def column_strip_gray_triples(img: np.ndarray
     with single-column fixtures. strip-local x + offset = page x (the
     offset accounts for the left padding).
 
-    The GRAYSCALE twin is sliced from ONE page-level channel-min pass
-    instead of re-reducing every strip downstream (the localizer head
-    needs only the gray plane; channel-min commutes with slicing and the
-    255 padding, so the twin is bit-identical to `strip.min(axis=2)`)."""
-    gray = img.min(axis=2) if img.ndim == 3 else img
+    The GRAYSCALE twin is sliced from ONE page-level `channel_min`
+    plane instead of re-reducing every strip downstream (the localizer
+    head needs only the gray plane). Channel-min commutes with slicing
+    and with the 255 padding, so each twin is bit-identical to
+    `channel_min(strip)`."""
+    gray = channel_min(img)
     strips = []
     h = img.shape[0]
     gpad = np.full((h, STRIP_MARGIN), 255, dtype=img.dtype)
@@ -87,7 +104,7 @@ def line_strip_gray_triples(img: np.ndarray
     triples, each strip the ink band padded with STRIP_MARGIN white rows
     top and bottom. strip-local y + offset = page y. See
     column_strip_gray_triples for the gray twin's bit-parity argument."""
-    gray = img.min(axis=2) if img.ndim == 3 else img
+    gray = channel_min(img)
     strips = []
     w = img.shape[1]
     gpad = np.full((STRIP_MARGIN, w), 255, dtype=img.dtype)

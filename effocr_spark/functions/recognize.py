@@ -83,20 +83,30 @@ def _transform_batched(crops: list[np.ndarray | None]) -> np.ndarray:
 
 
 def _features_batched(crops: list[np.ndarray | None]) -> np.ndarray:
-    """Fused transform+feature kernel: per shape group, normalize the
-    SMALL padded crop, channel-mean it there, THEN upsample, then pool —
-    bitwise-identical to `encode_features(_transform_batched(crops))`
-    because every reordered step is a per-pixel map or a pure selection
-    (channel-mean commutes with the nearest-neighbor repeat/gather, and
-    encode_features is row-independent so per-group evaluation
-    concatenates exactly). The [B, 3, S, S] tensor is never materialized:
-    at reference tensor size (S=224) that cuts per-crop memory traffic
-    ~6x (602KB x 4 passes → 200KB x 2), which is the difference between
-    scaling and bus-thrashing — see BENCH/BASELINE.md roofline table.
-    tests/test_batched_transform.py pins the equivalence at both crop
-    sizes."""
+    """Fused transform+feature kernel, bitwise-identical to
+    `encode_features(_transform_batched(crops))` without materializing
+    the [B, 3, S, S] tensor. Per (h, w) shape group, on the white-padded
+    side x side uint8 square:
+
+    - side >= CROP_SIZE: sample the CROP_SIZE² nearest-neighbour pixels
+      first, still in uint8, then normalize only those samples;
+    - side < CROP_SIZE: normalize the small square, channel-mean it and
+      expand the plane with np.repeat.
+
+    Both are exact because normalize and channel-mean are per-pixel maps
+    and the resize is a pure selection (f(x)[idx] == f(x[idx])). The
+    channel mean is `(c0 + c1) + c2`, then `/ float32(3)`: the order in
+    which `batch.mean(axis=1)` accumulates over [B, 3, S, S], computed
+    with elementwise ufuncs rather than a reduction over the 3-long
+    channel axis. The 16x16 mean-pool runs only when
+    k = CROP_SIZE // 16 > 1; a mean over one element is exact.
+    encode_features is row-independent, so per-group evaluation
+    concatenates exactly.
+    tests/test_batched_transform.py pins the equivalence at CROP_SIZE
+    16, 32 and 224."""
     size = crops_fn.CROP_SIZE
     pool = synthmodel._POOL
+    k = size // pool
     feats = np.empty((len(crops), pool * pool), dtype=np.float32)
     groups: dict[tuple[int, int], list[int]] = {}
     zero_rows = []
@@ -108,24 +118,42 @@ def _features_batched(crops: list[np.ndarray | None]) -> np.ndarray:
     if zero_rows:
         feats[zero_rows] = synthmodel.encode_features(ZERO_CROP[None])[0]
     for (h, w), idxs in groups.items():
-        side = max(h, w)
-        stack = np.full((len(idxs), side, side, 3), 255, dtype=np.uint8)
-        stack[:, :h, :w, :] = np.asarray([crops[i] for i in idxs])
-        small = stack.astype(np.float32) / 255.0
-        small -= crops_fn.IMAGENET_MEAN
-        small /= crops_fn.IMAGENET_STD
-        sm = small.mean(axis=3)  # channel-mean on the small crop
+        b, side = len(idxs), max(h, w)
+        group = np.asarray([crops[i] for i in idxs])
         ys = np.minimum((np.arange(size) * side) // size, side - 1)
+        if side >= size:
+            # ys is monotonic, so the samples that land inside the crop
+            # are its top-left nh x nw block; the rest are white padding
+            nh, nw = np.searchsorted(ys, (h, w))
+            sq = np.full((b, size, size, 3), 255, dtype=np.uint8)
+            sq[:, :nh, :nw] = np.take(np.take(group, ys[:nh], axis=1),
+                                      ys[:nw], axis=2)
+        else:
+            sq = np.full((b, side, side, 3), 255, dtype=np.uint8)
+            sq[:, :h, :w] = group
+        plane = _normalized_channel(sq, 0) + _normalized_channel(sq, 1)
+        plane += _normalized_channel(sq, 2)
+        plane /= np.float32(3)
         if side < size:
             counts = np.bincount(ys, minlength=side)
-            big = np.repeat(np.repeat(sm, counts, axis=1), counts, axis=2)
-        else:
-            big = sm[:, ys[:, None], ys[None, :]]
-        b, k = len(idxs), size // pool
-        pooled = np.ascontiguousarray(big).reshape(
-            b, pool, k, pool, k).mean(axis=(2, 4))
-        feats[idxs] = pooled.reshape(b, pool * pool).astype(np.float32)
+            plane = np.repeat(np.repeat(plane, counts, axis=1), counts,
+                              axis=2)
+        if k > 1:
+            plane = plane.reshape(b, pool, k, pool, k).mean(axis=(2, 4))
+        feats[idxs] = plane.reshape(b, pool * pool)
     return feats
+
+
+def _normalized_channel(sq: np.ndarray, c: int) -> np.ndarray:
+    """Channel c of [B, H, W, 3] uint8 pixels → [B, H, W] float32,
+    ImageNet-normalized with the same float32 ops as paired_transform.
+    One scalar per pass: broadcasting the 3-long mean/std over the
+    inner axis runs ~8x slower."""
+    x = sq[..., c].astype(np.float32)
+    x /= 255.0
+    x -= crops_fn.IMAGENET_MEAN[c]
+    x /= crops_fn.IMAGENET_STD[c]
+    return x
 
 
 def embed_crops(crops: list[np.ndarray | None],
@@ -299,6 +327,17 @@ def knn_lookup_sim(embeddings: np.ndarray, prototypes: np.ndarray):
     argmax behind both recognizer streams."""
     if embeddings.shape[0] == 0:
         return np.zeros((0,), np.int64), np.zeros((0,), np.float32)
-    scores = embeddings @ prototypes.T
-    idx = np.argmax(scores, axis=1)
-    return idx, scores[np.arange(scores.shape[0]), idx].astype(np.float32)
+    # bit-equal prototype rows collapse to their first occurrence before
+    # the GEMM (as in knn_topk): BLAS may round two identical columns
+    # differently depending on how many query rows share the call, which
+    # made a crop's label depend on its batch size. Distinct rows stay in
+    # index order, so argmax's first hit is still the lowest index. Rows
+    # compare as raw bytes (np.unique(axis=0) costs ~20x more per call).
+    protos = np.ascontiguousarray(prototypes)
+    rows = protos.view(np.dtype((np.void, protos[0].nbytes)))[:, 0]
+    _, first = np.unique(rows, return_index=True)
+    first.sort()
+    scores = embeddings @ protos[first].T
+    col = np.argmax(scores, axis=1)
+    return (first[col],
+            scores[np.arange(scores.shape[0]), col].astype(np.float32))

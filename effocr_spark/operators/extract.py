@@ -171,15 +171,15 @@ def _localize_strip(im: np.ndarray, lang: str, vertical: bool,
                         if char_det.shape[0] else np.zeros((0, 4), np.float32))
         word_end_idx = []
 
-    crops = crops_fn.extract_crops(im, sorted_chars, vertical=vertical)
-    # heights/bottoms from UNROUNDED letterbox-space boxes
-    # (infer_effocr_onnx_multi.py:320-322)
-    heights = [float(b[3] - b[1]) for b in sorted_chars]
-    bottoms = [float(b[3]) for b in sorted_chars]
     # strip-local int crop windows, kept for the COCO span sink (K2);
-    # same scale-back the crops themselves came from
+    # the crops are cut from the same windows (= extract_crops)
     windows = crops_fn.scale_back_boxes(
         sorted_chars, im.shape[0], im.shape[1], vertical=vertical)
+    crops = crops_fn.cut_windows(im, windows)
+    # heights/bottoms from UNROUNDED letterbox-space boxes
+    # (infer_effocr_onnx_multi.py:320-322)
+    heights = (sorted_chars[:, 3] - sorted_chars[:, 1]).tolist()
+    bottoms = sorted_chars[:, 3].tolist()
     return {
         "crops": crops,
         "word_crops": wcrops,

@@ -102,6 +102,31 @@ def test_vectorized_nms_matches_oracle_on_random_heads():
         assert np.allclose(a, b, atol=1e-5), trial
 
 
+def test_knn_lookup_duplicate_prototypes_tie_at_any_batch_size(prototypes):
+    """The en bank has bit-equal rows ('?'/'/' and '('/')'). A query
+    near one of them must get the lower index whether it is looked up
+    alone, in a pair or inside a 64-row call: a plain GEMM rounded the
+    two identical columns differently for one- and two-row calls."""
+    import numpy as np
+    from effocr_spark.functions.recognize import knn_lookup
+
+    chars, mat = prototypes["en"]
+    rng = np.random.RandomState(5)
+    for lo, hi in (("?", "/"), ("(", ")")):
+        i, j = chars.index(lo), chars.index(hi)
+        assert i < j and np.array_equal(mat[i], mat[j])
+        q = mat[i] + rng.normal(0, 0.05, (1024, mat.shape[1]))
+        q = (q / np.linalg.norm(q, axis=1, keepdims=True)).astype(np.float32)
+        by_64 = np.concatenate([knn_lookup(q[s: s + 64], mat)
+                                for s in range(0, len(q), 64)])
+        assert j not in by_64
+        assert (by_64 == i).mean() > 0.9
+        for n in (1, 2):
+            got = np.concatenate([knn_lookup(q[s: s + n], mat)
+                                  for s in range(0, len(q), n)])
+            assert np.array_equal(got, by_64), (lo, n)
+
+
 def test_knn_topk_matches_numpy_oracle():
     """k>1 kNN kernel vs a plain argsort oracle, including tie handling
     (stable → lowest index first, FAISS IndexFlatIP ordering)."""
