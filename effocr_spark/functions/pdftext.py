@@ -9,8 +9,9 @@ silently wrong) — with the full standard filter set a text PDF uses:
 FlateDecode,
 LZWDecode (PDF's 9-12-bit early-change variant), ASCIIHexDecode,
 ASCII85Decode, RunLengthDecode, and chains of them (/Filter arrays,
-applied in decode order per the spec). Pure stdlib (zlib + base64 +
-re + hashlib), no external PDF library. Standard-security-handler RC4
+applied in decode order per the spec). No external PDF library: the
+parsing is stdlib (zlib + base64 + re + hashlib), and the ciphers are
+OpenSSL's through the `cryptography` package. Standard-security-handler
 encryption with an empty user password — the web's common
 permissions-only locking — decrypts for real, ALL standard ciphers: RC4
 (R2/R3/V2), AES-128-CBC (V4 /AESV2, functions/aescipher.py), and
@@ -1372,19 +1373,24 @@ _STR_RE_TPL = rb"%s\s*(?:\((?P<lit>(?:\\.|[^\\()])*)\)|<(?P<hex>[0-9A-Fa-f\s]*)>
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
-    s = list(range(256))
-    j = 0
-    for i in range(256):
-        j = (j + s[i] + key[i % len(key)]) & 0xFF
-        s[i], s[j] = s[j], s[i]
-    out = bytearray()
-    i = j = 0
-    for c in data:
-        i = (i + 1) & 0xFF
-        j = (j + s[i]) & 0xFF
-        s[i], s[j] = s[j], s[i]
-        out.append(c ^ s[(s[i] + s[j]) & 0xFF])
-    return bytes(out)
+    """RC4 (V1/V2 and /V2 crypt filters) — OpenSSL's, through the
+    `cryptography` package's legacy ("decrepit") algorithms. `ARC4()`
+    accepts only 40-, 56-, 64-, 80-, 128-, 160-, 192- and 256-bit keys,
+    but a /Length of 48-120 bits gives file and object keys of other
+    lengths (6, 9 and 11-15 bytes); OpenSSL's RC4 takes any non-empty
+    key, so the algorithm object is made without that size check. An
+    empty key (a /Length under 8) would crash OpenSSL, so it raises
+    first, with the text quarantine rows have always carried for it
+    (the error a Python key schedule's `i % len(key)` raises)."""
+    from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+    from cryptography.hazmat.primitives.ciphers import Cipher
+
+    if not key:
+        raise ZeroDivisionError("integer modulo by zero")
+    alg = ARC4.__new__(ARC4)
+    alg.key = key
+    enc = Cipher(alg, None).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
 def _pdf_string(dict_part: bytes, key: bytes) -> bytes | None:
@@ -1412,17 +1418,29 @@ def _std_key(user_pw: bytes, o: bytes, p: int, id0: bytes,
     return digest[:key_len]
 
 
-def _check_user_password(key: bytes, u: bytes, id0: bytes, r: int) -> bool:
-    """Algorithms 3.4/3.5: recompute U and compare."""
+def _rc4_rounds(key: bytes, data: bytes) -> bytes:
+    """The R3+ RC4 chain of Algorithms 3.3 and 3.5: RC4 under key,
+    then 19 more passes under key with each byte XORed with the pass
+    number."""
+    for i in range(20):
+        data = _rc4(bytes(b ^ i for b in key), data)
+    return data
+
+
+def _user_password_entry(key: bytes, id0: bytes, r: int) -> bytes:
+    """Algorithms 3.4/3.5: the significant bytes of /U for file key
+    `key` — all 32 at R2, the first 16 from R3 on."""
     import hashlib
 
     if r == 2:
-        return _rc4(key, _PDF_PAD) == u[:32]
-    x = hashlib.md5(_PDF_PAD + id0).digest()
-    t = _rc4(key, x)
-    for i in range(1, 20):
-        t = _rc4(bytes(b ^ i for b in key), t)
-    return t == u[:16]
+        return _rc4(key, _PDF_PAD)
+    return _rc4_rounds(key, hashlib.md5(_PDF_PAD + id0).digest())
+
+
+def _check_user_password(key: bytes, u: bytes, id0: bytes, r: int) -> bool:
+    """Algorithms 3.4/3.5: recompute U and compare."""
+    want = _user_password_entry(key, id0, r)
+    return want == u[:len(want)]
 
 
 def _object_key(key: bytes, num: int, gen: int,
@@ -1503,8 +1521,7 @@ def _security_handler(data: bytes, objs: list[tuple[int, int, bytes]],
     ValueError. V≤4 validates the password by recomputing /U
     (Algorithms 3.4/3.5). V5 unwraps the file key from /UE with the
     key-salt hash and proves it via the /Perms single-block check (ISO
-    32000-2 7.6.4.4.12 — one Algorithm 2.B evaluation instead of two,
-    which matters because R6's hash costs ~0.2s in pure Python),
+    32000-2 7.6.4.4.12 — one Algorithm 2.B evaluation instead of two),
     falling back to the /U validation hash when /Perms is absent."""
     from .aescipher import cbc_decrypt, cbc_decrypt_nopad, ecb_decrypt_block
 
@@ -1591,7 +1608,6 @@ def _security_handler(data: bytes, objs: list[tuple[int, int, bytes]],
     return decrypt, enc_num, encrypt_metadata, cfm != b"V2"
 
 
-@functools.lru_cache(maxsize=256)
 def _hash_2b(pw: bytes, salt: bytes, udata: bytes, r: int) -> bytes:
     """PDF 2.0 Algorithm 2.B password hash. R5 (the deprecated Adobe
     extension) is a single SHA-256; R6 iterates SHA-256/384/512 through

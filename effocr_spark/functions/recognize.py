@@ -179,8 +179,13 @@ def embed_crops(crops: list[np.ndarray | None],
                else synthmodel.EMBED_DIM)
         return np.zeros((0, dim), dtype=np.float32)
     feats = _features_batched(crops)
+    n = feats.shape[0]
+    if n == 1:
+        # a one-row GEMM takes a BLAS kernel that rounds differently;
+        # project two copies so a lone crop matches its row in a batch
+        feats = np.concatenate([feats, feats])
     emb = (feats @ projection if projection is not None
-           else synthmodel.project_features(feats))
+           else synthmodel.project_features(feats))[:n]
     if not normalize:
         return emb.astype(np.float32)
     norms = np.linalg.norm(emb, axis=1, keepdims=True)

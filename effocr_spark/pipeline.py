@@ -14,8 +14,8 @@ lineage runs all call it.
 
 Scale notes (the 100 TB design point):
  - the only repartition is the salted one in front of the stage: page
-   cost varies ~100x across hosts (image-heavy hosts) and a born-digital
-   document ~400x (R6-encrypted vs plain PDF), and AQE balances bytes,
+   cost varies ~100x across hosts (image-heavy hosts) and a PDF from
+   ~0.5 ms (text layer) to tens of ms (JPX scan), and AQE balances bytes,
    not Python-UDF compute, so we spread rows by xxhash64(url, salt)
    ourselves (SURVEY.md §4 custom item 1)
  - the sniffs are JVM expressions; the html column is never carried

@@ -256,8 +256,8 @@ def project_features(feats: np.ndarray) -> np.ndarray:
     one-row product goes to a different BLAS kernel, which rounds
     differently (3,000 random rows projected one per call differ from
     one 3,000-row call in 173,529 of 192,000 floats; 2- to 1024-row
-    calls match it). embed_crops projects each encoder sub-batch in one
-    call, so a one-crop sub-batch takes that path."""
+    calls match it). embed_crops therefore projects a one-crop batch as
+    a two-row product."""
     return feats @ _PROJ
 
 

@@ -2,9 +2,9 @@
 
 The fixtures are deterministic bytes (every writer in synth/pdfgen is
 seeded), but generating them is not free — the AES-256/R6 documents
-cost several Algorithm 2.B password hashes each (~0.2s apiece in pure
-Python), which made q_extract_pdf the most expensive query in the
-driver's correctness gate purely on ENCODER cost. So, like
+cost several Algorithm 2.B password hashes each, which made
+q_extract_pdf the most expensive query in the driver's correctness
+gate purely on ENCODER cost. So, like
 data/tiny_font.ttf and the goldens, the generated bytes live in git
 (data/pdf_fixtures/*.pdf) and the query READS them;
 tests/test_pdf_fixture_files.py asserts regeneration byte-matches the

@@ -165,6 +165,80 @@ def make_pdf(pages: list[list[str]], compress: bool = True,
     return bytes(out)
 
 
+def _standard_security(r: int, owner_pw: bytes, user_pw: bytes,
+                       permissions: int, id0: bytes, seed: bytes):
+    """The standard security handler for revision r, writer side →
+    (/Encrypt dictionary, encrypt(raw, num, gen, iv) for one stream
+    body or string of object num/gen).
+
+    r = 2/3/4: /O from the owner password (Algorithm 3.3), the file key
+    from the user password, /O, /P and id0 (3.2), /U (3.4/3.5); each
+    object encrypts under its own key (3.1): RC4 for r = 2/3, AES-128
+    CBC for r = 4. r = 6 (PDF 2.0 /AESV3): the 32-byte file key and
+    the four salts come from seed; /U /UE /O /OE /Perms per Algorithm
+    2.B, and every object encrypts under the file key with AES-256
+    CBC. AES output is iv + ciphertext (PKCS#7); RC4 ignores iv."""
+    import hashlib
+
+    from ..functions.aescipher import cbc_encrypt, cbc_encrypt_nopad
+    from ..functions.pdftext import (_PDF_PAD, _hash_2b, _object_key,
+                                     _rc4, _rc4_rounds, _std_key,
+                                     _user_password_entry)
+
+    if r == 6:
+        vsalt, ksalt, ovsalt, oksalt = (seed[i:i + 8]
+                                        for i in range(0, 32, 8))
+        key = hashlib.sha256(seed + b"filekey").digest()
+        u_val = _hash_2b(user_pw, vsalt, b"", 6) + vsalt + ksalt
+        ue_val = cbc_encrypt_nopad(_hash_2b(user_pw, ksalt, b"", 6),
+                                   bytes(16), key)
+        o_val = _hash_2b(owner_pw, ovsalt, u_val, 6) + ovsalt + oksalt
+        oe_val = cbc_encrypt_nopad(_hash_2b(owner_pw, oksalt, u_val, 6),
+                                   bytes(16), key)
+        perms_val = cbc_encrypt_nopad(
+            key, bytes(16), (permissions & 0xFFFFFFFF).to_bytes(4, "little")
+            + b"\xff" * 4 + b"Tadb" + seed[:4])
+        enc_dict = (
+            f"<< /Filter /Standard /V 5 /R 6 /Length 256 "
+            f"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> "
+            f"/StmF /StdCF /StrF /StdCF /P {permissions} "
+            f"/U <{u_val.hex()}> /UE <{ue_val.hex()}> "
+            f"/O <{o_val.hex()}> /OE <{oe_val.hex()}> "
+            f"/Perms <{perms_val.hex()}> >>").encode()
+    else:
+        key_len = 5 if r == 2 else 16
+        padded_user = (user_pw + _PDF_PAD)[:32]
+        d = hashlib.md5((owner_pw + _PDF_PAD)[:32]).digest()
+        if r == 2:
+            o_val = _rc4(d[:5], padded_user)
+        else:
+            for _ in range(50):
+                d = hashlib.md5(d).digest()
+            o_val = _rc4_rounds(d[:key_len], padded_user)
+        key = _std_key(user_pw, o_val, permissions, id0, r, key_len)
+        # 32-byte entry; from R3 only the first 16 bytes are significant
+        u_val = _user_password_entry(key, id0, r).ljust(32, b"\x00")
+        if r == 4:
+            crypt = ("/V 4 /R 4 /Length 128 "
+                     "/CF << /StdCF << /CFM /AESV2 /Length 16 >> >> "
+                     "/StmF /StdCF /StrF /StdCF ")
+        else:
+            crypt = (f"/V {1 if r == 2 else 2} /R {r} "
+                     f"/Length {key_len * 8} ")
+        enc_dict = (f"<< /Filter /Standard {crypt}/P {permissions} "
+                    f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>").encode()
+
+    def encrypt(raw: bytes, num: int, gen: int, iv: bytes) -> bytes:
+        if r == 6:
+            return iv + cbc_encrypt(key, iv, raw)
+        if r == 4:
+            return iv + cbc_encrypt(_object_key(key, num, gen, aes=True),
+                                    iv, raw)
+        return _rc4(_object_key(key, num, gen), raw)
+
+    return enc_dict, encrypt
+
+
 def make_encrypted_pdf(pages: list[list[str]], r: int = 3,
                        owner_pw: bytes = b"owner-secret",
                        permissions: int = -44,
@@ -177,37 +251,9 @@ def make_encrypted_pdf(pages: list[list[str]], r: int = 3,
     per-object key, exactly the layering the spec prescribes."""
     import hashlib
 
-    from ..functions.aescipher import cbc_encrypt
-    from ..functions.pdftext import (_PDF_PAD, _object_key, _rc4,
-                                     _std_key)
-
-    key_len = 5 if r == 2 else 16
     id0 = hashlib.md5(repr(pages).encode()).digest()
-
-    padded_owner = (owner_pw + _PDF_PAD)[:32]
-    padded_user = (user_pw + _PDF_PAD)[:32]
-    if r == 2:
-        o_key = hashlib.md5(padded_owner).digest()[:5]
-        o_val = _rc4(o_key, padded_user)
-    else:
-        d = hashlib.md5(padded_owner).digest()
-        for _ in range(50):
-            d = hashlib.md5(d).digest()
-        o_key = d[:key_len]
-        t = _rc4(o_key, padded_user)
-        for i in range(1, 20):
-            t = _rc4(bytes(b ^ i for b in o_key), t)
-        o_val = t
-
-    key = _std_key(user_pw, o_val, permissions, id0, r, key_len)
-    if r == 2:
-        u_val = _rc4(key, _PDF_PAD)
-    else:
-        x = hashlib.md5(_PDF_PAD + id0).digest()
-        t = _rc4(key, x)
-        for i in range(1, 20):
-            t = _rc4(bytes(b ^ i for b in key), t)
-        u_val = t + b"\x00" * 16  # 32-byte entry; first 16 significant
+    enc_dict, encrypt = _standard_security(r, owner_pw, user_pw,
+                                           permissions, id0, b"")
 
     objs: list[bytes] = []
     n_pages = len(pages)
@@ -218,13 +264,9 @@ def make_encrypted_pdf(pages: list[list[str]], r: int = 3,
     font_num = 3 + 2 * n_pages
     enc_num = font_num + 1
     for i, lines in enumerate(pages):
-        content = zlib.compress(_content_stream(lines))
-        if r == 4:  # AES-128-CBC; deterministic IV for fixture stability
-            iv = hashlib.md5(b"iv%d" % i).digest()
-            content = iv + cbc_encrypt(
-                _object_key(key, 4 + 2 * i, 0, aes=True), iv, content)
-        else:
-            content = _rc4(_object_key(key, 4 + 2 * i, 0), content)
+        # deterministic IV (AES only) for fixture stability
+        content = encrypt(zlib.compress(_content_stream(lines)),
+                          4 + 2 * i, 0, hashlib.md5(b"iv%d" % i).digest())
         objs.append(
             f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             f"/Contents {4 + 2 * i} 0 R /Resources << /Font << /F1 "
@@ -232,17 +274,7 @@ def make_encrypted_pdf(pages: list[list[str]], r: int = 3,
         objs.append(f"<< /Length {len(content)} /Filter /FlateDecode >>"
                     f"\nstream\n".encode() + content + b"\nendstream")
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    if r == 4:
-        objs.append(
-            f"<< /Filter /Standard /V 4 /R 4 /Length {key_len * 8} "
-            f"/CF << /StdCF << /CFM /AESV2 /Length 16 >> >> "
-            f"/StmF /StdCF /StrF /StdCF /P {permissions} "
-            f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>".encode())
-    else:
-        objs.append(
-            f"<< /Filter /Standard /V {1 if r == 2 else 2} /R {r} "
-            f"/Length {key_len * 8} /P {permissions} "
-            f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>".encode())
+    objs.append(enc_dict)
 
     out = bytearray(b"%PDF-1.4\n")
     offsets = [0]
@@ -628,28 +660,11 @@ def make_aes256_pdf(pages: list[list[str]],
     stream the security handler leaves unencrypted."""
     import hashlib
 
-    from ..functions.aescipher import (cbc_encrypt, cbc_encrypt_nopad)
-    from ..functions.pdftext import _hash_2b
-
     # deterministic "random" material for fixture stability
     seed = hashlib.sha256(repr((pages, user_pw, xref_stream))
                           .encode()).digest()
-    vsalt, ksalt = seed[:8], seed[8:16]
-    file_key = hashlib.sha256(seed + b"filekey").digest()  # 32 bytes
-
-    u_hash = _hash_2b(user_pw, vsalt, b"", 6)
-    u_val = u_hash + vsalt + ksalt  # 48 bytes
-    inter = _hash_2b(user_pw, ksalt, b"", 6)
-    ue_val = cbc_encrypt_nopad(inter, b"\x00" * 16, file_key)
-
-    ovsalt, oksalt = seed[16:24], seed[24:32]
-    o_hash = _hash_2b(owner_pw, ovsalt, u_val, 6)
-    o_val = o_hash + ovsalt + oksalt
-    oe_val = cbc_encrypt_nopad(_hash_2b(owner_pw, oksalt, u_val, 6),
-                               b"\x00" * 16, file_key)
-    perms_blk = (permissions & 0xFFFFFFFF).to_bytes(4, "little") \
-        + b"\xff\xff\xff\xff" + b"Tadb" + seed[:4]
-    perms_val = cbc_encrypt_nopad(file_key, b"\x00" * 16, perms_blk)
+    enc_dict, encrypt = _standard_security(6, owner_pw, user_pw,
+                                           permissions, b"", seed)
 
     objs: list[bytes] = []
     n_pages = len(pages)
@@ -660,9 +675,9 @@ def make_aes256_pdf(pages: list[list[str]],
     font_num = 3 + 2 * n_pages
     enc_num = font_num + 1
     for i, lines in enumerate(pages):
-        content = zlib.compress(_content_stream(lines))
-        iv = hashlib.md5(b"aes256iv%d" % i).digest()
-        content = iv + cbc_encrypt(file_key, iv, content)
+        content = encrypt(zlib.compress(_content_stream(lines)),
+                          4 + 2 * i, 0,
+                          hashlib.md5(b"aes256iv%d" % i).digest())
         objs.append(
             f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             f"/Contents {4 + 2 * i} 0 R /Resources << /Font << /F1 "
@@ -670,13 +685,7 @@ def make_aes256_pdf(pages: list[list[str]],
         objs.append(f"<< /Length {len(content)} /Filter /FlateDecode >>"
                     f"\nstream\n".encode() + content + b"\nendstream")
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    objs.append(
-        f"<< /Filter /Standard /V 5 /R 6 /Length 256 "
-        f"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> "
-        f"/StmF /StdCF /StrF /StdCF /P {permissions} "
-        f"/U <{u_val.hex()}> /UE <{ue_val.hex()}> "
-        f"/O <{o_val.hex()}> /OE <{oe_val.hex()}> "
-        f"/Perms <{perms_val.hex()}> >>".encode())
+    objs.append(enc_dict)
 
     out = bytearray(b"%PDF-2.0\n")
     offsets = [0]
@@ -831,81 +840,12 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
     import hashlib
     import re as _re
 
-    from ..functions.aescipher import cbc_encrypt, cbc_encrypt_nopad
-    from ..functions.pdftext import (_OBJ_RE, _PDF_PAD, _STREAM_RE,
-                                     _hash_2b, _object_key, _rc4,
-                                     _std_key)
+    from ..functions.pdftext import _OBJ_RE, _STREAM_RE
 
     id0 = hashlib.md5(pdf).digest()
-    if r == 6:
-        seed = hashlib.sha256(pdf).digest()
-        vsalt, ksalt = seed[:8], seed[8:16]
-        file_key = hashlib.sha256(seed + b"filekey").digest()
-        u_val = _hash_2b(b"", vsalt, b"", 6) + vsalt + ksalt
-        ue_val = cbc_encrypt_nopad(_hash_2b(b"", ksalt, b"", 6),
-                                   b"\x00" * 16, file_key)
-        ovs, oks = seed[16:24], seed[24:32]
-        o_val = _hash_2b(owner_pw, ovs, u_val, 6) + ovs + oks
-        oe_val = cbc_encrypt_nopad(_hash_2b(owner_pw, oks, u_val, 6),
-                                   b"\x00" * 16, file_key)
-        perms_blk = ((permissions & 0xFFFFFFFF).to_bytes(4, "little")
-                     + b"\xff" * 4 + b"Tadb" + seed[:4])
-        perms_hex = cbc_encrypt_nopad(file_key, bytes(16),
-                                      perms_blk).hex()
-        enc_dict = (
-            f"<< /Filter /Standard /V 5 /R 6 /Length 256 "
-            f"/CF << /StdCF << /CFM /AESV3 /Length 32 >> >> "
-            f"/StmF /StdCF /StrF /StdCF /P {permissions} "
-            f"/U <{u_val.hex()}> /UE <{ue_val.hex()}> "
-            f"/O <{o_val.hex()}> /OE <{oe_val.hex()}> "
-            f"/Perms <{perms_hex}> >>"
-        ).encode()
-    else:
-        key_len = 5 if r == 2 else 16
-        padded_user = _PDF_PAD
-        if r == 2:
-            o_key = hashlib.md5((owner_pw + _PDF_PAD)[:32]).digest()[:5]
-            o_val = _rc4(o_key, padded_user)
-        else:
-            d = hashlib.md5((owner_pw + _PDF_PAD)[:32]).digest()
-            for _ in range(50):
-                d = hashlib.md5(d).digest()
-            o_key = d[:key_len]
-            t = _rc4(o_key, padded_user)
-            for i in range(1, 20):
-                t = _rc4(bytes(b ^ i for b in o_key), t)
-            o_val = t
-        key = _std_key(b"", o_val, permissions, id0, r, key_len)
-        if r == 2:
-            u_val = _rc4(key, _PDF_PAD)
-        else:
-            x = hashlib.md5(_PDF_PAD + id0).digest()
-            t = _rc4(key, x)
-            for i in range(1, 20):
-                t = _rc4(bytes(b ^ i for b in key), t)
-            u_val = t + b"\x00" * 16
-        if r == 4:
-            enc_dict = (
-                f"<< /Filter /Standard /V 4 /R 4 /Length {key_len * 8} "
-                f"/CF << /StdCF << /CFM /AESV2 /Length 16 >> >> "
-                f"/StmF /StdCF /StrF /StdCF /P {permissions} "
-                f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>").encode()
-        else:
-            enc_dict = (
-                f"<< /Filter /Standard /V {1 if r == 2 else 2} /R {r} "
-                f"/Length {key_len * 8} /P {permissions} "
-                f"/O <{o_val.hex()}> /U <{u_val.hex()}> >>").encode()
-
+    enc_dict, encrypt = _standard_security(
+        r, owner_pw, b"", permissions, id0, hashlib.sha256(pdf).digest())
     header_end = pdf.find(b"\n") + 1
-    def enc_string(raw: bytes, num: int, gen: int) -> bytes:
-        if r == 6:
-            iv = hashlib.md5(b"siv%d%d" % (num, len(raw))).digest()
-            return iv + cbc_encrypt(file_key, iv, raw)
-        if r == 4:
-            iv = hashlib.md5(b"siv%d%d" % (num, len(raw))).digest()
-            return iv + cbc_encrypt(_object_key(key, num, gen, aes=True),
-                                    iv, raw)
-        return _rc4(_object_key(key, num, gen), raw)
 
     # literal OR hex string; `<<` / `>>` dict delimiters never match.
     # One pass, so the hex this emits is never encrypted a second time.
@@ -922,7 +862,8 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
         def repl(m):
             raw = (_unescape(m.group("lit")) if m.group("lit") is not None
                    else _hexstr_bytes(m.group("hex")))
-            return b"<" + enc_string(raw, num, gen).hex().encode() + b">"
+            iv = hashlib.md5(b"siv%d%d" % (num, len(raw))).digest()
+            return b"<" + encrypt(raw, num, gen, iv).hex().encode() + b">"
 
         return _STRING_RE.sub(repl, body)
 
@@ -935,16 +876,8 @@ def encrypt_pdf(pdf: bytes, r: int = 4,
         if sm is None:
             body = enc_strings_in(body, num, gen)
         if sm is not None:
-            sbody = sm.group(2)
-            if r == 6:
-                iv = hashlib.md5(b"iv%d" % num).digest()
-                enc = iv + cbc_encrypt(file_key, iv, sbody)
-            elif r == 4:
-                iv = hashlib.md5(b"iv%d" % num).digest()
-                enc = iv + cbc_encrypt(
-                    _object_key(key, num, gen, aes=True), iv, sbody)
-            else:
-                enc = _rc4(_object_key(key, num, gen), sbody)
+            enc = encrypt(sm.group(2), num, gen,
+                          hashlib.md5(b"iv%d" % num).digest())
             dict_part = _re.sub(
                 rb"/Length\s+\d+",
                 b"/Length " + str(len(enc)).encode(),

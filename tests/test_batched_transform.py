@@ -133,6 +133,29 @@ def test_real_shapes_fused_and_batched_bitwise():
         assert np.array_equal(_features_batched([c])[0], ref[i]), i
 
 
+@pytest.mark.parametrize("normalize", [True, False])
+@pytest.mark.parametrize("artifact", [False, True])
+def test_crop_embedded_alone_equals_its_row_in_a_batch(normalize, artifact):
+    """A one-row GEMM takes a different BLAS kernel that rounds
+    differently; a crop embedded alone (a one-crop encoder sub-batch)
+    must still equal its row in a multi-crop call, for the built-in
+    weights and for a projection artifact."""
+    from effocr_spark.functions.recognize import embed_crops
+    from effocr_spark.synth import model as synthmodel
+
+    proj = synthmodel._PROJ.copy() if artifact else None
+    crops = _real_shape_crops(np.random.RandomState(14))
+    rng = np.random.RandomState(15)
+    crops += [rng.randint(0, 256, size=(rng.randint(5, 30),
+                                        rng.randint(3, 30), 3),
+                          dtype=np.uint8) for _ in range(24)]
+    full = embed_crops(crops, normalize=normalize, projection=proj)
+    for i, c in enumerate(crops):
+        alone = embed_crops([c], normalize=normalize, projection=proj)
+        assert alone.shape == (1, full.shape[1])
+        assert np.array_equal(alone[0], full[i]), i
+
+
 @pytest.mark.parametrize("crop_size", [16, 32, 224])
 def test_bitwise_tests_in_subprocess_at_crop_size(crop_size):
     env = {**os.environ, "EFFOCR_CROP_SIZE": str(crop_size)}

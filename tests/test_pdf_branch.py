@@ -336,21 +336,21 @@ def test_scanned_pdf_ocr_through_pipeline(spark, protos_bc):
 
 
 def test_aes_known_answer_and_encrypted_pdf():
-    """FIPS-197 Appendix C known-answer vectors pin the AES primitive;
-    a V4 /AESV2 PDF with empty user password then decrypts end to
-    end."""
-    from effocr_spark.functions.aescipher import (_decrypt_block,
-                                                  _encrypt_block,
-                                                  _expand_key)
+    """FIPS-197 Appendix C known-answer vectors pin the AES primitive
+    (through the public CBC/ECB entry points: CBC over one block with a
+    zero IV is ECB); a V4 /AESV2 PDF with empty user password then
+    decrypts end to end."""
+    from effocr_spark.functions.aescipher import (cbc_encrypt_nopad,
+                                                  ecb_decrypt_block)
     from effocr_spark.synth.pdfgen import make_encrypted_pdf
 
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = _encrypt_block(pt, _expand_key(key))
+    ct = cbc_encrypt_nopad(key, bytes(16), pt)
     assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"  # C.1
-    assert _decrypt_block(ct, _expand_key(key)) == pt
+    assert ecb_decrypt_block(key, ct) == pt
     k256 = bytes(range(32))
-    assert _encrypt_block(pt, _expand_key(k256)).hex() == \
+    assert cbc_encrypt_nopad(k256, bytes(16), pt).hex() == \
         "8ea2b7ca516745bfeafc49904b496089"  # C.3
 
     blob = make_encrypted_pdf([["AES locked page", "second line"]], r=4)
@@ -400,43 +400,6 @@ def test_dom_pdf_branch_matches_direct_extractors(spark, protos_bc):
     assert combined["u://bad"][3] is False  # ok flag
     assert combined["u://bad"][4].startswith("pdf: ")
     assert combined["u://dom"][5] == "dom"
-
-
-def test_cbc128_unrolled_matches_generic_rounds():
-    """The source-generated unrolled AES-128 CBC loop must be
-    byte-identical to the generic per-round path on multi-block
-    streams (the Algorithm-2.B shape), and the 192/256 key sizes must
-    still route through the generic rounds."""
-    import random
-
-    from effocr_spark.functions.aescipher import (_cbc_encrypt_raw,
-                                                  _encrypt_words,
-                                                  _expand_key)
-    import struct as _struct
-
-    rng = random.Random(42)
-
-    def _generic_cbc(key, iv, data):
-        ks = _expand_key(key)
-        n = len(data) // 16
-        words = _struct.unpack(">%dI" % (4 * n), data)
-        p = list(_struct.unpack(">4I", iv))
-        out = []
-        for i in range(0, 4 * n, 4):
-            p = list(_encrypt_words(words[i] ^ p[0], words[i + 1] ^ p[1],
-                                    words[i + 2] ^ p[2],
-                                    words[i + 3] ^ p[3], ks))
-            out += p
-        return _struct.pack(">%dI" % len(out), *out)
-
-    for _ in range(5):
-        iv = bytes(rng.randrange(256) for _ in range(16))
-        data = bytes(rng.randrange(256)
-                     for _ in range(16 * rng.randrange(1, 40)))
-        for klen in (16, 24, 32):
-            key = bytes(rng.randrange(256) for _ in range(klen))
-            assert _cbc_encrypt_raw(key, iv, data) == \
-                _generic_cbc(key, iv, data)
 
 
 def test_aes256_malformed_v5_dict_quarantines():
